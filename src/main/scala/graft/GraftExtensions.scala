@@ -1,16 +1,14 @@
 package graft
 
-import graft.extract.{ExtractSpansExpr, HtmlStripExpr}
-import graft.synth.SynthSpansExpr
-import graft.textops.{FingerprintExpr, FormatBestEffortExpr, GramHashesExpr, JaccardExpr, NfcNormalizeExpr, RepetitionExpr, SimHashExpr}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SQL surface for the native graft expressions: registers each kernel as a
-  * SQL function so `spark.sql("SELECT extract_spans(spans, doc_id) ...")`
-  * works — the operators are usable from pure SQL (the reference's callers
-  * are HTTP+SQL, not Scala), and from any JDBC/thrift front end.
+/** SQL surface for the native kernels: registers every entry of
+  * [[Kernels.all]] as a SQL function under its name, so
+  * `spark.sql("SELECT extract_spans(spans, doc_id) ...")` works — the
+  * operators are usable from pure SQL (the reference's callers are
+  * HTTP+SQL, not Scala), and from any JDBC/thrift front end.
   *
   * Two registration paths:
   *  - config: `spark.sql.extensions=graft.GraftExtensions` (applied to
@@ -20,47 +18,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.functions.foreach { case (name, _, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.GraftExtensions", name), builder))
+    Kernels.all.foreach { k =>
+      ext.injectFunction((FunctionIdentifier(k.name),
+        new ExpressionInfo(classOf[KernelCall].getName, k.name), k.call))
     }
 }
 
 object GraftExtensions {
 
-  private def arity(n: Int, name: String, f: Seq[Expression] => Expression)
-      : Seq[Expression] => Expression = { children =>
-    require(children.length == n, s"$name expects $n arguments, got ${children.length}")
-    f(children)
-  }
-
-  /** (name, usage, builder) for every native expression. */
-  val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("extract_spans", "extract_spans(spans, doc_id) - main-content extraction kernel",
-      arity(2, "extract_spans", c => ExtractSpansExpr(c(0), c(1)))),
-    ("synth_spans", "synth_spans(doc_id, text) - deterministic span-table synthesis",
-      arity(2, "synth_spans", c => SynthSpansExpr(c(0), c(1)))),
-    ("html_strip", "html_strip(html) - boilerplate-stripped main-content spans",
-      arity(1, "html_strip", c => HtmlStripExpr(c(0)))),
-    ("simhash60", "simhash60(text) - 60-bit SimHash fingerprint",
-      arity(1, "simhash60", c => SimHashExpr(c(0)))),
-    ("fingerprint60", "fingerprint60(text) - min 5-gram winnowing fingerprint",
-      arity(1, "fingerprint60", c => FingerprintExpr(c(0)))),
-    ("gram_hashes60", "gram_hashes60(text) - all word-5-gram hashes (decontamination unit)",
-      arity(1, "gram_hashes60", c => GramHashesExpr(c(0)))),
-    ("repetition_fracs", "repetition_fracs(text) - [dup_2gram_frac, dup_3gram_frac]",
-      arity(1, "repetition_fracs", c => RepetitionExpr(c(0)))),
-    ("format_best_effort",
-      "format_best_effort(response, template, example) - L4 JSON extraction cascade",
-      arity(3, "format_best_effort", c => FormatBestEffortExpr(c(0), c(1), c(2)))),
-    ("jaccard", "jaccard(arr_a, arr_b) - exact Jaccard of distinct string arrays, rounded to 6",
-      arity(2, "jaccard", c => JaccardExpr(c(0), c(1)))),
-    ("nfc_normalize", "nfc_normalize(text) - Unicode NFC normalization (DuckDB-name-compatible)",
-      arity(1, "nfc_normalize", c => NfcNormalizeExpr(c(0)))))
-
-  /** Register all functions on an existing session's catalog. */
+  /** Register all kernels on an existing session's catalog. */
   def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.graftshim.FunctionShim.registerTemp(spark, name, builder)
+    Kernels.all.foreach { k =>
+      org.apache.spark.sql.graftshim.FunctionShim.registerTemp(spark, k.name, k.call)
     }
 }

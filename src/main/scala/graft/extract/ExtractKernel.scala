@@ -1,13 +1,6 @@
 package graft.extract
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -15,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
   * ([[Extractor]] documents the semantics; the two implementations are
   * equivalence-tested). This is the hot path: the pure-column-op version
   * evaluates a large interpreted higher-order-function tree per row
-  * (~29 docs/s/core measured at sf0.1); this expression does one Scala pass
+  * (~29 docs/s/core measured at sf0.1); this kernel does one Scala pass
   * per document (orders of magnitude faster) while keeping the same
   * Catalyst-visible shape — a projection, no shuffle, column pruning and
   * filter pushdown still apply to the scan.
@@ -122,45 +115,5 @@ object ExtractKernel {
 
   /** `extract_spans(spans, doc_id)` as a Column. */
   def extract_spans(spans: Column, docId: Column): Column =
-    ColumnShim.column(ExtractSpansExpr(
-      ColumnShim.expression(spans), ColumnShim.expression(docId)))
-}
-
-/** Catalyst expression wrapping [[ExtractKernel.extractDoc]].
-  * Input: `array<struct<kind,text,media_ref,offset>>`, `string`.
-  * Output: same struct array, extracted + re-offset.
-  */
-case class ExtractSpansExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("text", StringType, nullable = true),
-    StructField("media_ref", StringType, nullable = true),
-    StructField("offset", IntegerType, nullable = false))), containsNull = false)
-
-  override def nullSafeEval(spansAny: Any, docIdAny: Any): Any = {
-    val arr = spansAny.asInstanceOf[ArrayData]
-    val docId = docIdAny.asInstanceOf[UTF8String].toString
-    val in = new ArrayBuffer[ExtractKernel.S](arr.numElements())
-    var i = 0
-    while (i < arr.numElements()) {
-      val row = arr.getStruct(i, 4)
-      in += ((str(row, 0), str(row, 1), str(row, 2), row.getInt(3)))
-      i += 1
-    }
-    val out = ExtractKernel.extractDoc(docId, in.toSeq)
-    new GenericArrayData(out.map { case (k, t, m, o) =>
-      InternalRow(u(k), u(t), u(m), o)
-    }.toArray[Any])
-  }
-
-  private def str(r: InternalRow, i: Int): String =
-    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-  private def u(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ExtractSpansExpr = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "extract_spans"
+    graft.Kernels.ExtractSpans(spans, docId)
 }

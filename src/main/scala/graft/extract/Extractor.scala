@@ -159,7 +159,7 @@ object Extractor {
     size(filter(spans, s => !s.getField("kind").isin(graft.model.Schemas.knownKinds: _*)))
 
   /** `(doc_id, spans)` → `(doc_id, spans)` extracted — fast path via the
-    * native [[ExtractSpansExpr]] kernel (equivalence-tested against the
+    * native `extract_spans` kernel (equivalence-tested against the
     * column-op implementation below).
     */
   def extract(docs: DataFrame): DataFrame = extract(docs, Seq.empty)

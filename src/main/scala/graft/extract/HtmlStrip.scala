@@ -1,13 +1,6 @@
 package graft.extract
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -142,33 +135,9 @@ object HtmlStrip {
     sb.toString
   }
 
-  /** `html_strip(html)` as a native Catalyst expression (preferred over a
-    * Scala UDF: no encoder round-trip on the output array, composes inside
-    * higher-order-function lambdas). Interpreted eval (CodegenFallback) —
-    * DOM parsing is irreducibly procedural, the rest of the pipeline stays
-    * in codegen'd column ops.
+  /** `html_strip(html)` as a native kernel (preferred over a Scala UDF: no
+    * encoder round-trip on the output array, composes inside
+    * higher-order-function lambdas).
     */
-  def html_strip(c: Column): Column =
-    ColumnShim.column(HtmlStripExpr(ColumnShim.expression(c)))
-}
-
-case class HtmlStripExpr(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("text", StringType, nullable = true),
-    StructField("media_ref", StringType, nullable = true))), containsNull = false)
-
-  override def nullSafeEval(input: Any): Any = {
-    val spans = HtmlStrip.strip(input.asInstanceOf[UTF8String].toString)
-    new GenericArrayData(spans.map { case (k, t, m) =>
-      InternalRow(
-        UTF8String.fromString(k),
-        if (t == null) null else UTF8String.fromString(t),
-        if (m == null) null else UTF8String.fromString(m))
-    }.toArray[Any])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlStripExpr =
-    copy(child = newChild)
-  override def prettyName: String = "html_strip"
+  def html_strip(c: Column): Column = graft.Kernels.HtmlStrip(c)
 }

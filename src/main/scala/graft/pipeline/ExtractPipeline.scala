@@ -83,13 +83,14 @@ object ExtractPipeline {
 
   def bucketCol(numBuckets: Int) = bucketColOf(col("doc_id"), numBuckets)
 
-  /** Bucket of one LITERAL doc id, evaluated through the same expression
-    * as [[bucketCol]] (a 1-row local plan — no scan, no shuffle): used by
-    * the serving layer to turn a point lookup into a partition-pruning
-    * predicate.
+  /** Bucket of one LITERAL doc id: the same expression as [[bucketCol]],
+    * analyzed and evaluated on the driver (it is foldable, so no Spark
+    * job runs): used by the serving layer to turn a point lookup into a
+    * partition-pruning predicate.
     */
   def bucketOfId(spark: SparkSession, docId: String, numBuckets: Int): Int =
-    spark.range(1).select(bucketColOf(lit(docId), numBuckets)).head().getInt(0)
+    spark.range(1).select(bucketColOf(lit(docId), numBuckets))
+      .queryExecution.analyzed.expressions.head.eval().asInstanceOf[Int]
 
   /** Buckets already checkpointed 'done' for this stage (any run). A
     * bucket checkpointed 'empty' (claimed, no data in that run's input) is

@@ -2,13 +2,6 @@ package graft.pipeline
 
 import graft.extract.ExtractKernel
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -58,47 +51,5 @@ object SpanChunker {
 
   /** `chunk_spans(spans, target)` as a Column. */
   def chunk_spans(spans: Column, target: Column): Column =
-    ColumnShim.column(ChunkSpansExpr(
-      ColumnShim.expression(spans), ColumnShim.expression(target)))
-}
-
-/** Catalyst expression: `array<span-struct>`, `int` → `array<array<span-struct>>`. */
-case class ChunkSpansExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-
-  private val spanStruct = StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("text", StringType, nullable = true),
-    StructField("media_ref", StringType, nullable = true),
-    StructField("offset", IntegerType, nullable = false)))
-
-  override def dataType: DataType =
-    ArrayType(ArrayType(spanStruct, containsNull = false), containsNull = false)
-
-  override def nullSafeEval(spansAny: Any, targetAny: Any): Any = {
-    val arr = spansAny.asInstanceOf[ArrayData]
-    val target = targetAny.asInstanceOf[Int]
-    val in = new ArrayBuffer[ExtractKernel.S](arr.numElements())
-    var i = 0
-    while (i < arr.numElements()) {
-      val row = arr.getStruct(i, 4)
-      in += ((str(row, 0), str(row, 1), str(row, 2), row.getInt(3)))
-      i += 1
-    }
-    val chunks = SpanChunker.chunk(in.toSeq, target)
-    new GenericArrayData(chunks.map { c =>
-      new GenericArrayData(c.map { case (k, t, m, o) =>
-        InternalRow(u(k), u(t), u(m), o)
-      }.toArray[Any])
-    }.toArray[Any])
-  }
-
-  private def str(r: InternalRow, i: Int): String =
-    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-  private def u(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ChunkSpansExpr = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "chunk_spans"
+    graft.Kernels.ChunkSpans(spans, target)
 }

@@ -1,12 +1,7 @@
 package graft.serve
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Single-pass counters over an extracted span array (round-6 twin of
   * [[graft.textops.WordStats]] for the serving surface): the status
@@ -32,37 +27,8 @@ object SpanStats {
     aggregate(spans, lit(0L),
       (acc, s) => acc + coalesce(length(s.getField("text")), lit(0))))
 
-  def stats(spans: Column): Column =
-    ColumnShim.column(SpanStatsExpr(ColumnShim.expression(spans)))
-}
-
-/** Catalyst expression producing [n_spans, n_images, n_errors,
-  * text_chars] from an `array<struct<kind,text,media_ref,offset>>`
-  * column. `text_chars` counts CODEPOINTS (Spark's `length`), summed
-  * with null texts contributing 0.
-  */
-case class SpanStatsExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var images = 0L; var errors = 0L; var chars = 0L
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 4)
-      val kind = row.getUTF8String(0)
-      if (kind != null) {
-        val k = kind.toString
-        if (k == "image") images += 1
-        else if (k == "error") errors += 1
-      }
-      if (!row.isNullAt(1)) chars += row.getUTF8String(1).numChars()
-      i += 1
-    }
-    new GenericArrayData(Array[Any](n.toLong, images, errors, chars))
-  }
-  override protected def withNewChildInternal(newChild: Expression): SpanStatsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "span_stats"
+  /** [n_spans, n_images, n_errors, text_chars] of a span array;
+    * `text_chars` counts codepoints (Spark's `length`), null texts add 0.
+    */
+  def stats(spans: Column): Column = graft.Kernels.SpanStats(spans)
 }

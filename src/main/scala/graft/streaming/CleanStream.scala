@@ -2,16 +2,15 @@ package graft.streaming
 
 import graft.textops.{PortableHash, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming CLEAN tail — the continuous deployment of the batch
   * text-repair capstone ([[graft.textops.TextAnalysis.cleanPipeline]]).
   *
-  * The per-row stages stream as-is, built from the SAME shared column
-  * definitions as the batch capstone (no logic forks): unicode repair
-  * (`fixUnicodeCol` over the planted artifacts), C4 line structure +
-  * kept-line rules, page verdict. The one GLOBAL statistic — the
+  * The per-row stages stream as-is, through the SAME definition as the
+  * batch capstone ([[graft.textops.TextAnalysis.keptPages]], no logic
+  * forks): unicode repair over the planted artifacts, then the `c4_doc`
+  * kernel's kept lines and page verdict. The one GLOBAL statistic — the
   * duplicate-line keeper table — arrives as an OFFLINE-PLANNED static
   * input ([[graft.textops.TextAnalysis.cleanPlanDupLines]]): the lambda
   * split [[CurateStream]] uses for its benchmark grams and mix rates.
@@ -52,18 +51,8 @@ object CleanStream {
     // null text/doc_id rows are poison pills for the typed encode and
     // contribute nothing downstream — drop at the source (the batch
     // capstone never sees them either; CurateStream rationale)
-    val clean0 = docs.where(docs("doc_id").isNotNull && docs("text").isNotNull)
-      .select(docs("doc_id"),
-        TextAnalysis.fixUnicodeCol(
-          TextAnalysis.plantUnicode(docs("doc_id"), docs("text"))).as("clean"))
-    val s1 = TextAnalysis.c4PlantedLines(
-      clean0.select(col("doc_id"), TextAnalysis.nonEmptyWords(col("clean")).as("ws")))
-    val s2 = s1.select(col("doc_id"),
-      TextAnalysis.c4KeptCol(col("lines")).as("paras"),
-      array_join(col("lines"), "\n").as("page_text"))
-    val pages = s2
-      .where(TextAnalysis.c4PageKeepCol(col("paras"), col("page_text")))
-      .select(col("doc_id"), col("paras"))
+    val pages = TextAnalysis.keptPages(
+      docs.where(docs("doc_id").isNotNull && docs("text").isNotNull))
     pages.as[PageDoc].mapPartitions { it =>
       val phs = bcPh.value // sorted; O(log B) membership, zero per-row alloc
       val keepers = bcKeep.value

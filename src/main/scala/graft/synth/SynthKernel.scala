@@ -1,13 +1,6 @@
 package graft.synth
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -134,35 +127,5 @@ object SynthKernel {
 
   /** `synth_spans(doc_id, text)` as a Column. */
   def synth_spans(docId: Column, text: Column): Column =
-    ColumnShim.column(SynthSpansExpr(
-      ColumnShim.expression(docId), ColumnShim.expression(text)))
-}
-
-/** Catalyst expression wrapping [[SynthKernel.synthDoc]].
-  * Input: `bigint` doc id, `string` text.
-  * Output: `array<struct<kind,text,media_ref,offset>>`.
-  */
-case class SynthSpansExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("text", StringType, nullable = true),
-    StructField("media_ref", StringType, nullable = true),
-    StructField("offset", IntegerType, nullable = false))), containsNull = false)
-
-  override def nullSafeEval(didAny: Any, textAny: Any): Any = {
-    val out = SynthKernel.synthDoc(didAny.asInstanceOf[Long],
-      textAny.asInstanceOf[UTF8String].toString)
-    new GenericArrayData(out.map { case (k, t, m, o) =>
-      InternalRow(u(k), u(t), u(m), o)
-    }.toArray[Any])
-  }
-
-  private def u(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): SynthSpansExpr = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "synth_spans"
+    graft.Kernels.SynthSpans(docId, text)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * deterministic hash-threshold subset of the corpus (the sandbox has no
   * external benchmark table; swapping in a real one changes ONE input,
   * not the dataflow) and the overlap unit is the same 5-gram hash family
-  * as [[TextAnalysis.fingerprint60]] (native [[GramHashesExpr]] kernel,
+  * as [[TextAnalysis.fingerprint60]] (native `gram_hashes60` kernel,
   * portable hash, identical in DuckDB).
   *
   * Scale shape: the benchmark gram set is SMALL by construction

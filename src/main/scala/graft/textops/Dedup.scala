@@ -63,7 +63,7 @@ object Dedup {
   }
 
   /** Column-op reference formula for the Jaccard verify stage (what the
-    * DuckDB oracle mirrors; parity with the native [[JaccardExpr]] is
+    * DuckDB oracle mirrors; parity with the native `jaccard` kernel is
     * pinned in PortableHashSpec). Not used in the execution path: Catalyst
     * pushes the threshold filter into the bucket join's condition and
     * re-inlines the whole tree — round-2 plans showed `array_intersect`
@@ -74,7 +74,7 @@ object Dedup {
     round(inter.cast("double") / (size(a) + size(b) - inter).cast("double"), 6)
   }
 
-  /** Score candidate pairs with the native single-pass [[JaccardExpr]] and
+  /** Score candidate pairs with the native single-pass `jaccard` kernel and
     * MATERIALIZE the scored table (id_a, id_b, jaccard) — three narrow
     * columns — so the downstream threshold filter reads scored rows
     * instead of being pushed into the join condition (which would

@@ -1,12 +1,7 @@
 package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** IVF (inverted-file) approximate nearest neighbor — the third point of
   * the ANN design space next to [[Similarity.bruteForceTopK]] (exact) and
@@ -14,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   *
   *  - a COARSE QUANTIZER of [[NumLists]] centroids partitions the vector
   *    space; every data vector is assigned to its nearest centroid's
-  *    inverted list in one pass ([[IvfAssignExpr]], native kernel);
+  *    inverted list in one pass (`ivf_assign`, native kernel);
   *  - a query computes its [[NProbe]] nearest lists DRIVER-side (the
   *    centroid table is tiny and list selection needs exactly one vector —
   *    a bounded 1-row collect, like the pipeline's bucket lists) and scans
@@ -135,7 +130,7 @@ object Ivf {
   def nearestLists(v: Array[Double], n: Int): Seq[Int] =
     nearestLists(Centroids, v, n)
 
-  /** Nearest-centroid id — Scala twin of [[IvfAssignExpr]]. */
+  /** Nearest-centroid id — Scala twin of the `ivf_assign` kernel. */
   def assignScala(v: Array[Double]): Int = nearestLists(v, 1).head
 
   /** Column-op reference implementation of the assignment (what the
@@ -153,8 +148,12 @@ object Ivf {
 
   def ivfAssign(e: Column): Column = ivfAssign(e, Centroids)
 
+  /** Nearest-centroid list id of `e` against the literal codebook `cb`
+    * (seed or trained), in one pass (the columnar twin runs NumLists
+    * interpreted folds per row).
+    */
   def ivfAssign(e: Column, cb: IndexedSeq[IndexedSeq[Double]]): Column =
-    ColumnShim.column(IvfAssignExpr(ColumnShim.expression(e), cb))
+    graft.Kernels.IvfAssign(e, typedlit(cb))
 
   private def dot(a: Column, b: Column): Column = Similarity.dot(a, b)
 
@@ -309,20 +308,4 @@ object Ivf {
         col("n_surv"), col("keep"))
       .orderBy("vec_id")
   }
-}
-
-/** Catalyst expression wrapping the nearest-centroid assignment against a
-  * literal codebook (seed or trained): list id of a double vector in one
-  * pass (the columnar twin runs NumLists interpreted folds per row).
-  */
-case class IvfAssignExpr(child: Expression,
-    centroids: IndexedSeq[IndexedSeq[Double]]) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    Ivf.nearestLists(centroids,
-      input.asInstanceOf[ArrayData].toDoubleArray(), 1).head
-  override protected def withNewChildInternal(newChild: Expression): IvfAssignExpr =
-    copy(child = newChild)
-  override def prettyName: String = "ivf_assign"
 }

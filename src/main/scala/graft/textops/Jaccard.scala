@@ -1,11 +1,6 @@
 package graft.textops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact Jaccard similarity of two DISTINCT string arrays in one pass —
@@ -48,25 +43,5 @@ object Jaccard {
     else BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  def jaccard(a: Column, b: Column): Column =
-    ColumnShim.column(JaccardExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
-}
-
-case class JaccardExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    def strings(x: Any): Array[UTF8String] = {
-      val arr = x.asInstanceOf[ArrayData]
-      val out = new Array[UTF8String](arr.numElements())
-      var i = 0
-      while (i < out.length) { out(i) = arr.getUTF8String(i); i += 1 }
-      out
-    }
-    Jaccard.jaccardScala(strings(a), strings(b))
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardExpr =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "jaccard"
+  def jaccard(a: Column, b: Column): Column = graft.Kernels.Jaccard(a, b)
 }

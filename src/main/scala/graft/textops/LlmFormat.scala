@@ -2,11 +2,6 @@ package graft.textops
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
@@ -19,7 +14,7 @@ import scala.util.matching.Regex
   *    `coalesce(regexp_extract...)` chain, ordered-pattern semantics
   *    preserved by coalesce order;
   *  - L4 best-effort JSON extraction cascade (reference utils.py:321-437)
-  *    — a native Catalyst expression around a pure Scala cascade (methods:
+  *    — a native kernel around a pure Scala cascade (methods:
   *    whole-string parse → first valid bracketed substring → template-key
   *    regex assembly → example-key assembly → cleaned raw).
   * Template wording is our own; the reference's *structure* (context +
@@ -79,7 +74,7 @@ object LlmFormat {
     regexp_replace(coalesce(tries :+ lit(null).cast("string"): _*), "[,;.]+$", "")
   }
 
-  // ---- L4 cascade (plain Scala; wrapped as a Catalyst expression) ----
+  // ---- L4 cascade (plain Scala; the format_best_effort kernel) ----
 
   private val mapper = new ObjectMapper()
 
@@ -92,7 +87,7 @@ object LlmFormat {
   private val objRe: Regex = new Regex("(?s)\\{.*?\\}")
   private val arrRe: Regex = new Regex("(?s)\\[.*?\\]")
 
-  // the cascade runs per ROW inside FormatBestEffortExpr — compile each
+  // the cascade runs per ROW inside the format_best_effort kernel — compile each
   // key's battery once (keys are template fields, a tiny set) and the
   // trailing-punctuation strip once
   private val batteryCache =
@@ -258,29 +253,5 @@ object LlmFormat {
 
   /** `format_best_effort(response, template, example)` as a Column. */
   def format_best_effort(response: Column, template: Column, example: Column): Column =
-    ColumnShim.column(FormatBestEffortExpr(
-      ColumnShim.expression(response),
-      ColumnShim.expression(template),
-      ColumnShim.expression(example)))
-}
-
-case class FormatBestEffortExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    def str(e: Expression): String = e.eval(input) match {
-      case null => null
-      case u: UTF8String => u.toString
-      case other => other.toString
-    }
-    val out = LlmFormat.formatBestEffort(str(first), str(second), str(third))
-    if (out == null) null else UTF8String.fromString(out)
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): FormatBestEffortExpr = copy(first = f, second = s, third = t)
-  override def prettyName: String = "format_best_effort"
+    graft.Kernels.FormatBestEffort(response, template, example)
 }

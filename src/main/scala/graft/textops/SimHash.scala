@@ -1,11 +1,6 @@
 package graft.textops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** 60-bit SimHash over space-separated tokens (empty tokens included, to
   * stay bit-identical with `string_split(text, ' ')` in the DuckDB
@@ -46,15 +41,5 @@ object SimHash {
     fp
   }
 
-  def simhash60(c: Column): Column =
-    ColumnShim.column(SimHashExpr(ColumnShim.expression(c)))
-}
-
-case class SimHashExpr(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    SimHash.simhash(input.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
-  override def prettyName: String = "simhash60"
+  def simhash60(c: Column): Column = graft.Kernels.SimHash60(c)
 }

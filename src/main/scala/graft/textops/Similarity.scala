@@ -1,12 +1,7 @@
 package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Similarity search over the embedding column (`array<float>`, dim 64):
   * brute-force cosine top-k as the exact baseline, and seeded
@@ -93,8 +88,7 @@ object Similarity {
     * interpreted, per scored row); [[dotColumnar]] remains as the
     * parity reference (SimilaritySpec pins kernel == columnar).
     */
-  private[graft] def dot(a: Column, b: Column): Column =
-    ColumnShim.column(DotExpr(ColumnShim.expression(a), ColumnShim.expression(b)))
+  private[graft] def dot(a: Column, b: Column): Column = graft.Kernels.DotFold(a, b)
 
   /** Column-op reference twin of [[dot]] (identical fold order). */
   private[graft] def dotColumnar(a: Column, b: Column): Column =
@@ -151,7 +145,7 @@ object Similarity {
     * (the column-op form evaluates tables*bits interpreted HOF folds/row).
     */
   def rhSignatures(e: Column, tables: Int, bits: Int): Column =
-    ColumnShim.column(RhSignaturesExpr(ColumnShim.expression(e), tables, bits))
+    graft.Kernels.RhSignatures(e, lit(tables), lit(bits))
 
   /** (vec_id, e, nrm[, label]) with the norm projected once. */
   private def withNorm(df: DataFrame): DataFrame =
@@ -254,37 +248,4 @@ object Similarity {
       .where(col("sim") >= NearDupCosine)
       .orderBy("id_a", "id_b")
   }
-}
-
-/** Catalyst expression wrapping [[Similarity.dotScala]]: the left-fold
-  * dot product of two equal-length double arrays (every caller pairs
-  * same-dimension vectors; the fold order matches the column-op twin
-  * and DuckDB bit-for-bit).
-  */
-case class DotExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Similarity.dotScala(a.asInstanceOf[ArrayData].toDoubleArray(),
-      b.asInstanceOf[ArrayData].toDoubleArray())
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DotExpr = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_fold"
-}
-
-/** Catalyst expression wrapping [[Similarity.signaturesScala]]: all
-  * `tables` B-bit sign signatures of a double vector in one pass.
-  */
-case class RhSignaturesExpr(child: Expression, tables: Int, bits: Int)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData].toDoubleArray()
-    new GenericArrayData(
-      Similarity.signaturesScala(v, tables, bits).map(Long.box).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): RhSignaturesExpr =
-    copy(child = newChild)
-  override def prettyName: String = "rh_signatures"
 }

@@ -1,12 +1,8 @@
 package graft.textops
 
+import graft.Kernels
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Corpus-level text analysis for training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting. All pure
@@ -16,8 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextAnalysis {
 
   /** Stopword lists for the n-gram/stopword language heuristic. */
-  val EnStop: Seq[String] = Seq("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
-  val PtStop: Seq[String] = Seq("de", "a", "o", "e", "que", "do", "da", "em", "um", "para")
+  val EnStop: IndexedSeq[String] =
+    IndexedSeq("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
+  val PtStop: IndexedSeq[String] =
+    IndexedSeq("de", "a", "o", "e", "que", "do", "da", "em", "um", "para")
 
   val BpeishTokenPattern = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
@@ -545,7 +543,7 @@ object TextAnalysis {
     * fraction of repeated word 2-grams / 3-grams per document (1 -
     * distinct/total), plus the keep flag at the frozen thresholds.
     * Shuffle-free, O(words) per row; fast path is the native
-    * [[RepetitionExpr]] (the interpreted HOF twin below re-evaluates
+    * `repetition_fracs` kernel (the interpreted HOF twin below re-evaluates
     * slice+join per gram — measured 8.6 s for this query alone at sf0.1).
     */
   def repetition(spark: SparkSession, sfDir: String): DataFrame = {
@@ -601,8 +599,7 @@ object TextAnalysis {
         / size(g).cast("double"), 6))
   }
 
-  def repetitionFracs(c: Column): Column =
-    ColumnShim.column(RepetitionExpr(ColumnShim.expression(c)))
+  def repetitionFracs(c: Column): Column = Kernels.RepetitionFracs(c)
 
   /** PII patterns — frozen and RE2-COMPATIBLE (no backreferences or
     * lookaround: the DuckDB oracle runs the byte-identical pattern
@@ -653,9 +650,47 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** [[PiiScrubExpr]] as a Column (struct of clean_text + counts). */
-  def piiScrubStruct(c: Column): Column =
-    ColumnShim.column(PiiScrubExpr(ColumnShim.expression(c)))
+  /** The `pii_scrub` kernel as a Column: struct of clean_text + the three
+    * counts ([[piiScrubScala]]).
+    */
+  def piiScrubStruct(c: Column): Column = Kernels.PiiScrub(c)
+
+  private val PiiEmail = java.util.regex.Pattern.compile(PiiEmailPattern)
+  private val PiiIp = java.util.regex.Pattern.compile(PiiIpPattern)
+  private val PiiPhone = java.util.regex.Pattern.compile(PiiPhonePattern)
+
+  /** The frozen PII scrub (email → ip → phone, each count taken on the
+    * text state its replacement sees) with each category's count and
+    * replacement produced by ONE matcher traversal: (clean_text, n_emails,
+    * n_ips, n_phones). Spark's own regexp functions are java.util.regex,
+    * so the per-category match sets — and therefore counts and
+    * replacements — are byte-identical to [[piiScrubColumnar]] (parity
+    * pinned in WordStatsSpec).
+    */
+  def piiScrubScala(text: String): (String, Int, Int, Int) = {
+    val (t1, nEmails) = piiPass(text, PiiEmail, "<EMAIL>")
+    val (t2, nIps) = piiPass(t1, PiiIp, "<IP>")
+    val (t3, nPhones) = piiPass(t2, PiiPhone, "<PHONE>")
+    (t3, nEmails, nIps, nPhones)
+  }
+
+  /** Count every match and substitute the typed token (the token strings
+    * contain no `$`/`\`, so `appendReplacement` — the machinery Spark's
+    * regexp_replace uses — is literal).
+    */
+  private def piiPass(s: String, p: java.util.regex.Pattern,
+      token: String): (String, Int) = {
+    val m = p.matcher(s)
+    var n = 0
+    var sb: java.lang.StringBuilder = null
+    while (m.find()) {
+      if (sb == null) sb = new java.lang.StringBuilder(s.length)
+      n += 1
+      m.appendReplacement(sb, token)
+    }
+    if (n == 0) (s, 0)
+    else { m.appendTail(sb); (sb.toString, n) }
+  }
 
   /** The round-5 column-op PII scrub (each pattern evaluated twice:
     * count + replace) — kept as the parity reference for the kernel.
@@ -684,7 +719,7 @@ object TextAnalysis {
     * NFC normalization (combining sequences composed — 'e' + U+0301
     * becomes U+00E9 — so byte-different renderings of the same text
     * hash identically downstream). NFC runs in the native
-    * [[NfcNormalizeExpr]] kernel (`java.text.Normalizer`); DuckDB's
+    * `nfc_normalize` kernel (`java.text.Normalizer`); DuckDB's
     * `nfc_normalize` (utf8proc) implements the same Unicode algorithm,
     * so the oracle is value-exact — both engines' agreement is itself
     * pinned per row.
@@ -728,8 +763,10 @@ object TextAnalysis {
       .when(pmod(id, lit(3)) === 1, concat(text, lit(" nin\u0303o\u0007 data")))
       .otherwise(text)
 
-  def nfcNormalize(c: Column): Column =
-    ColumnShim.column(NfcNormalizeExpr(ColumnShim.expression(c)))
+  /** Unicode NFC normalization, registered under DuckDB's SQL name (see
+    * [[fixUnicode]]).
+    */
+  def nfcNormalize(c: Column): Column = Kernels.NfcNormalize(c)
 
   /** C4 line-level cleaning constants — frozen per the published C4
     * heuristics (Raffel et al. 2020 §2.2, "Exploring the Limits of
@@ -796,8 +833,8 @@ object TextAnalysis {
     // four sparse plants, line rules, page verdict) instead of the
     // staged HOF chain — the chain was correct and CollapseProject-safe
     // but every stage ran interpreted per element. The column-op
-    // definitions below remain THE reference (streaming uses them;
-    // kernel parity pinned in WordStatsSpec on the real corpus).
+    // definitions below remain THE reference (kernel parity pinned in
+    // WordStatsSpec on the real corpus).
     val s1 = d.select(d("doc_id"), c4Doc(d("doc_id"), d("text")).as("c4"))
     s1.select(col("doc_id"),
         size(col("c4.lines")).cast("long").as("n_lines"),
@@ -808,9 +845,7 @@ object TextAnalysis {
   }
 
   /** `c4_doc(doc_id, text)` as a Column (struct of lines/kept/verdict). */
-  def c4Doc(docId: Column, text: Column): Column =
-    ColumnShim.column(C4DocExpr(
-      ColumnShim.expression(docId), ColumnShim.expression(text)))
+  def c4Doc(docId: Column, text: Column): Column = Kernels.C4Doc(docId, text)
 
   /** Scala twin of the whole C4 stage over one doc —
     * [[c4PlantedLines]] + [[c4KeptCol]] + [[c4PageKeepCol]] rule for
@@ -980,16 +1015,21 @@ object TextAnalysis {
     */
   private[graft] def cleanPages(spark: SparkSession, sfDir: String): DataFrame = {
     val d = loadDocs(spark, sfDir)
-    val cleaned = d.select(d("doc_id"),
-      fixUnicodeCol(plantUnicode(d("doc_id"), d("text"))).as("clean"))
-    // native C4 pass over the REPAIRED text (see c4Clean; kernel parity
-    // with the columnar chain pinned in WordStatsSpec)
-    val s1 = cleaned.select(col("doc_id"),
-      c4Doc(col("doc_id"), col("clean")).as("c4"))
-    SessionMemo(spark, s"$sfDir#clean-pages") {
-      s1.where(col("c4.page_keep"))
-        .select(col("doc_id"), col("c4.kept").as("paras"))
-    }
+    SessionMemo(spark, s"$sfDir#clean-pages")(keptPages(d))
+  }
+
+  /** Stages 1-2 per row over `(doc_id, text)` docs, the one definition
+    * the batch capstone and the streaming clean tail share: unicode
+    * repair, then the native C4 pass over the REPAIRED text (see c4Clean;
+    * kernel parity with the columnar chain pinned in WordStatsSpec); the
+    * surviving pages as `(doc_id, paras)`.
+    */
+  private[graft] def keptPages(docs: DataFrame): DataFrame = {
+    val cleaned = docs.select(docs("doc_id"),
+      fixUnicodeCol(plantUnicode(docs("doc_id"), docs("text"))).as("clean"))
+    cleaned.select(col("doc_id"), c4Doc(col("doc_id"), col("clean")).as("c4"))
+      .where(col("c4.page_keep"))
+      .select(col("doc_id"), col("c4.kept").as("paras"))
   }
 
   /** Offline planning for the streaming clean tail: the duplicate-line
@@ -1003,7 +1043,7 @@ object TextAnalysis {
   /** Document fingerprint: minimum keyed hash over the rolling window of
     * word 5-grams (winnowing-style min-fingerprint); short docs fall back
     * to whole-text hash. Robust to local edits outside the minimal gram.
-    * Fast path is the native [[FingerprintExpr]] (one Scala pass; the
+    * Fast path is the native `fingerprint60` kernel (one Scala pass; the
     * column-op twin below is the reference, parity-pinned in
     * PortableHashSpec — the interpreted HOF re-hashes per element and was
     * the slowest query in the suite).
@@ -1041,13 +1081,12 @@ object TextAnalysis {
       .otherwise(PortableHash.hexint60(text))
   }
 
-  def fingerprint60(c: Column): Column =
-    ColumnShim.column(FingerprintExpr(ColumnShim.expression(c)))
+  def fingerprint60(c: Column): Column = Kernels.Fingerprint60(c)
 
   /** ALL word-5-gram hashes of a doc (the full set [[fingerprint60]]
     * takes the min of; same split and short-doc fallback, so the two
     * stay consistent) — the unit of benchmark decontamination overlap.
-    * Scala twin of [[GramHashesExpr]].
+    * Scala twin of the `gram_hashes60` kernel.
     */
   def gramHashesScala(text: String): Array[Long] = {
     val ws = text.split(" ", -1)
@@ -1069,146 +1108,5 @@ object TextAnalysis {
       .otherwise(array(PortableHash.hexint60(text)))
   }
 
-  def gramHashes60(c: Column): Column =
-    ColumnShim.column(GramHashesExpr(ColumnShim.expression(c)))
-}
-
-/** Catalyst expression wrapping [[TextAnalysis.c4DocScala]]: the whole
-  * per-doc C4 stage — planted lines, line rules, page verdict — in one
-  * pass. Output struct: (lines, kept, page_keep).
-  */
-case class C4DocExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-  import org.apache.spark.sql.types.{ArrayType, BooleanType, StructField, StructType}
-  override def dataType: DataType = StructType(Seq(
-    StructField("lines", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("kept", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("page_keep", BooleanType, nullable = false)))
-  override def nullSafeEval(didAny: Any, textAny: Any): Any = {
-    val (lines, kept, keep) = TextAnalysis.c4DocScala(
-      didAny.asInstanceOf[Long], textAny.asInstanceOf[UTF8String].toString)
-    def arr(xs: Array[String]) =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        xs.map(s => UTF8String.fromString(s)).toArray[Any])
-    org.apache.spark.sql.catalyst.InternalRow(arr(lines), arr(kept), keep)
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): C4DocExpr = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "c4_doc"
-}
-
-/** Catalyst expression: the frozen PII scrub (email → ip → phone, each
-  * count taken on the text state its replacement sees) with each
-  * category's count and replacement produced by ONE matcher traversal.
-  * Patterns are the same frozen RE2-compatible strings the DuckDB
-  * oracle runs, compiled once per JVM; Spark's own regexp functions are
-  * java.util.regex, so the per-category match sets — and therefore
-  * counts and replacements — are byte-identical to the round-5
-  * column-op form (parity pinned in WordStatsSpec).
-  */
-case class PiiScrubExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_emails", IntegerType, nullable = false),
-    StructField("n_ips", IntegerType, nullable = false),
-    StructField("n_phones", IntegerType, nullable = false)))
-  override def nullSafeEval(input: Any): Any = {
-    import PiiScrubExpr._
-    val (t1, nEmails) = pass(input.asInstanceOf[UTF8String].toString,
-      EmailP, "<EMAIL>")
-    val (t2, nIps) = pass(t1, IpP, "<IP>")
-    val (t3, nPhones) = pass(t2, PhoneP, "<PHONE>")
-    org.apache.spark.sql.catalyst.InternalRow(
-      UTF8String.fromString(t3), nEmails, nIps, nPhones)
-  }
-  override protected def withNewChildInternal(newChild: Expression): PiiScrubExpr =
-    copy(child = newChild)
-  override def prettyName: String = "pii_scrub"
-}
-
-object PiiScrubExpr {
-  private val EmailP = java.util.regex.Pattern.compile(TextAnalysis.PiiEmailPattern)
-  private val IpP = java.util.regex.Pattern.compile(TextAnalysis.PiiIpPattern)
-  private val PhoneP = java.util.regex.Pattern.compile(TextAnalysis.PiiPhonePattern)
-
-  /** One traversal: count every match and substitute the typed token
-    * (the token strings contain no `$`/`\`, so `appendReplacement` —
-    * the same machinery Spark's regexp_replace uses — is literal).
-    */
-  private def pass(s: String, p: java.util.regex.Pattern,
-      token: String): (String, Int) = {
-    val m = p.matcher(s)
-    var n = 0
-    var sb: java.lang.StringBuilder = null
-    while (m.find()) {
-      if (sb == null) sb = new java.lang.StringBuilder(s.length)
-      n += 1
-      m.appendReplacement(sb, token)
-    }
-    if (n == 0) (s, 0)
-    else { m.appendTail(sb); (sb.toString, n) }
-  }
-}
-
-/** Catalyst expression wrapping [[TextAnalysis.repetitionScala]]. */
-case class RepetitionExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      TextAnalysis.repetitionScala(input.asInstanceOf[UTF8String].toString)
-        .map(Double.box).toArray[Any])
-  override protected def withNewChildInternal(newChild: Expression): RepetitionExpr =
-    copy(child = newChild)
-  override def prettyName: String = "repetition_fracs"
-}
-
-/** Catalyst expression wrapping [[TextAnalysis.fingerprintScala]]. */
-case class FingerprintExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextAnalysis.fingerprintScala(input.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(newChild: Expression): FingerprintExpr =
-    copy(child = newChild)
-  override def prettyName: String = "fingerprint60"
-}
-
-/** Catalyst expression wrapping [[TextAnalysis.gramHashesScala]]: the full
-  * 5-gram hash array in one Scala pass (the interpreted HOF twin re-hashes
-  * per element — the same cost profile fingerprint's kernel eliminated).
-  */
-case class GramHashesExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      TextAnalysis.gramHashesScala(input.asInstanceOf[UTF8String].toString)
-        .map(Long.box).toArray[Any])
-  override protected def withNewChildInternal(newChild: Expression): GramHashesExpr =
-    copy(child = newChild)
-  override def prettyName: String = "gram_hashes60"
-}
-
-/** Catalyst expression: Unicode NFC normalization via
-  * `java.text.Normalizer` — the same Unicode Normalization Algorithm
-  * DuckDB's `nfc_normalize` (utf8proc) implements, so the two engines are
-  * value-exact (pinned by the fixUnicode oracle and TrainingOpsSpec).
-  * Registered under the SAME SQL name as DuckDB's builtin.
-  */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(java.text.Normalizer.normalize(
-      input.asInstanceOf[UTF8String].toString, java.text.Normalizer.Form.NFC))
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
-    copy(child = newChild)
-  override def prettyName: String = "nfc_normalize"
+  def gramHashes60(c: Column): Column = Kernels.GramHashes60(c)
 }

@@ -1,20 +1,14 @@
 package graft.textops
 
+import graft.Kernels
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass word-level statistics kernels (round-6 optimization,
   * guide §1.2 step 2 / §4: per-task work). The language-ID / quality /
   * Gopher / classifier columns all derive from the same handful of
   * word-array counters, and the column-op forms evaluate them through
-  * interpreted higher-order functions (Spark HOFs are CodegenFallback:
-  * per-element lambda evaluation) — several O(words) interpreted passes
+  * interpreted higher-order functions (per-element lambda evaluation) — several O(words) interpreted passes
   * per row across eight driver queries. These kernels produce the RAW
   * INTEGER counters in one Scala pass; every ratio, rounding, and
   * threshold stays in the unchanged Catalyst expressions, so the float
@@ -62,7 +56,7 @@ object WordStats {
     Array(nw, chars, en, pt, alpha)
   }
 
-  private def matchesAny(s: String, i: Int, j: Int, words: Seq[String]): Boolean = {
+  private def matchesAny(s: String, i: Int, j: Int, words: IndexedSeq[String]): Boolean = {
     val n = j - i
     var k = 0
     while (k < words.length) {
@@ -86,8 +80,7 @@ object WordStats {
       size(filter(ws, w => w.rlike("[A-Za-z]"))).cast("long"))
   }
 
-  def stats(c: Column): Column =
-    ColumnShim.column(WordStatsExpr(ColumnShim.expression(c)))
+  def stats(c: Column): Column = Kernels.WordStats(c)
 
   /** Scala twin of [[termCountsColumnar]]: [n_words, count(terms(0)),
     * count(terms(1)), ...] over the non-empty words — the search
@@ -123,7 +116,7 @@ object WordStats {
   }
 
   def termCounts(c: Column, terms: Seq[String]): Column =
-    ColumnShim.column(TermCountsExpr(ColumnShim.expression(c), terms.toIndexedSeq))
+    Kernels.TermCounts(c, typedlit(terms))
 
   /** Scala twin of [[wordTfColumnar]]: the per-doc term-frequency map as
     * (word, tf) pairs in first-occurrence order — one pass, one hash
@@ -163,8 +156,7 @@ object WordStats {
         size(filter(ws, x => x === w)).cast("long").as("tf")))
   }
 
-  def wordTf(c: Column): Column =
-    ColumnShim.column(WordTfExpr(ColumnShim.expression(c)))
+  def wordTf(c: Column): Column = Kernels.WordTf(c)
 
   /** Scala twin of the bare non-empty word count — the cheap subset of
     * [[statsScala]] for consumers that need ONLY n_tokens (sequence
@@ -185,63 +177,5 @@ object WordStats {
     nw
   }
 
-  def wordCount(c: Column): Column =
-    ColumnShim.column(WordCountExpr(ColumnShim.expression(c)))
-}
-
-/** Catalyst expression wrapping [[WordStats.wordCountScala]]. */
-case class WordCountExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    WordStats.wordCountScala(input.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(newChild: Expression): WordCountExpr =
-    copy(child = newChild)
-  override def prettyName: String = "word_count"
-}
-
-/** Catalyst expression wrapping [[WordStats.statsScala]]. */
-case class WordStatsExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      WordStats.statsScala(input.asInstanceOf[UTF8String].toString)
-        .map(Long.box).toArray[Any])
-  override protected def withNewChildInternal(newChild: Expression): WordStatsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "word_stats"
-}
-
-/** Catalyst expression wrapping [[WordStats.wordTfScala]]. */
-case class WordTfExpr(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  import org.apache.spark.sql.types.{StringType, StructField, StructType}
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("word", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      WordStats.wordTfScala(input.asInstanceOf[UTF8String].toString)
-        .map { case (w, tf) =>
-          org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(w), tf)
-        }.toArray[Any])
-  override protected def withNewChildInternal(newChild: Expression): WordTfExpr =
-    copy(child = newChild)
-  override def prettyName: String = "word_tf"
-}
-
-/** Catalyst expression wrapping [[WordStats.termCountsScala]]; `terms`
-  * is a construction-time literal (the frozen search terms).
-  */
-case class TermCountsExpr(child: Expression, terms: IndexedSeq[String])
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      WordStats.termCountsScala(input.asInstanceOf[UTF8String].toString, terms)
-        .map(Long.box).toArray[Any])
-  override protected def withNewChildInternal(newChild: Expression): TermCountsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "term_counts"
+  def wordCount(c: Column): Column = Kernels.WordCount(c)
 }

@@ -66,4 +66,45 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
   test("extensions class injects without error") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
   }
+
+  test("every registry kernel, as a Column and by its SQL name: null in, null out; empty in, no throw") {
+    import GraftExtensionsSpec.{args, empty}
+    import org.apache.spark.sql.functions.{call_function, lit}
+    val entries = Kernels.getClass.getDeclaredFields.toSeq
+      .filter(_.getType == classOf[Kernel]).map { f => f.setAccessible(true); f.get(Kernels) }
+    assert(entries.length === 21 && entries.toSet === Kernels.all.toSet)
+    assert(Kernels.all.map(_.name).distinct.length === Kernels.all.length)
+    for (k <- Kernels.all) {
+      def run(a: Seq[org.apache.spark.sql.Column]) = Seq(
+        spark.range(1).select(k(a: _*)).collect()(0),
+        spark.range(1).select(call_function(k.name, a: _*)).collect()(0))
+      run(args(k, t => lit(null).cast(t))).foreach(r => assert(r.isNullAt(0), k.name))
+      run(args(k, empty))
+    }
+  }
+}
+
+object GraftExtensionsSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+
+  /** The empty value of a kernel argument type: "", an empty array, 1. */
+  def empty(t: DataType): Column = t match {
+    case StringType => lit("")
+    case _: ArrayType => array().cast(t)
+    case LongType => lit(1L)
+    case IntegerType => lit(1)
+  }
+
+  /** Arguments of `k` over `spark.range`: each data argument is `data` of
+    * its type, computed per row so that nothing folds; each constant is
+    * [[empty]].
+    */
+  def args(k: Kernel, data: DataType => Column): Seq[Column] = {
+    val nData = k.argTypes.length - k.constants
+    k.argTypes.zipWithIndex.map { case (t, i) =>
+      if (i < nData) when(col("id") >= 0, data(t)) else empty(t)
+    }
+  }
 }

@@ -43,33 +43,45 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(shuffles > 0, "no ShuffleExchangeExec visited - vacuous traversal")
   }
 
+  /** Interpreted (`CodegenFallback`) expressions of the physical plan. */
+  private def fallbacks(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e: CodegenFallback => e.prettyName })
+  }
+
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
 
   test("repetition evaluates the repetition_fracs kernel once per row") {
     val plan = optimized(graft.textops.TextAnalysis.repetition(spark, sf))
-    assert(count(plan, "repetition_fracs(") === 1, s"\n$plan")
+    assert(count(plan, "graft.Kernels.repetition_fracs(") === 1, s"\n$plan")
   }
 
   test("minhash LSH verify evaluates the jaccard kernel once per pair") {
     val plan = optimized(graft.textops.Dedup.minhashLsh(spark, sf))
-    assert(count(plan, "jaccard(") === 1, s"\n$plan")
+    assert(count(plan, "graft.Kernels.jaccard(") === 1, s"\n$plan")
     assert(!plan.contains("array_intersect"))
   }
 
   test("ngram Jaccard verify evaluates the jaccard kernel once per pair") {
     val plan = optimized(graft.textops.Dedup.ngramJaccard(spark, sf))
-    assert(count(plan, "jaccard(") === 1, s"\n$plan")
+    assert(count(plan, "graft.Kernels.jaccard(") === 1, s"\n$plan")
     assert(!plan.contains("array_intersect"))
   }
 
   test("fingerprint/simhash/nfc kernels appear once in their queries") {
     val fp = optimized(graft.textops.TextAnalysis.fingerprint(spark, sf))
-    assert(count(fp, "fingerprint60(") === 1, s"\n$fp")
+    assert(count(fp, "graft.Kernels.fingerprint60(") === 1, s"\n$fp")
     val sh = optimized(graft.textops.Dedup.simhashFingerprints(spark, sf))
-    assert(count(sh, "simhash60(") === 1, s"\n$sh")
+    assert(count(sh, "graft.Kernels.simhash60(") === 1, s"\n$sh")
     val fu = optimized(graft.textops.TextAnalysis.fixUnicode(spark, sf))
-    assert(count(fu, "nfc_normalize(") === 1, s"\n$fu")
+    assert(count(fu, "graft.Kernels.nfc_normalize(") === 1, s"\n$fu")
   }
 
   test("sharded packing exchanges on shard, never SinglePartition") {
@@ -146,7 +158,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // the old literal-count pin guarded) is one native c4_doc pass; the
     // struct alias must stay staged so the kernel evaluates ONCE per
     // row despite its four downstream field references
-    assert(count(plan, "c4_doc(") === 1, s"\n$plan")
+    assert(count(plan, "graft.Kernels.c4_doc(") === 1, s"\n$plan")
     val phys = df.queryExecution.executedPlan.toString
     assert(!phys.contains("hashpartitioning"), s"\n$phys")
     assert(!phys.contains("SinglePartition"), s"\n$phys")
@@ -358,6 +370,20 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(count(phys, "SinglePartition") <= 1, s"\n$phys")
   }
 
+  test("kernel queries carry no interpreted (CodegenFallback) expression") {
+    import graft.textops.{Dedup, TextAnalysis}
+    val registry = spark.range(1).select(Kernels.all.map(k =>
+      k(GraftExtensionsSpec.args(k, GraftExtensionsSpec.empty): _*)): _*)
+    for ((q, df) <- Seq(
+        "registry" -> registry,
+        "repetition" -> TextAnalysis.repetition(spark, sf),
+        "fingerprint" -> TextAnalysis.fingerprint(spark, sf),
+        "simhash" -> Dedup.simhashFingerprints(spark, sf),
+        "fix_unicode" -> TextAnalysis.fixUnicode(spark, sf),
+        "c4_clean" -> TextAnalysis.c4Clean(spark, sf)))
+      assert(fallbacks(df).isEmpty, s"$q: ${fallbacks(df)}")
+  }
+
   test("flagship extraction plan has no shuffle and a pruned scan") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-planshape").toString
     graft.synth.SpanSynth.docsInput(spark, sf).write.mode("overwrite")
@@ -365,6 +391,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     val df = graft.extract.Extractor.extract(spark.read.parquet(s"$tmp/spans"))
     val phys = df.queryExecution.executedPlan.toString
     assert(!phys.contains("Exchange"), s"\n$phys")
-    assert(count(phys, "extract_spans(") === 1, s"\n$phys")
+    assert(count(phys, "graft.Kernels.extract_spans(") === 1, s"\n$phys")
+    assert(fallbacks(df).isEmpty, s"\n$phys")
   }
 }

@@ -183,11 +183,15 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     assert(q.count() === input.count())
     assert(q.columns.contains("status"))
 
-    // pick a real doc id; driver-side bucket matches the stored partition
-    val someId = spark.read.parquet(s"$out/data")
-      .select("doc_id", "bucket").limit(1).collect()(0)
-    val docId = someId.getString(0)
-    assert(Queries.bucketOf(spark, docId, B) === someId.getInt(1))
+    // driver-side bucket matches the stored partition of every doc, and
+    // evaluating it runs no Spark job
+    val stored = spark.read.parquet(s"$out/data").select("doc_id", "bucket").collect()
+    val sc = spark.sparkContext
+    sc.setJobGroup("bucket-of", "driver-side bucket")
+    stored.foreach(r => assert(Queries.bucketOf(spark, r.getString(0), B) === r.getInt(1)))
+    sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("bucket-of").isEmpty)
+    val docId = stored(0).getString(0)
 
     // bucket count derives from the store's _lineage record; an explicit
     // mismatching count fails loudly instead of pruning to the wrong

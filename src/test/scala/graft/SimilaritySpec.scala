@@ -65,6 +65,15 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
+    // unequal lengths and null elements fold to null, empty vectors to 0
+    val edge = spark.sql(
+      "SELECT array(1D, 2D) AS e, array(3D) AS qv UNION ALL " +
+        "SELECT array(1D, CAST(NULL AS DOUBLE)), array(1D, 2D) UNION ALL " +
+        "SELECT CAST(array() AS array<double>), CAST(array() AS array<double>)")
+      .select(Similarity.dot(col("e"), col("qv")), Similarity.dotColumnar(col("e"), col("qv")))
+      .collect()
+    assert(edge.map(r => Option(r.get(0))).toSeq === Seq(None, None, Some(0.0)))
+    edge.foreach(r => assert(r.get(0) === r.get(1)))
   }
 
   test("near-dup finds nearly all planted pairs at high similarity") {

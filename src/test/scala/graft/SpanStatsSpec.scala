@@ -30,19 +30,24 @@ class SpanStatsSpec extends AnyFunSuite with SparkSpec {
 
   test("span_stats kernel handles empty arrays, null text, unicode") {
     import spark.implicits._
+    val spanType = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    val nullSpan = spark.range(1).selectExpr("4L AS doc_id",
+      s"CAST(array(NULL, named_struct('kind', 'image', 'text', NULL, 'media_ref', 'm', " +
+        s"'offset', 1)) AS $spanType) AS spans")
     val df = Seq(
       (1L, Seq.empty[(String, String, String, Int)]),
       (2L, Seq(("image", null: String, "media://x/0", 0))),
       (3L, Seq(("text", "café 😀", null: String, 0),
         ("error", "", null: String, 1))))
       .toDF("doc_id", "raw")
-      .select(col("doc_id"), col("raw").cast(
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>")
-        .as("spans"))
-    val rows = df.select(SpanStats.stats(col("spans")).as("n"),
+      .select(col("doc_id"), col("raw").cast(spanType).as("spans"))
+      .unionByName(nullSpan)
+    val rows = df.orderBy("doc_id").select(SpanStats.stats(col("spans")).as("n"),
       SpanStats.statsColumnar(col("spans")).as("c")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
     // unicode text_chars counts codepoints: "café 😀" = 6
     assert(rows(2).getSeq[Long](0) === Seq(2L, 0L, 1L, 6L))
+    // a null span counts toward n_spans (Spark's `size`) and nothing else
+    assert(rows(3).getSeq[Long](0) === Seq(2L, 1L, 0L, 0L))
   }
 }
