@@ -81,6 +81,11 @@ object Kernels {
   private val Strings = ArrayType(StringType, containsNull = false)
   private val Doubles = ArrayType(DoubleType, containsNull = false)
 
+  /** A kernel bound to its plan-time constants. It prints like the static
+    * calls, so every kernel call in a plan reads `graft.Kernels.<name>(`.
+    */
+  sealed trait Bound { override def toString: String = "graft.Kernels" }
+
   private def str(u: UTF8String): String = if (u == null) null else u.toString
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
@@ -149,7 +154,7 @@ object Kernels {
   val TermCounts = new Kernel("term_counts", Seq(StringType, Strings), Longs,
     constants = 1, bind = c => BoundTermCounts(c.head.asInstanceOf[ArrayData]
       .toArray[UTF8String](StringType).map(str).toIndexedSeq))
-  final case class BoundTermCounts(terms: IndexedSeq[String]) {
+  final case class BoundTermCounts(terms: IndexedSeq[String]) extends Bound {
     require(!terms.contains(null), "term_counts: terms must not be null")
     def term_counts(text: UTF8String): ArrayData =
       ArrayData.toArrayData(textops.WordStats.termCountsScala(text.toString, terms))
@@ -210,7 +215,7 @@ object Kernels {
     */
   val RhSignatures = new Kernel("rh_signatures", Seq(Doubles, IntegerType, IntegerType), Longs,
     constants = 2, bind = c => BoundRhSignatures(c(0).asInstanceOf[Int], c(1).asInstanceOf[Int]))
-  final case class BoundRhSignatures(tables: Int, bits: Int) {
+  final case class BoundRhSignatures(tables: Int, bits: Int) extends Bound {
     require(tables >= 0 && bits >= 0 && tables.toLong * bits <= textops.Similarity.PoolSize,
       s"rh_signatures: $tables tables x $bits bits exceed the ${textops.Similarity.PoolSize}-plane pool")
     def rh_signatures(e: ArrayData): ArrayData = ArrayData.toArrayData(
@@ -226,13 +231,12 @@ object Kernels {
       val cb = c.head.asInstanceOf[ArrayData]
       BoundIvfAssign((0 until cb.numElements()).map(i => cb.getArray(i).toDoubleArray().toIndexedSeq))
     })
-  final case class BoundIvfAssign(codebook: IndexedSeq[IndexedSeq[Double]]) {
+  final case class BoundIvfAssign(codebook: IndexedSeq[IndexedSeq[Double]]) extends Bound {
     require(codebook.forall(_.length == textops.Ivf.Dim),
       s"ivf_assign: centroids must have ${textops.Ivf.Dim} dimensions")
     def ivf_assign(e: ArrayData): java.lang.Integer =
       if (codebook.isEmpty || e.numElements() != textops.Ivf.Dim || hasNull(e)) null
       else Int.box(textops.Ivf.nearestLists(codebook, e.toDoubleArray(), 1).head)
-    override def toString: String = s"BoundIvfAssign(${codebook.length} centroids)"
   }
 
   /** The L4 JSON cascade; null arguments are passed through, not propagated. */

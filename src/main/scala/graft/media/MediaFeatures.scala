@@ -31,15 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object MediaFeatures {
 
-  // javax.imageio defaults to FILE-backed cache streams: without this,
-  // every createImageInputStream/ImageIO.write wraps its in-memory
-  // buffer in a FileCache*Stream — a temp file created, written, read
-  // and deleted PER IMAGE (measured 2-3x wall on the decode query, with
-  // run-to-run variance tracking tmpfs state). The payloads here are
-  // KB-sized byte arrays; memory-cached streams are strictly better at
-  // any scale, and identical bytes in/out.
-  javax.imageio.ImageIO.setUseCache(false)
-
   case class MediaRef(doc_id: String, media_ref: String, offset: Int)
   case class MediaBlob(doc_id: String, media_ref: String, offset: Int,
       payload: Array[Byte])
@@ -72,16 +63,15 @@ object MediaFeatures {
     if (b.payload == null) return decodeOne(MediaRef(b.doc_id, b.media_ref, b.offset))
     val dead = MediaFeature(b.doc_id, b.media_ref, b.offset, 0, 0, "unknown",
       b.payload.length.toLong)
-    // EVERYTHING imageio sits inside the catch: createImageInputStream
-    // itself can throw (its default disk cache needs a writable tmpdir)
-    // or return null (no SPI), and a reader that CLAIMS the payload by
-    // signature can still throw parsing a corrupt header — every one of
-    // those must dead-letter, never kill the task
-    var iis: javax.imageio.stream.ImageInputStream = null
+    // memory-backed stream built here, not through
+    // ImageIO.createImageInputStream: that wraps the buffer in a temp-FILE
+    // cache per image unless the process-wide ImageIO.setUseCache(false)
+    // is flipped (measured 2-3x wall on the decode query)
+    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(b.payload))
+    // a reader that CLAIMS the payload by signature can still throw
+    // parsing a corrupt header — that must dead-letter, never kill the task
     try {
-      iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(b.payload))
-      if (iis == null) return dead
       val readers = javax.imageio.ImageIO.getImageReaders(iis)
       if (!readers.hasNext) dead
       else {
@@ -95,11 +85,7 @@ object MediaFeatures {
         } finally r.dispose()
       }
     } catch { case scala.util.control.NonFatal(_) => dead }
-    finally if (iis != null) {
-      // close() of a file-cache-backed stream can itself throw (cache
-      // file deletion) — swallowing it keeps the dead-letter contract
-      try iis.close() catch { case scala.util.control.NonFatal(_) => () }
-    }
+    finally iis.close()
   }
 
   /** Typed decode stage over payload-bearing rows — the shape a real
@@ -166,7 +152,10 @@ object MediaFeatures {
       y += 1
     }
     val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
+    // memory-backed for the same reason as [[decodeBlob]]'s input stream;
+    // close() flushes the cached bytes into baos
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(baos)
+    try javax.imageio.ImageIO.write(img, "png", ios) finally ios.close()
     baos.toByteArray
   }
 

@@ -1,8 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.time.Instant
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The resumable extraction job (north_rule: "resumable from checkpoint
   * with per-partition lineage + metrics"; SURVEY.md §3.4). Re-expresses the
@@ -15,17 +18,17 @@ import org.apache.spark.sql.functions._
   * semantics — no Iceberg jar in-sandbox, see SURVEY.md §7.1):
   *   data/bucket=N/            extracted docs (+ per-doc n_dead counter),
   *                             parquet partitioned by bucket
-  *   _checkpoints/             (run_id, stage, bucket, status, n_docs,
-  *                              n_spans, text_chars, n_images, n_errors,
-  *                              n_dead_letter, started_ts, finished_ts);
-  *                             a run appends status='running' rows for the
-  *                             buckets it claims, then status='done' rows
-  *                             when they commit — so a crashed run leaves
-  *                             'running' rows the stuck scan (Q6) finds
-  *   _lineage/                 (run_id, input_path, code_version,
-  *                              params_json, run_ts)
+  *   _checkpoints/             [[CkptSchema]]; a stage run appends one file
+  *                             of status='running' rows for the buckets it
+  *                             claims, then ONE file of terminal rows when
+  *                             it commits ([[commitStage]]) — so a crashed
+  *                             run leaves 'running' rows the stuck scan
+  *                             (Q6) finds
+  *   _lineage/                 [[LineageSchema]], one row per extract run
   * The metrics surface is [[metrics]] — a view over `_checkpoints`
   * (latest done row per bucket), not a second store to keep consistent.
+  * Every reader of these stores goes through [[readStore]] with the
+  * writer's schema, so no read runs a schema-inference job.
   *
   * Buckets come from `pmod(xxhash64(doc_id), numBuckets)` — uniform for any
   * id distribution (monotonic int-derived ids included), and the output
@@ -47,10 +50,7 @@ object ExtractPipeline {
       outDir: String,
       runId: String,
       numBuckets: Int = 32,
-      heavyThreshold: Int = SkewSalter.DefaultHeavyThreshold,
-      chunkTarget: Int = SkewSalter.DefaultChunkTarget,
       inputPath: String = "",
-      codeVersion: String = BuildInfo.version,
       // V2 size cap (reference utils.py:504-506, main.py:258-264): docs
       // whose input span chars exceed the cap are recorded as a single
       // error span instead of extracted — the job continues (the reference
@@ -66,12 +66,28 @@ object ExtractPipeline {
   object BuildInfo { val version = "0.1.0" }
 
   private val Stage = "extract"
+  private val LlmStageName = "llm"
 
-  /** Data subdirectory per checkpointed stage (the read/verify surfaces
-    * take a stage parameter and resolve their table through this map, so
-    * the invariant checker covers every stage, not just extract).
+  /** Data subdirectory per checkpointed stage (the write, read and verify
+    * surfaces resolve their table through this map, so the invariant
+    * checker covers every stage, not just extract).
     */
-  private val StageData = Map("extract" -> "data", "llm" -> "llm")
+  private val StageData = Map(Stage -> "data", LlmStageName -> "llm")
+
+  /** `_checkpoints` row schema: written only by [[appendCkpt]], read only
+    * through [[readStore]]. The counters a stage does not measure stay null.
+    */
+  private[graft] val CkptSchema = StructType.fromDDL(
+    "run_id STRING, stage STRING, bucket INT, status STRING, n_docs BIGINT, " +
+      "n_spans BIGINT, text_chars BIGINT, n_images BIGINT, n_errors BIGINT, " +
+      "n_dead_letter BIGINT, started_ts TIMESTAMP, finished_ts TIMESTAMP")
+
+  /** `_lineage` row schema: one row per extract run, written by [[run]]. */
+  private[graft] val LineageSchema = StructType.fromDDL(
+    "run_id STRING, input_path STRING, code_version STRING, " +
+      "params_json STRING, run_ts TIMESTAMP")
+
+  private val BucketOnly = StructType.fromDDL("bucket INT")
 
   /** THE bucket function of the storage layout — every consumer (the
     * write path, resume, and the serving layer's driver-side pruning)
@@ -96,21 +112,37 @@ object ExtractPipeline {
     * bucket checkpointed 'empty' (claimed, no data in that run's input) is
     * NOT done: a later resume with a fuller input must recompute it.
     */
-  def doneBuckets(spark: SparkSession, outDir: String, stage: String): Set[Int] = {
-    val path = s"$outDir/_checkpoints"
+  def doneBuckets(spark: SparkSession, outDir: String, stage: String): Set[Int] =
+    doneByStage(spark, outDir).getOrElse(stage, Set.empty)
+
+  /** Done buckets of every stage from ONE `_checkpoints` read. */
+  private def doneByStage(spark: SparkSession, outDir: String): Map[String, Set[Int]] =
+    readCkpt(spark, outDir)
+      .where(col("status") === "done")
+      .select("stage", "bucket").distinct().collect()
+      .groupMap(_.getString(0))(_.getInt(1)).map { case (s, bs) => s -> bs.toSet }
+
+  /** THE reader of the pipeline's stores: restore a crashed rewrite's
+    * renamed-aside copy, then read with the schema the store's writer
+    * defines — no schema-inference job, and a missing store reads as an
+    * empty table of that schema.
+    */
+  private[graft] def readStore(spark: SparkSession, path: String,
+      schema: StructType): DataFrame = {
     recoverStore(spark, path)
-    if (!fileExists(spark, path)) Set.empty
-    else spark.read.parquet(path)
-      .where(col("stage") === stage && col("status") === "done")
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSet
+    if (fileExists(spark, path)) spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
+
+  private def readCkpt(spark: SparkSession, outDir: String): DataFrame =
+    readStore(spark, s"$outDir/_checkpoints", CkptSchema)
 
   /** Crash recovery for [[cleanupCheckpoints]]'s rewrite: if the store is
     * missing but the renamed-aside copy exists (crash between the two
     * renames), restore it — otherwise every reader sees an empty store and
     * resume recomputes the world.
     */
-  private[graft] def recoverStore(spark: SparkSession, path: String): Unit =
+  private def recoverStore(spark: SparkSession, path: String): Unit =
     synchronized {
       val fs = hadoopFs(spark, path)
       val p = new org.apache.hadoop.fs.Path(path)
@@ -147,61 +179,93 @@ object ExtractPipeline {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def emptyCkptView(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
-  /** The ONE builder of `_checkpoints` rows: every status write (running
-    * claims, done commits, empty claims, 0-doc closes) projects through
-    * here, so the 12-column schema cannot drift between call sites — a
-    * divergent hand-written copy would append parquet files with a
-    * different schema that every reader then unions. `df` needs a
-    * `bucket` column; `counters` overrides the counter columns a stage
-    * actually measures (the rest stay null).
+  /** One `_checkpoints` row, bound to [[CkptSchema]] by field name:
+    * `counters` holds the counter columns a stage measures (the rest stay
+    * null).
     */
-  private def ckptRows(df: DataFrame, runId: String, stage: String,
-      status: String, startedTs: String, finishedTs: Option[String],
-      counters: Map[String, Column] = Map.empty): DataFrame = {
-    def c(name: String): Column =
-      counters.getOrElse(name, lit(null).cast("long")).as(name)
-    df.select(
-      lit(runId).as("run_id"),
-      lit(stage).as("stage"),
-      col("bucket"),
-      lit(status).as("status"),
-      c("n_docs"), c("n_spans"), c("text_chars"), c("n_images"),
-      c("n_errors"), c("n_dead_letter"),
-      lit(startedTs).cast("timestamp").as("started_ts"),
-      finishedTs.fold(lit(null).cast("timestamp"))(ts => lit(ts).cast("timestamp"))
-        .as("finished_ts"))
-  }
+  private def ckptRow(runId: String, stage: String, bucket: Int, status: String,
+      startedTs: Instant, finishedTs: Option[Instant],
+      counters: Map[String, Any] = Map.empty): Row =
+    Row.fromSeq(CkptSchema.fieldNames.toSeq.map {
+      case "run_id" => runId
+      case "stage" => stage
+      case "bucket" => bucket
+      case "status" => status
+      case "started_ts" => startedTs
+      case "finished_ts" => finishedTs.orNull
+      case counter => counters.getOrElse(counter, null)
+    })
 
-  private def appendCkpt(rows: DataFrame, outDir: String): Unit =
-    rows.coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/_checkpoints")
+  /** THE writer of `_checkpoints`: one appended file per call, with the one
+    * [[CkptSchema]] — a divergent schema would append parquet files every
+    * reader then unions.
+    */
+  private def appendCkpt(spark: SparkSession, rows: Seq[Row], outDir: String): Unit =
+    if (rows.nonEmpty)
+      spark.createDataFrame(rows.asJava, CkptSchema).coalesce(1)
+        .write.mode(SaveMode.Append).parquet(s"$outDir/_checkpoints")
 
   /** One checkpoint row per claimed bucket, status='running' — written from
     * a driver-local list (bucket ids are 0..numBuckets-1 minus done; no
     * input scan). The stuck scan keys off these.
     */
-  private def writeRunningRows(spark: SparkSession, cfg: Config,
-      buckets: Seq[Int], startedTs: String, stage: String = Stage): Unit = {
-    import spark.implicits._
-    if (buckets.isEmpty) return
-    appendCkpt(ckptRows(buckets.toDF("bucket"), cfg.runId, stage, "running",
-      startedTs, None), cfg.outDir)
+  private def claim(spark: SparkSession, cfg: Config, stage: String,
+      buckets: Seq[Int], startedTs: Instant): Unit =
+    appendCkpt(spark, buckets.map(ckptRow(cfg.runId, stage, _, "running",
+      startedTs, None)), cfg.outDir)
+
+  /** THE commit path of a checkpointed stage. Writes `output` into the
+    * stage's bucketed table (dynamic partition overwrite: only the claimed
+    * buckets' directories are replaced, so a re-run after a crash is
+    * idempotent), reads it back with the schema just written, aggregates
+    * the named `counters` (`n_docs` among them) per claimed bucket ONCE
+    * and collects that (at most numBuckets rows) to the driver. From that
+    * array it appends every claimed bucket's terminal row as ONE
+    * `_checkpoints` file and builds the [[RunReport]]. Counting the WRITTEN output verifies the write like
+    * the reference's paranoid re-read (reference workers.py:91-109), as one
+    * scan instead of per-row round-trips.
+    *
+    * `emptyStatus` closes a claimed bucket with no output rows, so the
+    * stuck scan does not flag it forever. The stages differ on purpose:
+    * extract writes 'empty', which resume does NOT count as done (a fuller
+    * input may cover the bucket later); llm writes a 0-doc 'done', because
+    * its input is the frozen extract output and a rerun would yield the
+    * same nothing.
+    */
+  private def commitStage(spark: SparkSession, cfg: Config, stage: String,
+      claimed: Seq[Int], doneBefore: Int, startedTs: Instant, output: DataFrame,
+      counters: Seq[Column], emptyStatus: String): RunReport = {
+    val path = s"${cfg.outDir}/${StageData(stage)}"
+    output.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(path)
+    // explicit schema: an all-empty run writes a fileless directory, and
+    // schema inference over zero files would throw
+    val agg = spark.read.schema(output.schema).parquet(path)
+      .where(col("bucket").isin(claimed: _*))
+      .groupBy("bucket").agg(counters.head, counters.tail: _*)
+    val names = agg.columns.toSeq.tail
+    val perBucket = agg.collect().map(r => r.getInt(0) -> r.getValuesMap[Any](names)).toMap
+    val finishedTs = Some(Instant.now())
+    appendCkpt(spark, claimed.map(b => perBucket.get(b) match {
+      case Some(cs) => ckptRow(cfg.runId, stage, b, "done", startedTs, finishedTs, cs)
+      case None => ckptRow(cfg.runId, stage, b, emptyStatus, startedTs, finishedTs,
+        names.map(_ -> 0L).toMap)
+    }), cfg.outDir)
+    RunReport(cfg.numBuckets, doneBefore, perBucket.size,
+      perBucket.values.map(_("n_docs").asInstanceOf[Long]).sum)
   }
 
+  private def spanChars(spans: Column): Column =
+    aggregate(spans, lit(0L), (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))
+
   /** Run (or resume) the extraction job. Only buckets without a 'done'
-    * checkpoint are computed; their output directories are overwritten
-    * atomically via dynamic partition overwrite, so a re-run after a crash
-    * is idempotent.
+    * checkpoint are computed and committed through [[commitStage]].
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config): RunReport = {
     val done = doneBuckets(spark, cfg.outDir, Stage)
-    val startedTs = java.time.Instant.now().toString
-    writeRunningRows(spark, cfg,
-      (0 until cfg.numBuckets).filterNot(done), startedTs)
+    val claimed = (0 until cfg.numBuckets).filterNot(done)
+    val startedTs = Instant.now()
+    claim(spark, cfg, Stage, claimed, startedTs)
 
     // THE input scan: bucket + per-doc dead-letter count tagged in one
     // projection, persisted so the light/heavy split below re-reads the
@@ -218,13 +282,12 @@ object ExtractPipeline {
     // are dropped by the kernel, so the count must be taken from the input
     // side — but it is WRITTEN with the output and aggregated from there)
     val extracted = cfg.oversizeCapChars match {
-      case None => SkewSalter.extract(todo, cfg.heavyThreshold, cfg.chunkTarget)
+      case None => SkewSalter.extract(todo)
       case Some(cap) =>
         // V2 cap: both branches read the SAME persisted projection — still
         // one source scan; oversize docs keep a row (resume invariants:
         // data covers every input doc exactly once)
-        val chars = aggregate(col("spans"), lit(0L),
-          (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))
+        val chars = spanChars(col("spans"))
         val normal = todo.where(chars <= cap)
         val oversize = todo.where(chars > cap).select(
           col("doc_id"), col("bucket"), col("n_dead"),
@@ -234,82 +297,37 @@ object ExtractPipeline {
               col("doc_id"), lit("]")).as("text"),
             lit(null).cast("string").as("media_ref"),
             lit(0).as("offset"))).as("spans"))
-        SkewSalter.extract(normal, cfg.heavyThreshold, cfg.chunkTarget)
-          .unionByName(oversize)
+        SkewSalter.extract(normal).unionByName(oversize)
     }
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    extracted.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${cfg.outDir}/data")
+    val spans = col("spans")
+    val kinds = (k: String) => sum(size(filter(spans, s => s.getField("kind") === k)))
+    val report = commitStage(spark, cfg, Stage, claimed, done.size, startedTs,
+      extracted, Seq(
+        count(lit(1)).as("n_docs"),
+        sum(size(spans)).as("n_spans"),
+        sum(spanChars(spans)).as("text_chars"),
+        kinds("image").as("n_images"),
+        kinds("error").as("n_errors"),
+        sum(col("n_dead")).as("n_dead_letter")),
+      emptyStatus = "empty")
     todo.unpersist()
 
-    // per-bucket metrics from the WRITTEN output (reads back only the new
-    // buckets via partition pruning) — verifies the write like the
-    // reference's paranoid re-read (reference workers.py:91-109), but as a
-    // single scan instead of per-row round-trips
-    val written = spark.read.parquet(s"${cfg.outDir}/data")
-      .where(if (done.isEmpty) lit(true) else !col("bucket").isin(done.toSeq: _*))
-    val perBucket = written
-      .select(col("bucket"), col("spans"), col("n_dead"))
-      .groupBy("bucket")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(size(col("spans"))).as("n_spans"),
-        sum(aggregate(col("spans"), lit(0L),
-          (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))).as("text_chars"),
-        sum(size(filter(col("spans"), s => s.getField("kind") === "image"))).as("n_images"),
-        sum(size(filter(col("spans"), s => s.getField("kind") === "error"))).as("n_errors"),
-        sum(col("n_dead")).as("n_dead_letter"))
-      .cache() // consumed by the ckpt write, the empty-claim diff, and the report
-
-    val finishedTs = java.time.Instant.now().toString
-    appendCkpt(ckptRows(perBucket, cfg.runId, Stage, "done", startedTs,
-      Some(finishedTs),
-      counters = Seq("n_docs", "n_spans", "text_chars", "n_images",
-        "n_errors", "n_dead_letter").map(n => n -> col(n)).toMap),
-      cfg.outDir)
-
-    // claimed buckets with NO data in this run's input get a terminal
-    // 'empty' row (driver-local list, bounded by numBuckets): the stuck
-    // scan must not flag them forever, while resume (done-only) still
-    // recomputes them if a later input covers them
-    val withData = perBucket.select("bucket").collect().map(_.getInt(0)).toSet
-    val emptyClaimed = (0 until cfg.numBuckets)
-      .filterNot(done).filterNot(withData)
-    if (emptyClaimed.nonEmpty) {
-      import spark.implicits._
-      appendCkpt(ckptRows(emptyClaimed.toDF("bucket"), cfg.runId, Stage,
-        "empty", startedTs, Some(finishedTs),
-        counters = Seq("n_docs", "n_spans", "text_chars", "n_images",
-          "n_errors", "n_dead_letter").map(n => n -> lit(0L)).toMap),
-        cfg.outDir)
-    }
-
-    val lineage = spark.range(1).select(
-      lit(cfg.runId).as("run_id"),
-      lit(cfg.inputPath).as("input_path"),
-      lit(cfg.codeVersion).as("code_version"),
-      lit(s"""{"numBuckets":${cfg.numBuckets},"heavyThreshold":${cfg.heavyThreshold},"chunkTarget":${cfg.chunkTarget}}""").as("params_json"),
-      lit(finishedTs).cast("timestamp").as("run_ts"))
-    lineage.coalesce(1).write.mode(SaveMode.Append).parquet(s"${cfg.outDir}/_lineage")
-
-    val ran = perBucket.agg(
-      coalesce(sum("n_docs"), lit(0L)).as("docs"),
-      count(lit(1)).as("buckets")).collect()(0)
-    perBucket.unpersist()
-    RunReport(cfg.numBuckets, done.size, ran.getLong(1).toInt, ran.getLong(0))
+    val params = s"""{"numBuckets":${cfg.numBuckets},"heavyThreshold":""" +
+      s"""${SkewSalter.DefaultHeavyThreshold},"chunkTarget":${SkewSalter.DefaultChunkTarget}}"""
+    spark.createDataFrame(Seq(Row(cfg.runId, cfg.inputPath, BuildInfo.version,
+      params, Instant.now())).asJava, LineageSchema)
+      .write.mode(SaveMode.Append).parquet(s"${cfg.outDir}/_lineage")
+    report
   }
 
   /** P2/P3 as a CHECKPOINTED pipeline stage (reference workers.py:145-345:
     * the prompt→LLM→format chain that follows extraction), with the same
     * bucket-resume discipline as the extract stage: only buckets that are
     * extract-'done' but not llm-'done' are computed, claim rows make a
-    * crashed run visible to the stuck scan, and the bucketed dynamic
-    * partition overwrite keeps re-runs idempotent. Layout adds
-    * `llm/bucket=N/` rows `(doc_id, full_prompt, llm_response, llm_error,
-    * llm_attempts, formatted_response)`; dead-lettered transport failures
+    * crashed run visible to the stuck scan, and [[commitStage]] commits
+    * them. Layout adds `llm/bucket=N/` rows `(doc_id, full_prompt,
+    * llm_response, llm_error, llm_attempts, formatted_response)`; dead-lettered transport failures
     * are ROWS here (`llm_error` set), counted per bucket in `n_errors`.
     *
     * The transport is the pluggable [[graft.llm.LlmStage.LlmTransport]]
@@ -325,15 +343,13 @@ object ExtractPipeline {
       maxRetries: Int = graft.llm.LlmStage.MaxRetries,
       backoffMs: Int => Long = graft.llm.LlmStage.referenceBackoffMs): RunReport = {
     import graft.llm.LlmStage
-    import graft.textops.LlmFormat
-    val LlmStageName = "llm"
-    val doneExtract = doneBuckets(spark, cfg.outDir, Stage)
-    val doneLlm = doneBuckets(spark, cfg.outDir, LlmStageName)
-    val todo = (doneExtract -- doneLlm).toSeq.sorted
+    val done = doneByStage(spark, cfg.outDir)
+    val doneLlm = done.getOrElse(LlmStageName, Set.empty)
+    val todo = (done.getOrElse(Stage, Set.empty) -- doneLlm).toSeq.sorted
     if (todo.isEmpty)
       return RunReport(cfg.numBuckets, doneLlm.size, 0, 0L)
-    val startedTs = java.time.Instant.now().toString
-    writeRunningRows(spark, cfg, todo, startedTs, LlmStageName)
+    val startedTs = Instant.now()
+    claim(spark, cfg, LlmStageName, todo, startedTs)
 
     // prompt build (L1) over the STORED extracted text, pruned to the
     // resumable buckets (prompt/format expressions shared with the
@@ -352,48 +368,10 @@ object ExtractPipeline {
       .withColumn("formatted_response", LlmStage.formattedCol(col("llm_response")))
       .join(bucketOfDoc, Seq("doc_id"))
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    replied.write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket").parquet(s"${cfg.outDir}/llm")
-
-    // commit from the WRITTEN output (same re-read discipline as extract).
-    // Explicit schema: an all-empty run writes a fileless directory, and
-    // schema inference over zero files would throw — with the schema given
-    // it reads as an empty table and the empty-claim path below closes the
-    // buckets.
-    val written = spark.read.schema(replied.schema).parquet(s"${cfg.outDir}/llm")
-      .where(col("bucket").isin(todo: _*))
-    val perBucket = written.groupBy("bucket").agg(
-      count(lit(1)).as("n_docs"),
-      sum(when(col("llm_error").isNotNull, 1L).otherwise(0L)).as("n_errors"))
-      .cache()
-    val finishedTs = java.time.Instant.now().toString
-    appendCkpt(ckptRows(perBucket, cfg.runId, LlmStageName, "done",
-      startedTs, Some(finishedTs),
-      counters = Map("n_docs" -> col("n_docs"), "n_errors" -> col("n_errors"))),
-      cfg.outDir)
-
-    // claimed buckets that produced NO output rows (e.g. every row dropped
-    // for a null doc_id) still need a terminal checkpoint: unlike the
-    // extract stage's 'empty' (recomputable — a fuller INPUT may cover the
-    // bucket later), the llm input is the frozen extract output, so a
-    // rerun would yield the same nothing — a 0-doc 'done' row closes the
-    // claim, or the stuck scan flags the bucket forever and every resume
-    // recomputes it
-    val withData = perBucket.select("bucket").collect().map(_.getInt(0)).toSet
-    val emptyClaimed = todo.filterNot(withData)
-    if (emptyClaimed.nonEmpty) {
-      import spark.implicits._
-      appendCkpt(ckptRows(emptyClaimed.toDF("bucket"), cfg.runId,
-        LlmStageName, "done", startedTs, Some(finishedTs),
-        counters = Map("n_docs" -> lit(0L), "n_errors" -> lit(0L))),
-        cfg.outDir)
-    }
-
-    val ran = perBucket.agg(
-      coalesce(sum("n_docs"), lit(0L)), count(lit(1))).collect()(0)
-    perBucket.unpersist()
-    RunReport(cfg.numBuckets, doneLlm.size, ran.getLong(1).toInt, ran.getLong(0))
+    commitStage(spark, cfg, LlmStageName, todo, doneLlm.size, startedTs, replied,
+      Seq(count(lit(1)).as("n_docs"),
+        sum(when(col("llm_error").isNotNull, 1L).otherwise(0L)).as("n_errors")),
+      emptyStatus = "done")
   }
 
   /** The per-bucket metrics view (the VERBOSE counter logs of the
@@ -403,14 +381,8 @@ object ExtractPipeline {
     * store to keep consistent.
     */
   def metrics(spark: SparkSession, outDir: String): DataFrame = {
-    val path = s"$outDir/_checkpoints"
-    recoverStore(spark, path)
-    if (!fileExists(spark, path))
-      return emptyCkptView(spark, "bucket INT, run_id STRING, n_docs BIGINT, " +
-        "n_spans BIGINT, text_chars BIGINT, n_images BIGINT, n_errors BIGINT, " +
-        "n_dead_letter BIGINT, finished_ts TIMESTAMP")
     val w = Window.partitionBy("bucket").orderBy(desc("finished_ts"))
-    spark.read.parquet(path)
+    readCkpt(spark, outDir)
       .where(col("stage") === Stage && col("status") === "done")
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
@@ -424,18 +396,10 @@ object ExtractPipeline {
     */
   def verifyCheckpoints(spark: SparkSession, outDir: String,
       stage: String = Stage): DataFrame = {
-    val path = s"$outDir/_checkpoints"
-    val dataPath = s"$outDir/${StageData(stage)}"
-    recoverStore(spark, path)
-    val ckpt = (if (fileExists(spark, path))
-      spark.read.parquet(path)
-        .where(col("stage") === stage && col("status") === "done")
-        .select("bucket", "n_docs")
-    else emptyCkptView(spark, "bucket INT, n_docs BIGINT"))
+    val ckpt = readCkpt(spark, outDir)
+      .where(col("stage") === stage && col("status") === "done")
       .groupBy("bucket").agg(max("n_docs").as("ckpt_docs"))
-    val actual = (if (fileExists(spark, dataPath))
-      spark.read.parquet(dataPath).select("bucket")
-    else emptyCkptView(spark, "bucket INT"))
+    val actual = readStore(spark, s"$outDir/${StageData(stage)}", BucketOnly)
       .groupBy("bucket").agg(count(lit(1)).as("data_docs"))
     // a 0-doc 'done' bucket legitimately has NO data partition (the llm
     // stage closes claims that produced no rows that way) — missing data
@@ -454,17 +418,12 @@ object ExtractPipeline {
     */
   def staleCheckpoints(spark: SparkSession, outDir: String,
       olderThanHours: Double, stage: String = Stage): DataFrame = {
-    val path = s"$outDir/_checkpoints"
-    recoverStore(spark, path)
-    if (!fileExists(spark, path)) // nothing claimed yet => nothing stuck
-      return emptyCkptView(spark,
-        "run_id STRING, bucket INT, status STRING, started_ts TIMESTAMP")
-    val ckpt = spark.read.parquet(path).where(col("stage") === stage)
     // ties (a run's running+done rows share started_ts): 'done' wins
     val w = Window.partitionBy("bucket")
       .orderBy(desc("started_ts"), asc("status"))
     val olderThanSec = math.round(olderThanHours * 3600)
-    ckpt.withColumn("rn", row_number().over(w))
+    readCkpt(spark, outDir).where(col("stage") === stage)
+      .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1 && col("status") === "running" &&
         col("started_ts") < current_timestamp() - expr(s"INTERVAL $olderThanSec SECONDS"))
       .select("run_id", "bucket", "status", "started_ts")
@@ -483,16 +442,17 @@ object ExtractPipeline {
     */
   def cleanupCheckpoints(spark: SparkSession, outDir: String, maxAgeHours: Int): Long = {
     val cutoff = current_timestamp() - expr(s"INTERVAL $maxAgeHours HOURS")
-    rewriteKeeping(spark, s"$outDir/_lineage", col("run_ts") >= cutoff)
-    rewriteKeeping(spark, s"$outDir/_checkpoints", col("finished_ts") >= cutoff ||
+    rewriteKeeping(spark, s"$outDir/_lineage", LineageSchema, col("run_ts") >= cutoff)
+    rewriteKeeping(spark, s"$outDir/_checkpoints", CkptSchema, col("finished_ts") >= cutoff ||
       // keep 'running' rows younger than the cutoff too (no finished_ts)
       (col("finished_ts").isNull && col("started_ts") >= cutoff))
   }
 
   /** Small-file compaction for the checkpoint + lineage stores, with no
     * retention cut: every run appends one `coalesce(1)` parquet file per
-    * write (claim rows, done rows, empty rows, lineage), so thousands of
-    * runs leave thousands of tiny files that `metrics`/`doneBuckets`
+    * write (a stage run's claim rows, its commit rows, an extract run's
+    * lineage row), so thousands of runs leave thousands of tiny files that
+    * `metrics`/`doneBuckets`
     * re-list on every call. The crash-safe rewrite in [[rewriteKeeping]]
     * already lands the whole store in one file — this entry point runs it
     * with `keep = true` so operators can compact WITHOUT expiring rows
@@ -503,15 +463,16 @@ object ExtractPipeline {
     * convention as [[cleanupCheckpoints]]). Single-writer, like cleanup.
     */
   def compactCheckpoints(spark: SparkSession, outDir: String): Long = {
-    rewriteKeeping(spark, s"$outDir/_lineage", lit(true))
-    rewriteKeeping(spark, s"$outDir/_checkpoints", lit(true))
+    rewriteKeeping(spark, s"$outDir/_lineage", LineageSchema, lit(true))
+    rewriteKeeping(spark, s"$outDir/_checkpoints", CkptSchema, lit(true))
   }
 
   private def rewriteKeeping(spark: SparkSession, path: String,
-      keep: org.apache.spark.sql.Column): Long = {
-    recoverStore(spark, path) // a crashed prior rewrite left only <path>_old
+      schema: StructType, keep: Column): Long = {
+    // readStore restores a crashed prior rewrite that left only <path>_old
+    val store = readStore(spark, path, schema)
     if (!fileExists(spark, path)) return 0L
-    val kept = spark.read.parquet(path).where(keep).cache()
+    val kept = store.where(keep).cache()
     val n = kept.count()
     kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"${path}_tmp")
     kept.unpersist()

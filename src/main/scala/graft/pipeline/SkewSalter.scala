@@ -38,8 +38,7 @@ object SkewSalter {
     */
   def extract(docs: DataFrame,
       heavyThreshold: Int = DefaultHeavyThreshold,
-      chunkTarget: Int = DefaultChunkTarget,
-      chunkParallelism: Option[Int] = None): DataFrame = {
+      chunkTarget: Int = DefaultChunkTarget): DataFrame = {
     val extra = docs.columns.filterNot(c => c == "doc_id" || c == "spans").toSeq
 
     val light = docs.where(size(col("spans")) <= heavyThreshold)
@@ -52,11 +51,7 @@ object SkewSalter {
       (col("doc_id") +: extra.map(col) :+
         posexplode(SpanChunker.chunk_spans(col("spans"), lit(chunkTarget)))
           .as(Seq("chunk_id", "chunk"))): _*)
-    val spread = chunkParallelism match {
-      case Some(p) => chunked.repartition(p, col("doc_id"), col("chunk_id"))
-      case None => chunked.repartition(col("doc_id"), col("chunk_id"))
-    }
-    val extractedChunks = spread.select(
+    val extractedChunks = chunked.repartition(col("doc_id"), col("chunk_id")).select(
       (col("doc_id") +: extra.map(col) :+
         col("chunk_id") :+
         ExtractKernel.extract_spans(col("chunk"), col("doc_id")).as("spans")): _*)

@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.extract.Extractor
+import graft.pipeline.ExtractPipeline
 import graft.synth.SpanSynth
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,7 +80,7 @@ object Queries {
     * directory before listing a single file.
     */
   def bucketOf(spark: SparkSession, docId: String, numBuckets: Int): Int =
-    graft.pipeline.ExtractPipeline.bucketOfId(spark, docId, numBuckets)
+    ExtractPipeline.bucketOfId(spark, docId, numBuckets)
 
   /** Q1 over the STORED table: queue scan + sort reading the pipeline's
     * `data/` output instead of re-extracting — the serving path of a
@@ -94,20 +95,14 @@ object Queries {
     * layout from the store instead of trusting a caller — a wrong bucket
     * count would make every lookup silently return zero rows.
     */
-  def storedNumBuckets(spark: SparkSession, outDir: String): Option[Int] = {
-    val path = s"$outDir/_lineage"
-    // same crash self-heal as the pipeline readers: a cleanup/compaction
-    // crash between its two renames leaves only _lineage_old, which is
-    // recoverable — the serving layer must not read that as "no store"
-    graft.pipeline.ExtractPipeline.recoverStore(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return None
-    spark.read.parquet(path).orderBy(desc("run_ts"))
-      .select("params_json").limit(1).collect().headOption
+  def storedNumBuckets(spark: SparkSession, outDir: String): Option[Int] =
+    // the pipeline's store reader: it self-heals a cleanup/compaction crash
+    // between its two renames (only _lineage_old left), which the serving
+    // layer must not read as "no store", and reads with the writer's schema
+    ExtractPipeline.readStore(spark, s"$outDir/_lineage", ExtractPipeline.LineageSchema)
+      .orderBy(desc("run_ts")).select("params_json").limit(1).collect().headOption
       .flatMap(r => """"numBuckets":(\d+)""".r
         .findFirstMatchIn(r.getString(0)).map(_.group(1).toInt))
-  }
 
   /** Q2 over the STORED table: point lookup with an explicit bucket
     * predicate, so partition pruning reduces the scan to ONE bucket

@@ -265,9 +265,14 @@ object TextAnalysis {
     */
   private def termTfBase(spark: SparkSession, sfDir: String): DataFrame = {
     val d = loadDocs(spark, sfDir)
-    // the counter array stages in its own projection (one native pass;
-    // see WordStats — the HOF form re-ran split + |terms| filters)
-    d.select(d("doc_id"), WordStats.termCounts(d("text"), SearchTerms).as("tc"))
+    // the counter array (one native pass; see WordStats — the HOF form
+    // re-ran split + |terms| filters) is the output of a one-row
+    // generator, not of a projection: filter pushdown substitutes a
+    // projection's aliases into the conjunction Filter, re-inlining the
+    // kernel once per term, but it cannot move a predicate on generator
+    // output below the generator — so the kernel runs once per scan
+    d.select(d("doc_id"),
+        explode(array(WordStats.termCounts(d("text"), SearchTerms))).as("tc"))
       .select(col("doc_id") +: element_at(col("tc"), 1).as("dl") +:
         SearchTerms.indices.map(i =>
           element_at(col("tc"), i + 2).as(s"tf$i")): _*)

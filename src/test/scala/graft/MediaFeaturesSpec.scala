@@ -39,6 +39,27 @@ class MediaFeaturesSpec extends AnyFunSuite with SparkSpec {
     assert((t.width, t.height, t.format, t.byte_size) === ((0, 0, "unknown", 12L)))
   }
 
+  test("decode and encode leave ImageIO's process-wide cache setting as found") {
+    import javax.imageio.ImageIO
+    val (useCache, cacheDir) = (ImageIO.getUseCache, ImageIO.getCacheDirectory)
+    // file caching on, into a directory that is gone: a decode that goes
+    // through ImageIO's cache-backed streams dead-letters, and one that
+    // flips the setting off is caught by the getUseCache check
+    val gone = java.nio.file.Files.createTempDirectory("graft-imageio").toFile
+    try {
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(gone)
+      gone.delete()
+      val f = MediaFeatures.decodeBlob(
+        MediaBlob("d", "m://c", 0, MediaFeatures.synthPng("m://c", 6, 4)))
+      assert((f.width, f.height, f.format) === ((6, 4, "png")))
+      assert(ImageIO.getUseCache)
+    } finally {
+      ImageIO.setCacheDirectory(cacheDir)
+      ImageIO.setUseCache(useCache)
+    }
+  }
+
   test("null payload falls back to the deterministic stub") {
     val f = MediaFeatures.decodeBlob(MediaBlob("d", "media://d/0", 1, null))
     assert(f === MediaFeatures.decodeOne(MediaRef("d", "media://d/0", 1)))

@@ -58,6 +58,18 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
 
+  /** The search pair scans its input twice (stats branch, probe branch):
+    * `term_counts` must run once per scan, and filter pushdown must not
+    * re-inline it into the conjunction Filter.
+    */
+  private def assertTermCountsOncePerScan(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = optimized(df)
+    assert(count(plan, "graft.Kernels.term_counts(") === 2, s"\n$plan")
+    val filters = plan.linesIterator.filter(_.contains("Filter ")).toSeq
+    assert(filters.nonEmpty, s"\n$plan")
+    assert(!filters.exists(_.contains("term_counts")), s"\n$plan")
+  }
+
   test("repetition evaluates the repetition_fracs kernel once per row") {
     val plan = optimized(graft.textops.TextAnalysis.repetition(spark, sf))
     assert(count(plan, "graft.Kernels.repetition_fracs(") === 1, s"\n$plan")
@@ -293,6 +305,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   test("text_search: in-row tf counters, one-row broadcast stats, top-k") {
     val df = graft.textops.TextAnalysis.searchRank(spark, sf)
     val phys = df.queryExecution.executedPlan.toString
+    assertTermCountsOncePerScan(df)
     // round-6 shape: per-doc tf counts compute in-row (no posting
     // explode), so NO keyed exchange exists at all — the only shuffle
     // is the bounded one-row stats aggregate, broadcast back over the
@@ -309,6 +322,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   test("bm25 search: in-row tf+dl counters, one-row broadcast stats, top-k") {
     val df = graft.textops.TextAnalysis.bm25Search(spark, sf)
     val phys = df.queryExecution.executedPlan.toString
+    assertTermCountsOncePerScan(df)
     // round-6 shape: tf_i and dl ride the same in-row projection, so
     // the round-5 postings<->lengths equi-join is gone along with every
     // keyed exchange; stats (N, sum dl, df_i) are one bounded one-row

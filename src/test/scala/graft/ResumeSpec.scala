@@ -66,6 +66,36 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     assert(fromCkpt.getLong(2) === actual.getLong(2))
     // lineage row written per run
     assert(spark.read.parquet(s"$out/_lineage").count() === 1)
+
+    // more buckets than the input covers: every claimed bucket without
+    // rows closes as 'empty' with zero counters, in the same commit file
+    // as the done rows — one claim file plus one commit file per run
+    val sparse = freshDir()
+    val B = 8
+    val partial = input.where(ExtractPipeline.bucketCol(B) < 3)
+    val r = ExtractPipeline.run(spark, partial,
+      ExtractPipeline.Config(sparse, "run-1", numBuckets = B))
+    assert(r.bucketsRun === 3 && r.docsProcessed === partial.count())
+    val files = Option(new java.io.File(s"$sparse/_checkpoints").listFiles()).toSeq
+      .flatten.count(_.getName.endsWith(".parquet"))
+    assert(files === 2)
+    val rows = spark.read.parquet(s"$sparse/_checkpoints").where(col("status") =!= "running")
+      .orderBy("bucket").collect()
+    assert(rows.map(_.getAs[Int]("bucket")).toSeq === (0 until B))
+    assert(rows.map(_.getAs[String]("status")).toSeq ===
+      Seq.fill(3)("done") ++ Seq.fill(B - 3)("empty"))
+    val counters = Seq("n_docs", "n_spans", "text_chars", "n_images", "n_errors",
+      "n_dead_letter")
+    rows.drop(3).foreach(row => counters.foreach(c => assert(row.getAs[Long](c) === 0L)))
+    val perBucket = spark.read.parquet(s"$sparse/data").groupBy("bucket")
+      .agg(count(lit(1)), sum(size(col("spans")))).collect()
+      .map(x => x.getInt(0) -> ((x.getLong(1), x.getLong(2)))).toMap
+    rows.take(3).foreach { row =>
+      assert((row.getAs[Long]("n_docs"), row.getAs[Long]("n_spans")) ===
+        perBucket(row.getAs[Int]("bucket")))
+    }
+    assert(spark.read.parquet(s"$sparse/_checkpoints").where(col("status") === "running")
+      .count() === B)
   }
 
   test("resumed buckets overwrite idempotently (no duplicate docs)") {
