@@ -33,7 +33,7 @@ object Dedup {
 
   import PortableHash._
 
-  /** Persisted shingle/signature/scored-pair tables go through the
+  /** Persisted shingle/signature/fingerprint tables go through the
     * shared [[SessionMemo]] (rationale there).
     */
   private def memoized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
@@ -64,31 +64,51 @@ object Dedup {
 
   /** Column-op reference formula for the Jaccard verify stage (what the
     * DuckDB oracle mirrors; parity with the native `jaccard` kernel is
-    * pinned in PortableHashSpec). Not used in the execution path: Catalyst
-    * pushes the threshold filter into the bucket join's condition and
-    * re-inlines the whole tree — round-2 plans showed `array_intersect`
-    * THREE times per candidate pair.
+    * pinned in PortableHashSpec). Not used in the execution path: it
+    * references `array_intersect` twice, and wherever filter pushdown can
+    * inline it into a condition it runs once more per reference. The
+    * native kernel runs once per pair as the output of [[nearPairs]]'s
+    * one-row generator.
     */
   def jaccardColumnar(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b))
     round(inter.cast("double") / (size(a) + size(b) - inter).cast("double"), 6)
   }
 
-  /** Score candidate pairs with the native single-pass `jaccard` kernel and
-    * MATERIALIZE the scored table (id_a, id_b, jaccard) — three narrow
-    * columns — so the downstream threshold filter reads scored rows
-    * instead of being pushed into the join condition (which would
-    * re-evaluate the kernel once in the condition and once in the
-    * projection). One kernel evaluation per candidate pair, total.
-    * At deployment scale the scored-pair table is the natural persisted
-    * stage boundary of a dedup pipeline anyway.
+  /** Near-duplicate pairs by blocking, then verification: each pair
+    * `id_a < id_b` of `keyed` (`id`, `keys: array<struct>`, payload…)
+    * that shares at least one key, exactly once, as
+    * `(id_a, id_b, <score>)` where `keep` holds, ordered by the ids.
+    *
+    *  - Blocking is a self-join of the exploded keys; it carries `id` and
+    *    `keys`, never the payload.
+    *  - Comparison is redundancy-free (SparkER, EDBT 2019): a pair meets
+    *    once per key it shares, and only the meeting at the first key of
+    *    `a`'s array that `b` also holds survives, so no `distinct` is
+    *    needed. The test is that no key before `k` in `a`'s array is one
+    *    of `b`'s (`arrays_overlap` is null, not false, when an array
+    *    holds a null key; null keys never join).
+    *  - The payload joins back on each side as `<col>_a` / `<col>_b`,
+    *    which `verify` reads. The score is the output of a one-row
+    *    generator (`explode(array(...))`): filter pushdown cannot move
+    *    `keep` below a generator, so it cannot copy the verify kernel into
+    *    the join condition, and the kernel runs once per pair.
     */
-  private def withJaccard(spark: SparkSession, memoKey: String,
-      pairs: => DataFrame): DataFrame =
-    memoized(spark, memoKey) {
-      pairs.select(col("id_a"), col("id_b"),
-        Jaccard.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-    }
+  private[textops] def nearPairs(keyed: DataFrame, score: String, verify: Column,
+      keep: Column): DataFrame = {
+    val blocks = keyed.select(col("id"), array_distinct(col("keys")).as("keys"))
+      .select(col("id"), col("keys"), posexplode(col("keys")).as(Seq("p", "k")))
+    val sharedBefore = arrays_overlap(slice(col("a.keys"), lit(1), col("a.p")), col("b.keys"))
+    val cand = blocks.as("a").join(blocks.as("b"), col("a.k") === col("b.k") &&
+        col("a.id") < col("b.id") && !coalesce(sharedBefore, lit(false)))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val payload = keyed.drop("keys")
+    def side(s: String) = payload.select(payload.columns.map(c => col(c).as(s"${c}_$s")): _*)
+    cand.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_a"), col("id_b"), explode(array(verify)).as(score))
+      .where(keep)
+      .orderBy("id_a", "id_b")
+  }
 
   /** N-gram Jaccard near-dup with composite blocking: candidate pairs must
     * share (first-[[BlockWords]]-words prefix, shingle-count bucket).
@@ -106,8 +126,8 @@ object Dedup {
     * t >= 0.25 and silently dropped pairs below it), while a same-prefix
     * block of mixed sizes still splits into bounded sub-blocks.
     *
-    * Join shape mirrors MinHash-LSH: the block join carries only
-    * (doc_id, key), candidate ids dedupe BEFORE shingle arrays join back.
+    * The keys are `(block, lb + i)`; a pair is verified at its first
+    * shared key, `(block, max(lb_a, lb_b))` ([[nearPairs]]).
     */
   def ngramJaccard(spark: SparkSession, sfDir: String,
       threshold: Double = 0.4): DataFrame = {
@@ -127,24 +147,11 @@ object Dedup {
         .withColumn("lb",
           (length(conv(size(col("sh")).cast("string"), 10, 2)) - 1).cast("int"))
     }
-    // keyed by the DERIVED span, not the raw threshold: thresholds with
-    // the same span (e.g. 0.4 and 0.45) produce byte-identical scored
-    // tables and share one cache entry
-    val scored = withJaccard(spark, s"$sfDir#ngram-scored-span$span", {
-      val keyed = base.select(col("doc_id"), col("block"),
-        explode(array((0 to span).map(i => col("lb") + i): _*)).as("lb"))
-      val a = keyed.select(col("doc_id").as("id_a"), col("block"), col("lb"))
-      val b = keyed.select(col("doc_id").as("id_b"), col("block"), col("lb"))
-      val cand = a.join(b, Seq("block", "lb")).where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      val sh = base.select(col("doc_id"), col("sh"))
-      cand
-        .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    })
-    scored
-      .where(col("jaccard") >= threshold)
-      .orderBy("id_a", "id_b")
+    val keyed = base.select(col("doc_id").as("id"),
+      array((0 to span).map(i => struct(col("block"), (col("lb") + i).as("lb"))): _*).as("keys"),
+      col("sh"))
+    nearPairs(keyed, "jaccard", graft.Kernels.Jaccard(col("sh_a"), col("sh_b")),
+      col("jaccard") >= threshold)
   }
 
   /** Per-doc MinHash signature columns sig0..sig{K-1} plus shingles.
@@ -167,39 +174,21 @@ object Dedup {
     base.select((col("doc_id") +: col("sh") +: sigCols): _*)
   }
 
-  /** MinHash+LSH near-dup: shingle → K minhashes → band keys → bucket
-    * self-join → exact-Jaccard verification at [[JaccardThreshold]].
-    *
-    * Shape notes for scale: the band self-join carries ONLY (doc_id, band,
-    * key) — shingle arrays would bloat the exchange; candidate ids dedupe
-    * BEFORE the arrays are joined back for verification, so each shingle
-    * array crosses the wire once per surviving candidate, not once per
-    * matching band.
+  /** MinHash+LSH near-dup: shingle → K minhashes → `(band, md5)` keys →
+    * [[nearPairs]] → exact-Jaccard verification at [[JaccardThreshold]].
+    * The signature table is memoized: shingling and hashing run once.
     */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val rows = MinHashK / Bands
-    // the signature table feeds both band-join sides AND the verify joins;
-    // memoized-persist so shingling+hashing runs once (at scale: a
-    // materialized signature table, the standard two-job MinHash layout)
     val sigs = memoized(spark, s"$sfDir#minhash-sigs")(signatures(spark, sfDir))
-    val scored = withJaccard(spark, s"$sfDir#minhash-scored", {
-      val bandKeys = (0 until Bands).map { b =>
-        md5(concat_ws(",", (0 until rows).map(r => col(s"sig${b * rows + r}").cast("string")): _*))
-      }
-      val banded = sigs.select(col("doc_id"),
-        posexplode(array(bandKeys: _*)).as(Seq("band", "key")))
-      val a = banded.select(col("doc_id").as("id_a"), col("band"), col("key"))
-      val b = banded.select(col("doc_id").as("id_b"), col("band"), col("key"))
-      val cand = a.join(b, Seq("band", "key")).where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      val sh = sigs.select(col("doc_id"), col("sh"))
-      cand
-        .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    })
-    scored
-      .where(col("jaccard") >= JaccardThreshold)
-      .orderBy("id_a", "id_b")
+    val keyed = sigs.select(col("doc_id").as("id"),
+      array((0 until Bands).map { b =>
+        struct(lit(b).as("band"), md5(concat_ws(",",
+          (0 until rows).map(r => col(s"sig${b * rows + r}").cast("string")): _*)).as("key"))
+      }: _*).as("keys"),
+      col("sh"))
+    nearPairs(keyed, "jaccard", graft.Kernels.Jaccard(col("sh_a"), col("sh_b")),
+      col("jaccard") >= JaccardThreshold)
   }
 
   /** 60-bit SimHash fingerprint per doc (native [[SimHash]] expression;
@@ -212,35 +201,22 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** SimHash near-dup: banded Hamming join — pairs sharing any of the 4
-    * 15-bit fingerprint bands are candidates; `bit_count(xor) <= 3`
-    * verifies, with GUARANTEED recall (pigeonhole over the bands).
+  /** SimHash near-dup: pairs sharing any of the 4 15-bit `(band, bkey)`
+    * fingerprint bands are candidates ([[nearPairs]]); `bit_count(xor)
+    * <= 3` verifies, with GUARANTEED recall (pigeonhole over the bands).
     * 15-bit bands keep bucket sizes small even on clustered corpora —
-    * 8-bit bands measured 25x slower here from candidate blow-up.
+    * 8-bit bands measured 25x slower here from candidate blow-up. The
+    * fingerprints are memoized: the native simhash pass runs once per doc.
     */
   def simhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    // both self-join sides read the fingerprints — memoized-persist so the
-    // native simhash pass runs once per doc
     val fps = memoized(spark, s"$sfDir#simhash-fps")(simhashFingerprints(spark, sfDir))
-    val bands = fps.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until SimHash.Bands).map(j =>
+    val keyed = fps.select(col("doc_id").as("id"),
+      array((0 until SimHash.Bands).map(j => struct(lit(j).as("band"),
         shiftright(col("simhash"), j * SimHash.BandBits)
-          .bitwiseAND(SimHash.BandMask)): _*)).as(Seq("band", "bkey")))
-    val a = bands.select(col("doc_id").as("id_a"), col("simhash").as("fp_a"),
-      col("band"), col("bkey"))
-    val b = bands.select(col("doc_id").as("id_b"), col("simhash").as("fp_b"),
-      col("band"), col("bkey"))
-    // hamming + threshold BEFORE the dedup aggregate (round 6): a pair's
-    // hamming is determined by its fingerprints, so filtering first
-    // keeps exactly the same survivors while the distinct only sees the
-    // (rare) true near-dups instead of every band collision — guide
-    // §2.3, shuffle fewer bytes into the aggregate
-    a.join(b, Seq("band", "bkey")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-      .where(col("hamming") <= SimHashMaxHamming)
-      .distinct()
-      .orderBy("id_a", "id_b")
+          .bitwiseAND(SimHash.BandMask).as("bkey"))): _*).as("keys"),
+      col("simhash").as("fp"))
+    nearPairs(keyed, "hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))),
+      col("hamming") <= SimHashMaxHamming)
   }
 
   /** Duplicate-PASSAGE threshold for [[dupPassages]]: drop a doc when

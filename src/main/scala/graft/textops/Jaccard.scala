@@ -1,6 +1,5 @@
 package graft.textops
 
-import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact Jaccard similarity of two DISTINCT string arrays in one pass —
@@ -8,12 +7,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: the column-op formula
   * `size(array_intersect(a,b)) / (size(a)+size(b)-size(array_intersect))`
-  * references `array_intersect` twice, and Catalyst's filter pushdown
-  * re-inlines the whole expression into the bucket join's condition —
-  * round-2 plans showed THREE `array_intersect` evaluations per candidate
-  * pair on the dominant verify stage (each one building a hash set). This
-  * expression builds one hash set per pair and computes
-  * intersection + union sizes in a single membership sweep.
+  * builds a hash set per `array_intersect` reference, two per pair. This
+  * kernel builds one hash set per pair and computes intersection + union
+  * sizes in a single membership sweep. Its callers run it once per pair
+  * as the output of [[Dedup.nearPairs]]'s one-row generator, which filter
+  * pushdown cannot inline into the threshold's condition.
   *
   * Semantics are pinned to the column-op twin [[Dedup.jaccardColumnar]]
   * (what the DuckDB oracle mirrors): inputs are distinct arrays, result is
@@ -42,6 +40,4 @@ object Jaccard {
     if (union == 0) j
     else BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
-
-  def jaccard(a: Column, b: Column): Column = graft.Kernels.Jaccard(a, b)
 }

@@ -220,32 +220,21 @@ object Similarity {
       .limit(TopK)
   }
 
-  /** Embedding-cosine near-dup over the planted corpus: 4x16-bit banded
-    * signature self-join (same layout as MinHash LSH — the signature table
-    * persists, the band join carries only (vec_id, tbl, bucket), candidate
-    * ids dedupe BEFORE vectors join back), then one exact cosine per
-    * surviving pair with precomputed norms.
+  /** Embedding-cosine near-dup over the planted corpus: the 4x16-bit
+    * signatures become `(tbl, bucket)` keys for [[Dedup.nearPairs]], then
+    * one exact cosine per candidate pair with the norms precomputed in
+    * the memoized vector table.
     */
   def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     val vecs = memoized(spark, s"$sfDir#neardup-vecs") {
       withNorm(plantedCorpus(spark, sfDir))
     }
-    val buckets = memoized(spark, s"$sfDir#neardup-sigs") {
-      vecs.select(col("vec_id"),
-        posexplode(rhSignatures(col("e"), NearDupTables, NearDupBits))
-          .as(Seq("tbl", "bucket")))
-    }
-    val a = buckets.select(col("vec_id").as("id_a"), col("tbl"), col("bucket"))
-    val b = buckets.select(col("vec_id").as("id_b"), col("tbl"), col("bucket"))
-    val cand = a.join(b, Seq("tbl", "bucket")).where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val side = vecs.select(col("vec_id"), col("e"), col("nrm"))
-    cand
-      .join(side.select(col("vec_id").as("id_a"), col("e").as("e_a"), col("nrm").as("n_a")), Seq("id_a"))
-      .join(side.select(col("vec_id").as("id_b"), col("e").as("e_b"), col("nrm").as("n_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")), 6).as("sim"))
-      .where(col("sim") >= NearDupCosine)
-      .orderBy("id_a", "id_b")
+    val keyed = vecs.select(col("vec_id").as("id"),
+      transform(rhSignatures(col("e"), NearDupTables, NearDupBits),
+        (sig, t) => struct(t.as("tbl"), sig.as("bucket"))).as("keys"),
+      col("e"), col("nrm"))
+    Dedup.nearPairs(keyed, "sim",
+      round(dot(col("e_a"), col("e_b")) / (col("nrm_a") * col("nrm_b")), 6),
+      col("sim") >= NearDupCosine)
   }
 }

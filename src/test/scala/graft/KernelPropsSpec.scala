@@ -1,6 +1,7 @@
 package graft
 
-import graft.textops.{Ivf, Jaccard}
+import graft.textops.{Ivf, Jaccard, SimHash, Similarity}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -73,6 +74,49 @@ class KernelPropsSpec extends AnyFunSuite {
       Ivf.Centroids.indices.filterNot(lists.contains).foreach { o =>
         assert(Ordering[(Double, Int)].gt((Ivf.distSq(v, Ivf.Centroids(o)), o), worstIn))
       }
+    }
+  }
+
+  /** A vector of random length around `Dim`, some elements null. */
+  private val ragged: Gen[Array[Any]] = for {
+    n <- Gen.frequency(3 -> Gen.const(Similarity.Dim), 1 -> Gen.choose(0, Similarity.Dim + 2))
+    xs <- Gen.listOfN(n, Gen.frequency(
+      9 -> Gen.chooseNum(-1000, 1000).map(x => (x / 1000.0): Any), 1 -> Gen.const(null)))
+  } yield xs.toArray
+
+  private def doubles(a: Array[Any]): Option[Array[Double]] =
+    if (a.contains(null)) None else Some(a.map(_.asInstanceOf[Double]))
+
+  test("dot_fold is total: the left fold, or null on unequal lengths or a null element") {
+    cases(Gen.zip(ragged, Gen.oneOf(true, false), ragged)) { case (a, same, b0) =>
+      val b = if (same) a.map(x => if (x == null) null else (x.asInstanceOf[Double] * 0.5): Any) else b0
+      val got = Kernels.dot_fold(new GenericArrayData(a), new GenericArrayData(b))
+      (doubles(a), doubles(b)) match {
+        case (Some(x), Some(y)) if x.length == y.length =>
+          assert(got === Similarity.dotScala(x, y))
+        case _ => assert(got === null)
+      }
+    }
+  }
+
+  test("rh_signatures is total: the signatures, or all zeros off Dim or on a null element") {
+    val kernel = Kernels.BoundRhSignatures(Similarity.NearDupTables, Similarity.NearDupBits)
+    cases(ragged) { v =>
+      val got = kernel.rh_signatures(new GenericArrayData(v)).toLongArray()
+      val expect = doubles(v).filter(_.length == Similarity.Dim)
+        .map(Similarity.signaturesScala(_, Similarity.NearDupTables, Similarity.NearDupBits))
+        .getOrElse(new Array[Long](Similarity.NearDupTables))
+      assert(got.toSeq === expect.toSeq)
+    }
+  }
+
+  test("simhash60 is total on empty, blank and lone-surrogate text, == SimHash.simhash") {
+    val odd = Gen.oneOf("", " ", "   ", "\t", " \n ", "\ud800", "a \udc00 b", "\udbff\u00e9 ", "x\ud83d")
+    val word = Gen.oneOf(odd, Gen.alphaStr, Gen.const("ﬁ"))
+    cases(Gen.listOf(word).map(_.mkString(" "))) { text =>
+      val got = Kernels.simhash60(UTF8String.fromString(text))
+      assert(got === SimHash.simhash(text))
+      assert(got >= 0L && got < (1L << SimHash.Bits))
     }
   }
 }

@@ -18,22 +18,27 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   /** AQE (on by default in Spark 4) wraps executedPlan in an
     * AdaptiveSparkPlanExec, which is a LEAF node — a typed foreach over
     * executedPlan visits ONLY the wrapper and silently skips every
-    * Exchange. Unwrap to the initial physical plan so shuffle-content
-    * assertions actually visit the shuffles, and fail loudly if the
-    * traversal saw none.
+    * Exchange. Unwrap to the initial physical plan so node assertions
+    * actually visit the query's nodes.
     */
-  private def assertNoTextInShuffles(df: org.apache.spark.sql.DataFrame,
-      forbidden: Set[String] = Set("text")): Unit = {
+  private def physical(df: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val plan = df.queryExecution.executedPlan match {
+    df.queryExecution.executedPlan match {
       // initialPlan, not inputPlan: exchanges are inserted by the
       // preparation rules (EnsureRequirements), which inputPlan predates
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
+  }
+
+  /** No shuffle carries a `forbidden` column; fails loudly if the
+    * traversal saw no shuffle at all.
+    */
+  private def assertNoTextInShuffles(df: org.apache.spark.sql.DataFrame,
+      forbidden: Set[String] = Set("text")): Unit = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     var shuffles = 0
-    plan.foreach {
+    physical(df).foreach {
       case e: ShuffleExchangeExec =>
         shuffles += 1
         assert(!e.output.exists(a => forbidden(a.name)),
@@ -46,12 +51,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   /** Interpreted (`CodegenFallback`) expressions of the physical plan. */
   private def fallbacks(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.initialPlan
-      case p => p
-    }
-    plan.collect { case p => p.expressions }.flatten
+    physical(df).collect { case p => p.expressions }.flatten
       .flatMap(_.collect { case e: CodegenFallback => e.prettyName })
   }
 
@@ -85,6 +85,25 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     val plan = optimized(graft.textops.Dedup.ngramJaccard(spark, sf))
     assert(count(plan, "graft.Kernels.jaccard(") === 1, s"\n$plan")
     assert(!plan.contains("array_intersect"))
+  }
+
+  test("embedding near-dup verify evaluates the dot_fold cosine once per pair") {
+    // the query's own nodes only: the memoized vector table's cached plan
+    // (an InMemoryRelation, a leaf) holds the norms' dot_fold calls; a
+    // copy pushed into a Filter or a join condition would count twice
+    val opt = graft.textops.Similarity.embeddingNearDup(spark, sf).queryExecution.optimizedPlan
+    val own = opt.flatMap(_.expressions).map(e => count(e.toString, "graft.Kernels.dot_fold("))
+    assert(own.sum === 1, s"\n$opt")
+  }
+
+  test("near-dup pair queries block and verify without a pair aggregate") {
+    import graft.textops.{Dedup, Similarity}
+    Seq(Dedup.minhashLsh(spark, sf), Dedup.ngramJaccard(spark, sf),
+        Dedup.simhashPairs(spark, sf), Similarity.embeddingNearDup(spark, sf)).foreach { df =>
+      val phys = physical(df)
+      assert(phys.find(_.nodeName.contains("Aggregate")).isEmpty, s"\n$phys")
+      assert(phys.find(_.nodeName.contains("Join")).nonEmpty, s"\n$phys")
+    }
   }
 
   test("fingerprint/simhash/nfc kernels appear once in their queries") {

@@ -77,7 +77,7 @@ class PortableHashSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("native jaccard expression == columnar reference (sf0.001 shingle arrays)") {
-    import graft.textops.{Dedup, Jaccard}
+    import graft.textops.Dedup
     import spark.implicits._
     // real shingle arrays: self-join a sample of docs on a cheap key so the
     // pair inputs have realistic overlap structure, plus edge pairs
@@ -91,7 +91,7 @@ class PortableHashSpec extends AnyFunSuite with SparkSpec {
       .crossJoin(d.select(col("doc_id").as("id_b"), col("sh").as("sh_b")))
       .where(col("id_a") < col("id_b")).cache()
     val native = pairs
-      .select(col("id_a"), col("id_b"), Jaccard.jaccard(col("sh_a"), col("sh_b")))
+      .select(col("id_a"), col("id_b"), graft.Kernels.Jaccard(col("sh_a"), col("sh_b")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val columnar = pairs
       .select(col("id_a"), col("id_b"), Dedup.jaccardColumnar(col("sh_a"), col("sh_b")))
@@ -104,7 +104,7 @@ class PortableHashSpec extends AnyFunSuite with SparkSpec {
       (Seq("a b c", "b c d"), Seq("a b c", "b c d")),
       (Seq("a b c"), Seq("x y z")),
       (Seq("a b c", "b c d", "c d e"), Seq("b c d"))).toDF("sh_a", "sh_b")
-    val en = edge.select(Jaccard.jaccard(col("sh_a"), col("sh_b"))).collect().map(_.getDouble(0))
+    val en = edge.select(graft.Kernels.Jaccard(col("sh_a"), col("sh_b"))).collect().map(_.getDouble(0))
     val ec = edge.select(Dedup.jaccardColumnar(col("sh_a"), col("sh_b"))).collect().map(_.getDouble(0))
     assert(en.toSeq === ec.toSeq)
     assert(en.toSeq === Seq(1.0, 0.0, BigDecimal(1.0 / 3.0)

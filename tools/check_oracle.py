@@ -2,6 +2,7 @@
 """Local replica of the driver's correctness gate: run graft.Verify, then
 run each oracleSql in DuckDB over the same sf dir and compare values.
 Usage: python3 tools/check_oracle.py [sfdir] [outdir] [--skip-verify] [query...]
+A named query that oracle_sql.json does not list counts as a failure.
 """
 import sys, os, json, subprocess, glob
 
@@ -31,7 +32,9 @@ oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fails = 0
 names = only or sorted(oracle.keys())
 for name in names:
-    sql = oracle.get(name)
+    if name not in oracle:
+        print(f"{name}: FAIL not a query of oracle_sql.json"); fails += 1; continue
+    sql = oracle[name]
     if sql is None:
         print(f"{name}: NO ORACLE (rows-only)"); continue
     spark_dir = f"{outdir}/{name}"
