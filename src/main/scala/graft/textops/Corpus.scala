@@ -274,21 +274,20 @@ object Corpus {
     * Scale shape: per-source stats are ONE partial aggregate (sources
     * number in the hundreds, tokens combine map-side); totals are a
     * one-row aggregate broadcast back over the rate table; the rate
-    * table itself is memoized (its two consumers — the keep decision
+    * table itself is checkpointed (its two consumers — the keep decision
     * and the output join — must not re-run the corpus aggregation); the
     * per-doc keep decision joins the ~|sources|-row rate table via
     * BROADCAST (shuffle-free over the doc table); the kept roll-up is
-    * again a partial aggregate. The doc-level projection is memoized so
-    * the stats pass and the decision pass share one scan.
+    * again a partial aggregate. The doc-level projection is checkpointed
+    * so the stats pass and the decision pass share one scan.
     */
   def mixPlan(spark: SparkSession, sfDir: String): DataFrame = {
-    val tagged = SessionMemo(spark, s"$sfDir#mix-tagged") {
-      val d = TextAnalysis.loadDocs(spark, sfDir)
-      d.select(d("doc_id"), d("source"),
+    val d = TextAnalysis.loadDocs(spark, sfDir)
+    val tagged = d.select(d("doc_id"), d("source"),
         graft.textops.WordStats.wordCount(d("text")).as("n_tokens"),
         mixHash(d("doc_id")).as("mix_h"))
-    }
-    val rates = SessionMemo(spark, s"$sfDir#mix-rates") { ratesCore(tagged) }
+      .localCheckpoint(eager = false)
+    val rates = ratesCore(tagged).localCheckpoint(eager = false)
     val kept = tagged.join(broadcast(rates.select("source", "rate_permille")), Seq("source"))
       .where(col("mix_h") < col("rate_permille"))
       .groupBy("source").agg(
@@ -353,26 +352,21 @@ object Corpus {
     * SinglePartition, document text in none of them.
     */
   def curate(spark: SparkSession, sfDir: String): DataFrame =
-    curateCore(TextAnalysis.loadDocs(spark, sfDir),
-      Decontam.contaminatedIds(spark, sfDir),
-      df => SessionMemo(spark, s"$sfDir#curate-survivors")(df),
-      df => SessionMemo(spark, s"$sfDir#curate-tagged")(df))
+    curateCore(TextAnalysis.loadDocs(spark, sfDir), Decontam.contaminatedIds(spark, sfDir))
       .orderBy("doc_id") // driver-query determinism only; deployments skip it
 
   /** [[curate]] without the final global sort (the deployment shape);
     * `contaminated` is the (doc_id) drop set.
     *
-    * `materialize` receives the survivor table — the natural persisted
-    * stage boundary of a curation pipeline (its two consumers, the rate
-    * aggregate and the sampling probe, would otherwise both re-execute
-    * the dedup join). The driver query parks it in [[SessionMemo]]; a
-    * deployment writes it out; the identity default recomputes (fine
-    * for one-shot plan inspection, wrong for execution at scale).
+    * The survivor table is the stage boundary of a curation pipeline:
+    * its two consumers, the rate aggregate and the sampling probe,
+    * would otherwise both re-execute the dedup join, so it is
+    * checkpointed here; its blocks belong to the returned frame and go
+    * when Spark's ContextCleaner collects it (a deployment writes the
+    * table out).
     */
-  def curateCore(d: DataFrame, contaminated: DataFrame,
-      materialize: DataFrame => DataFrame = identity,
-      materializeTags: DataFrame => DataFrame = identity): DataFrame = {
-    val survivors = materialize(curateSurvivors(d, contaminated, materializeTags))
+  def curateCore(d: DataFrame, contaminated: DataFrame): DataFrame = {
+    val survivors = curateSurvivors(d, contaminated).localCheckpoint(eager = false)
     val rates = ratesCore(survivors.select("source", "n_tokens"))
     val sampled = survivors
       .join(broadcast(rates.select("source", "rate_permille")), Seq("source"))
@@ -390,8 +384,7 @@ object Corpus {
     */
   def curatePlanRates(spark: SparkSession, sfDir: String): DataFrame =
     ratesCore(curateSurvivors(TextAnalysis.loadDocs(spark, sfDir),
-      Decontam.contaminatedIds(spark, sfDir),
-      df => SessionMemo(spark, s"$sfDir#curate-tagged")(df))
+      Decontam.contaminatedIds(spark, sfDir))
       .select("source", "n_tokens"))
 
   /** Stages 1-3 of [[curateCore]] — tag, dedup-keeper, classifier +
@@ -400,34 +393,32 @@ object Corpus {
     * streaming curated tail's OFFLINE PLANNING step (the mix-rate table
     * it applies statically) derives from exactly this definition.
     *
-    * `materializeTags` receives the TAG TABLE — the narrow fixed-width
-    * projection (ids, hashes, score, flags; ~100 bytes/row, NO text)
-    * every later stage reads. Materializing it is load-bearing twice:
-    * (a) the score/benchmark Filter otherwise gets pushed through the
-    * word-array projection and RE-INLINES the classifier features,
-    * re-evaluating the O(len) split ~6x per row on the full corpus —
+    * The TAG TABLE — the narrow fixed-width projection (ids, hashes,
+    * score, flags; ~100 bytes/row, NO text) every later stage reads — is
+    * checkpointed, which is load-bearing twice: (a) the checkpoint is a
+    * plan leaf, so the score/benchmark Filter cannot be pushed through
+    * the word-array projection to RE-INLINE the classifier features
+    * (re-evaluating the O(len) split ~6x per row on the full corpus —
     * the CollapseProject/pushdown re-evaluation trap PlanShapeSpec
-    * exists for; (b) the keeper aggregate and the probe side otherwise
-    * each scan the source. With the tag table materialized the
-    * expensive text pass runs EXACTLY ONCE and the source is scanned
-    * once. The driver query parks it in [[SessionMemo]]; a deployment
-    * writes it out (it is the classic tag/metadata table of a curation
-    * run); identity recomputes — fine for plan inspection only.
+    * exists for); (b) the keeper aggregate and the probe side would
+    * otherwise each scan the source. So the expensive text pass runs
+    * EXACTLY ONCE and the source is scanned once. A deployment writes
+    * it out (it is the classic tag/metadata table of a curation run).
     */
-  private[graft] def curateSurvivors(d: DataFrame, contaminated: DataFrame,
-      materializeTags: DataFrame => DataFrame = identity): DataFrame = {
+  private[graft] def curateSurvivors(d: DataFrame, contaminated: DataFrame): DataFrame = {
     val withW = d.select(d("doc_id"), d("source"), d("text"),
       graft.textops.WordStats.stats(d("text")).as("st"),
       TextAnalysis.repetitionFracs(d("text")).as("fracs"))
     val f = TextAnalysis.clfFeaturesFromStats(col("st"), col("fracs"))
-    val tagged = materializeTags(withW.select(
+    val tagged = withW.select(
       col("doc_id"), col("source"),
       TextAnalysis.stNw(col("st")).as("n_tokens"),
       TextAnalysis.langGuessFromStats(col("st")).as("lang_guess"),
       PortableHash.hexint60(col("text")).as("text_hash"),
       TextAnalysis.clfScoreU8(f(0), f(1), f(2), f(3), f(4)).as("score_u8"),
       Decontam.isBenchmark(col("doc_id")).as("is_benchmark"),
-      mixHash(col("doc_id")).as("mix_h")))
+      mixHash(col("doc_id")).as("mix_h"))
+      .localCheckpoint(eager = false)
     val keepers = tagged.select("text_hash", "doc_id")
       .groupBy("text_hash").agg(min("doc_id").as("keeper_id"))
     tagged
@@ -473,26 +464,26 @@ object Corpus {
     * Scale shape: the rule/classifier/hash signals compute in ONE text
     * pass off the scan (word array + repetition kernel materialized once
     * in a struct projection — the same CollapseProject discipline as
-    * curate), memoized as a fixed-width tag table; the dedup keeper is
-    * the standard partial aggregate on the content hash; the LM signal
-    * joins in from the memoized [[LmScore.scoreTable]] (its own audited
-    * aggregates) keyed on doc_id. No window, no SinglePartition, text in
-    * no shuffle.
+    * curate), checkpointed as a fixed-width tag table that the keeper
+    * aggregate and the probe side both read; the dedup keeper is the
+    * standard partial aggregate on the content hash; the LM signal joins
+    * in from [[LmScore.scoreTable]] (its own audited aggregates, one
+    * consumer, so computed in the plan) keyed on doc_id. No window, no
+    * SinglePartition, text in no shuffle.
     */
   def filterEnsemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val tagged = SessionMemo(spark, s"$sfDir#ensemble-tags") {
-      val d = TextAnalysis.loadDocs(spark, sfDir)
-      val withW = d.select(d("doc_id"), d("text"),
-        graft.textops.WordStats.stats(d("text")).as("st"),
-        TextAnalysis.repetitionFracs(d("text")).as("fracs"))
-      val f = TextAnalysis.clfFeaturesFromStats(col("st"), col("fracs"))
-      withW.select(
-        col("doc_id"),
-        TextAnalysis.gopherKeepFromStats(col("text"), col("st")).as("gopher_keep"),
-        (TextAnalysis.clfScoreU8(f(0), f(1), f(2), f(3), f(4))
-          >= TextAnalysis.ClfCutC * 1000000L).as("clf_keep"),
-        PortableHash.hexint60(col("text")).as("text_hash"))
-    }
+    val d = TextAnalysis.loadDocs(spark, sfDir)
+    val withW = d.select(d("doc_id"), d("text"),
+      graft.textops.WordStats.stats(d("text")).as("st"),
+      TextAnalysis.repetitionFracs(d("text")).as("fracs"))
+    val f = TextAnalysis.clfFeaturesFromStats(col("st"), col("fracs"))
+    val tagged = withW.select(
+      col("doc_id"),
+      TextAnalysis.gopherKeepFromStats(col("text"), col("st")).as("gopher_keep"),
+      (TextAnalysis.clfScoreU8(f(0), f(1), f(2), f(3), f(4))
+        >= TextAnalysis.ClfCutC * 1000000L).as("clf_keep"),
+      PortableHash.hexint60(col("text")).as("text_hash"))
+      .localCheckpoint(eager = false)
     val keeper = tagged.groupBy("text_hash").agg(min("doc_id").as("keeper_id"))
     val lm = LmScore.scoreTable(spark, sfDir)
       .select(col("doc_id"), col("keep").as("lm_keep"))

@@ -33,12 +33,6 @@ object Dedup {
 
   import PortableHash._
 
-  /** Persisted shingle/signature/fingerprint tables go through the
-    * shared [[SessionMemo]] (rationale there).
-    */
-  private def memoized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    SessionMemo(spark, key)(build)
-
   /** Exact dedup: rank within identical-content groups; rank>1 = duplicate.
     * One hash-partitioned window over the content hash — the canonical
     * web-scale exact-dedup shape (hash is the shuffle key, never the text).
@@ -137,16 +131,17 @@ object Dedup {
     // t=0.4 => span 2, the shape the sf-pinned DuckDB oracle mirrors
     val span = { var s = 0; while (math.pow(2, s) * threshold < 1.0) s += 1; s }
     val d = TextAnalysis.loadDocs(spark, sfDir)
-    val base = memoized(spark, s"$sfDir#ngram-base") {
-      d.where(size(wordsOf(d("text"))) >= ShingleSize)
-        .select(d("doc_id"),
-          array_join(slice(wordsOf(d("text")), 1, BlockWords), " ").as("block"),
-          shingles(d("text")).as("sh"))
-        // floor(log2(n)) via binary-string length — exact integer semantics
-        // in both Spark (conv) and DuckDB (bin), no float log edge cases
-        .withColumn("lb",
-          (length(conv(size(col("sh")).cast("string"), 10, 2)) - 1).cast("int"))
-    }
+    // checkpointed: both blocking sides and both payload join-backs read
+    // it, so the shingling runs once
+    val base = d.where(size(wordsOf(d("text"))) >= ShingleSize)
+      .select(d("doc_id"),
+        array_join(slice(wordsOf(d("text")), 1, BlockWords), " ").as("block"),
+        shingles(d("text")).as("sh"))
+      // floor(log2(n)) via binary-string length — exact integer semantics
+      // in both Spark (conv) and DuckDB (bin), no float log edge cases
+      .withColumn("lb",
+        (length(conv(size(col("sh")).cast("string"), 10, 2)) - 1).cast("int"))
+      .localCheckpoint(eager = false)
     val keyed = base.select(col("doc_id").as("id"),
       array((0 to span).map(i => struct(col("block"), (col("lb") + i).as("lb"))): _*).as("keys"),
       col("sh"))
@@ -176,11 +171,12 @@ object Dedup {
 
   /** MinHash+LSH near-dup: shingle → K minhashes → `(band, md5)` keys →
     * [[nearPairs]] → exact-Jaccard verification at [[JaccardThreshold]].
-    * The signature table is memoized: shingling and hashing run once.
+    * The signature table is checkpointed: both blocking sides and both
+    * payload join-backs read it, and shingling and hashing run once.
     */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val rows = MinHashK / Bands
-    val sigs = memoized(spark, s"$sfDir#minhash-sigs")(signatures(spark, sfDir))
+    val sigs = signatures(spark, sfDir).localCheckpoint(eager = false)
     val keyed = sigs.select(col("doc_id").as("id"),
       array((0 until Bands).map { b =>
         struct(lit(b).as("band"), md5(concat_ws(",",
@@ -195,10 +191,15 @@ object Dedup {
     * one pass per row — the column-op equivalent needs 60 interpreted
     * folds).
     */
-  def simhashFingerprints(spark: SparkSession, sfDir: String): DataFrame = {
+  def simhashFingerprints(spark: SparkSession, sfDir: String): DataFrame =
+    fingerprints(spark, sfDir).orderBy("doc_id")
+
+  /** `(doc_id, simhash)` in scan order — [[simhashFingerprints]] without
+    * the output sort, which no pair consumer needs.
+    */
+  private[graft] def fingerprints(spark: SparkSession, sfDir: String): DataFrame = {
     val d = TextAnalysis.loadDocs(spark, sfDir)
     d.select(d("doc_id"), SimHash.simhash60(d("text")).as("simhash"))
-      .orderBy("doc_id")
   }
 
   /** SimHash near-dup: pairs sharing any of the 4 15-bit `(band, bkey)`
@@ -206,10 +207,12 @@ object Dedup {
     * <= 3` verifies, with GUARANTEED recall (pigeonhole over the bands).
     * 15-bit bands keep bucket sizes small even on clustered corpora —
     * 8-bit bands measured 25x slower here from candidate blow-up. The
-    * fingerprints are memoized: the native simhash pass runs once per doc.
+    * unsorted fingerprints are checkpointed: both blocking sides and both
+    * payload join-backs read them, and the native simhash pass runs once
+    * per doc.
     */
   def simhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val fps = memoized(spark, s"$sfDir#simhash-fps")(simhashFingerprints(spark, sfDir))
+    val fps = fingerprints(spark, sfDir).localCheckpoint(eager = false)
     val keyed = fps.select(col("doc_id").as("id"),
       array((0 until SimHash.Bands).map(j => struct(lit(j).as("band"),
         shiftright(col("simhash"), j * SimHash.BandBits)
@@ -217,6 +220,14 @@ object Dedup {
       col("simhash").as("fp"))
     nearPairs(keyed, "hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))),
       col("hamming") <= SimHashMaxHamming)
+  }
+
+  /** `(doc_id, grams)`: each doc's distinct word-5-gram hashes, the gram
+    * table of [[dupPassages]] and [[containment]].
+    */
+  private def docGramSets(spark: SparkSession, sfDir: String): DataFrame = {
+    val d = TextAnalysis.loadDocs(spark, sfDir)
+    d.select(d("doc_id"), array_distinct(TextAnalysis.gramHashes60(d("text"))).as("grams"))
   }
 
   /** Duplicate-PASSAGE threshold for [[dupPassages]]: drop a doc when
@@ -250,15 +261,11 @@ object Dedup {
     * exploded table a second time as the probe side of a
     * dup-gram-set join — strictly more bytes for the same answer.
     * Per-doc distinct grams come from `array_distinct` INSIDE the row
-    * (no shuffle), and the gram table is memoized so consumers share
-    * one kernel pass.
+    * (no shuffle), and the gram table is checkpointed: the explode
+    * branch and the per-doc count both read one kernel pass.
     */
   def dupPassages(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = memoized(spark, s"$sfDir#dup-passage-grams") {
-      val d = TextAnalysis.loadDocs(spark, sfDir)
-      d.select(d("doc_id"),
-        array_distinct(TextAnalysis.gramHashes60(d("text"))).as("grams"))
-    }
+    val grams = docGramSets(spark, sfDir).localCheckpoint(eager = false)
     val docGrams = grams.select(col("doc_id"), explode(col("grams")).as("g"))
     // rows are per-doc distinct, so count == number of docs carrying g,
     // and dup_grams = n_distinct − (grams owned by this doc ALONE):
@@ -312,20 +319,17 @@ object Dedup {
     * (no shuffle).
     */
   def dedupParagraphs(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = ParaChunkWords
-    val paraTable = memoized(spark, s"$sfDir#para-chunks") {
-      val d = TextAnalysis.loadDocs(spark, sfDir)
-      d.select(d("doc_id"),
-        TextAnalysis.chunkWords(TextAnalysis.nonEmptyWords(d("text")), k).as("paras"))
-    }
-    dedupParaCore(paraTable).orderBy("doc_id")
+    val d = TextAnalysis.loadDocs(spark, sfDir)
+    val paraTable = d.select(d("doc_id"),
+      TextAnalysis.chunkWords(TextAnalysis.nonEmptyWords(d("text")), ParaChunkWords).as("paras"))
+    dedupParaCore(paraTable.localCheckpoint(eager = false)).orderBy("doc_id")
   }
 
   /** Core of [[dedupParagraphs]] over ANY `(doc_id, paras)` table —
     * [[dedupParagraphs]] feeds raw-text word chunks; the cleanup
     * capstone ([[TextAnalysis.cleanPipeline]]) feeds C4-kept lines.
-    * The caller must persist/memoize `paraTable`: it has two consumers
-    * (the explode branch and the join-back).
+    * The caller checkpoints `paraTable`: the explode branch, the keeper
+    * aggregate and the join-back all read it.
     */
   private[graft] def dedupParaCore(paraTable: DataFrame): DataFrame = {
     val exploded = explodedParas(paraTable)
@@ -384,14 +388,11 @@ object Dedup {
     * finishes in 2-3 rounds. Convergence is detected from sum(label) —
     * both steps are monotone non-increasing per node, so any change
     * strictly decreases the (exact, decimal) sum — one bounded
-    * one-row collect per round. The final labeling memoizes in
-    * [[SessionMemo]] like every other persisted dedup stage (bench
-    * rounds reuse it; no cache-entry accumulation).
+    * one-row collect per round. [[connectedComponents]] returns a
+    * checkpointed labeling, so this query materializes nothing more.
     */
   def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame =
-    memoized(spark, s"$sfDir#neardup-clusters") {
-      connectedComponents(minhashLsh(spark, sfDir).select("id_a", "id_b"))
-    }
+    connectedComponents(minhashLsh(spark, sfDir).select("id_a", "id_b"))
       .select(col("node").as("doc_id"), col("label").as("cluster_id"),
         (col("node") === col("label")).as("is_keeper"))
       .orderBy("doc_id")
@@ -399,35 +400,40 @@ object Dedup {
   /** Connected components over an undirected pair list `(id_a, id_b)`:
     * one row per distinct endpoint with `label` = the minimum node id
     * reachable from it. See [[nearDupClusters]] for the algorithm and
-    * its scaling argument. The returned frame is persisted behind a
-    * plan-truncating leaf (materialized); nearDupClusters parks it in
-    * SessionMemo.
+    * its scaling argument. The returned frame is a local checkpoint (a
+    * plan leaf); the edges and every superseded round are unpersisted
+    * before it returns, so only the final round's blocks stay, owned by
+    * the returned frame.
     */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // every table below is read more than once (the edges every round, a
+    // round's labels by both sides of the jump join) and is re-rooted as
+    // a local-checkpoint leaf: the jump self-join references the round
+    // plan twice, so a plan carried over would DOUBLE per round and an
+    // O(log n)-round run blows it up exponentially (measured: AQE's
+    // explainString OOMed the heap at round ~10 of a 200-node chain).
+    // The checkpoints are lazy: the first job that reads one (the next
+    // table's shuffle stages, or the round's label sum) stores it, so no
+    // extra job runs.
     val edges = pairs.select(col(pairs.columns(0)).as("src"), col(pairs.columns(1)).as("dst"))
       .unionByName(pairs.select(col(pairs.columns(1)).as("src"), col(pairs.columns(0)).as("dst")))
-      .persist(lvl)
+      .localCheckpoint(eager = false)
     // exact decimal sum: label sums fit 38 digits at any corpus size
     // (a long sum could overflow at ~10^12 large doc_ids)
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
       Option(df.agg(sum(col("label").cast("decimal(38,0)")))
         .collect()(0).getDecimal(0))
-    // each round's result is re-rooted as a fresh LogicalRDD leaf
-    // (createDataFrame over the persisted rows): the jump self-join
-    // references the round plan twice, so a bare persist would let the
-    // LOGICAL plan double per round and an O(log n)-round run blows it
-    // up exponentially (measured: AQE's explainString OOMed the heap at
-    // round ~10 of a 200-node chain). The leaf truncates the plan each
-    // round while the superseded round's blocks are unpersisted
-    // DETERMINISTICALLY — on success and on failure — instead of waiting
-    // on driver GC + ContextCleaner.
-    def rooted(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftshim.ColumnShim.truncatePlan(df).persist(lvl)
-    var labels = rooted(edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")))
+    // a superseded table's blocks are dropped as soon as the table that
+    // replaces it is stored — on success and on failure — instead of
+    // waiting for a driver GC to let Spark's ContextCleaner find them
+    def release(df: DataFrame): Unit =
+      df.queryExecution.logical.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false))
+    var labels = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")).localCheckpoint(eager = false)
     try {
-      var prevSum = labelSum(labels) // materializes the persist
+      var prevSum = labelSum(labels) // stores the checkpoint
       var converged = prevSum.isEmpty // empty pair graph: nothing to do
       var rounds = 0
       while (!converged) {
@@ -436,33 +442,34 @@ object Dedup {
         // this is a logic bug, not a data shape — fail loud, never hang
         require(rounds <= 50, "connectedComponents: no fixpoint after 50 rounds")
         // propagate: each node takes the min label over itself + neighbors
-        // (persisted: the jump step reads it from BOTH sides of its join)
         val propagated = labels.unionByName(
             edges.join(labels.withColumnRenamed("node", "src"), Seq("src"))
               .select(col("dst").as("node"), col("label")))
           .groupBy("node").agg(min("label").as("label"))
-          .persist(lvl)
-        try {
+          .localCheckpoint(eager = false)
+        val next = try {
           // jump: label := label(label). Every label value is itself a
           // node of the graph (labels only ever take node-id values), and
           // the invariant label(u) <= u makes the step monotone; the left
           // join is 1:1 (node is unique after the groupBy)
-          val next = rooted(propagated
+          val n = propagated
             .join(propagated.select(col("node").as("label"), col("label").as("jump")),
               Seq("label"), "left")
-            .select(col("node"), coalesce(col("jump"), col("label")).as("label")))
-          val s = try labelSum(next) // materializes next
-            catch { case e: Throwable => next.unpersist(); throw e }
+            .select(col("node"), coalesce(col("jump"), col("label")).as("label"))
+            .localCheckpoint(eager = false)
+          val s = try labelSum(n) // stores the checkpoint
+            catch { case e: Throwable => release(n); throw e }
           converged = s == prevSum
           prevSum = s
-          labels.unpersist()
-          labels = next
-        } finally propagated.unpersist()
+          n
+        } finally release(propagated)
+        release(labels)
+        labels = next
       }
       labels
     } catch {
-      case e: Throwable => labels.unpersist(); throw e
-    } finally edges.unpersist()
+      case e: Throwable => release(labels); throw e
+    } finally release(edges)
   }
 
   /** Containment threshold: a doc whose rare grams are ≥ this fraction
@@ -489,8 +496,7 @@ object Dedup {
     * dedup case symmetric Jaccard MISSES: a short article quoted whole
     * inside a long aggregator page has tiny Jaccard (union is dominated
     * by the container) but containment ≈ 1. Gram unit and doc-gram table
-    * are shared with [[dupPassages]] / decontamination (one memoized
-    * kernel pass).
+    * definition are shared with [[dupPassages]] / decontamination.
     *
     * Scale shape (round 6): rare-gram doc frequency is ONE partial
     * aggregate on the 60-bit gram key; pair candidates come from a
@@ -504,20 +510,17 @@ object Dedup {
     * anywhere.
     */
   def containment(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = memoized(spark, s"$sfDir#dup-passage-grams") {
-      val d = TextAnalysis.loadDocs(spark, sfDir)
-      d.select(d("doc_id"),
-        array_distinct(TextAnalysis.gramHashes60(d("text"))).as("grams"))
-    }
+    // checkpointed: the doc-frequency aggregate and the join back both
+    // read the exploded grams, and the kernel runs once per doc
+    val grams = docGramSets(spark, sfDir).localCheckpoint(eager = false)
     val docGrams = grams.select(col("doc_id"), explode(col("grams")).as("g"))
     // rare = (doc_id, g) occurrences of grams with doc-frequency <= cap;
     // df=1 grams stay (they count in the denominator: unique content the
-    // container does NOT cover) but produce no cross pairs
-    val rare = memoized(spark, s"$sfDir#containment-rare") {
-      val rareGram = docGrams.groupBy("g").agg(count(lit(1)).as("n_docs"))
-        .where(col("n_docs") <= ContainmentGramDfMax)
-      docGrams.join(rareGram, Seq("g"))
-    }
+    // container does NOT cover) but produce no cross pairs. Checkpointed:
+    // the denominator count and the pair expansion both read it
+    val rareGram = docGrams.groupBy("g").agg(count(lit(1)).as("n_docs"))
+      .where(col("n_docs") <= ContainmentGramDfMax)
+    val rare = docGrams.join(rareGram, Seq("g")).localCheckpoint(eager = false)
     val nRare = rare.groupBy("doc_id").agg(count(lit(1)).as("n_rare"))
     // only grams SHARED by >= 2 docs can produce a cross pair (a df=1
     // gram meets nothing but its own doc), and each surviving gram's
@@ -561,7 +564,7 @@ object Dedup {
     * of the one documents table so the DuckDB oracle can replay it; a
     * deployment reads the signature set from the store written by the
     * previous run (dataflow identical — one keyed join against a
-    * persisted hash table that is ~16 bytes/doc, no text).
+    * stored hash table that is ~16 bytes/doc, no text).
     *
     * Scale shape: the base side reduces to DISTINCT 60-bit hashes (one
     * partial aggregate); the delta joins it on the hash (keyed equi-join
@@ -571,15 +574,14 @@ object Dedup {
     * shuffles.
     */
   def incremental(spark: SparkSession, sfDir: String): DataFrame = {
-    // memoized: base signatures, the delta side, and the in-delta keeper
-    // all read this projection — one scan and ONE text-hashing pass, not
-    // three (the persisted table is fixed-width, ~17 bytes/doc)
-    val tagged = memoized(spark, s"$sfDir#incremental-tags") {
-      val d = TextAnalysis.loadDocs(spark, sfDir)
-      d.select(d("doc_id"), hexint60(d("text")).as("text_hash"),
+    // checkpointed: base signatures, the delta side, and the in-delta
+    // keeper all read this projection — one scan and ONE text-hashing
+    // pass, not three (the table is fixed-width, ~17 bytes/doc)
+    val d = TextAnalysis.loadDocs(spark, sfDir)
+    val tagged = d.select(d("doc_id"), hexint60(d("text")).as("text_hash"),
         (PortableHash.hexint32(concat(lit("incr:"), d("doc_id").cast("string")))
           % 100L < IncrementalBasePct).as("in_base"))
-    }
+      .localCheckpoint(eager = false)
     val baseSigs = tagged.where(col("in_base"))
       .select("text_hash").distinct()
       .withColumn("dup_of_base", lit(true))

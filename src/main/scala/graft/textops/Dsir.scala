@@ -43,9 +43,9 @@ object Dsir {
   val ThresholdMicro = 250000L
 
   /** Exploded feature table (doc_id, lang, b): unigram + bigram grams
-    * hashed into [[Buckets]] buckets with the portable 32-bit hash.
-    * Memoized — it feeds both distribution aggregates and the per-doc
-    * scoring join.
+    * hashed into [[Buckets]] buckets with the portable 32-bit hash, as a
+    * plan ([[select]] checkpoints it: the bucket aggregate and the
+    * per-doc scoring join both read it).
     */
   private[graft] def featureCore(spark: SparkSession, sfDir: String): DataFrame = {
     val d = TextAnalysis.loadDocs(spark, sfDir)
@@ -56,18 +56,15 @@ object Dsir {
         (PortableHash.hexint32(col("gram")) % Buckets).as("b"))
   }
 
-  private def featureTable(spark: SparkSession, sfDir: String): DataFrame =
-    SessionMemo(spark, s"dsir-features:$sfDir")(featureCore(spark, sfDir))
-
   /** Driver query `corpus_dsir`. Columns: doc_id, lang, n_grams,
     * w_micro_sum, avg_w_micro, gumbel_micro, score_micro, keep.
     * Docs with no grams score NULL and keep=false.
     */
   def select(spark: SparkSession, sfDir: String): DataFrame =
-    selectFrom(spark, sfDir, featureTable(spark, sfDir))
+    selectFrom(spark, sfDir, featureCore(spark, sfDir).localCheckpoint(eager = false))
 
   /** [[select]] over an explicit feature table (plan-shape pins feed the
-    * un-memoized [[featureCore]] here).
+    * plain [[featureCore]] plan here).
     */
   private[graft] def selectFrom(spark: SparkSession, sfDir: String,
       f: DataFrame): DataFrame = {

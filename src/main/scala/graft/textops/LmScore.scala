@@ -62,9 +62,8 @@ object LmScore {
       s => concat_ws(" ", s.getField("p"), s.getField("n")))
 
   /** Exploded bigram table (doc_id, bg_h, u_h): 60-bit portable hashes of
-    * the bigram string and its context word — un-memoized builder
-    * (plan-shape pins read this; the driver queries go through the
-    * memoized [[gramTable]]).
+    * the bigram string and its context word, as a plan (plan-shape pins
+    * read this; the driver queries go through [[gramTable]]).
     */
   private[graft] def gramCore(spark: SparkSession, sfDir: String): DataFrame = {
     val d = TextAnalysis.loadDocs(spark, sfDir)
@@ -77,24 +76,12 @@ object LmScore {
         PortableHash.hexint60(col("pr.p")).as("u_h"))
   }
 
-  /** Memoized + persisted [[gramCore]] — it feeds the count aggregates
-    * AND the per-term scoring join, and the bench re-invokes the queries.
+  /** [[gramCore]], checkpointed by the calling query: the two count
+    * aggregates and the per-term scoring join all read it.
     */
   private def gramTable(spark: SparkSession, sfDir: String): DataFrame =
-    SessionMemo(spark, s"lm-grams:$sfDir")(gramCore(spark, sfDir))
+    gramCore(spark, sfDir).localCheckpoint(eager = false)
 
-  /** Per-document LM score plan over a gram table — un-memoized builder.
-    * Columns: doc_id, lang, n_words, n_bigrams, nll_micro_sum,
-    * avg_nll_micro, keep. Docs with <2 words score NULL and keep=false.
-    *
-    * `trainFilter` restricts which docs TRAIN the LM (count tables +
-    * vocabulary); every doc is SCORED regardless. `None` = the corpus
-    * trains on itself ([[score]]); a language/source predicate gives
-    * CCNet's actual deployment shape — train on a clean reference
-    * corpus, score the crawl ([[scoreCross]]). Smoothing makes unseen
-    * grams finite: c12 = 0 for a gram outside the training slice, so
-    * its term is ln((c1 + V) / 1) — the correct "never seen" penalty.
-    */
   /** The LM "model": training-slice bigram counts `bg(bg_h, c12)`,
     * context counts `uc(u_h, c1)`, and the 1-row vocabulary aggregate
     * `v(vv)`. ONE definition feeds [[scoreCore]] (batch, in-plan) and
@@ -124,6 +111,18 @@ object LmScore {
     (bg, uc, v)
   }
 
+  /** Per-document LM score plan over a gram table. Columns: doc_id,
+    * lang, n_words, n_bigrams, nll_micro_sum, avg_nll_micro, keep.
+    * Docs with <2 words score NULL and keep=false.
+    *
+    * `trainFilter` restricts which docs TRAIN the LM (count tables +
+    * vocabulary); every doc is SCORED regardless. `None` = the corpus
+    * trains on itself ([[score]]); a language/source predicate gives
+    * CCNet's actual deployment shape — train on a clean reference
+    * corpus, score the crawl ([[scoreCross]]). Smoothing makes unseen
+    * grams finite: c12 = 0 for a gram outside the training slice, so
+    * its term is ln((c1 + V) / 1) — the correct "never seen" penalty.
+    */
   private[graft] def scoreCore(spark: SparkSession, sfDir: String,
       g: DataFrame, trainFilter: Option[Column] = None): DataFrame = {
       val d = TextAnalysis.loadDocs(spark, sfDir)
@@ -164,13 +163,12 @@ object LmScore {
           coalesce(col("avg_nll_micro") <= LmNllMaxMicro, lit(false)))
   }
 
-  /** Memoized [[scoreCore]] over the memoized gram table ([[buckets]]
-    * and [[Corpus.filterEnsemble]] reuse it, and the bench re-invokes
-    * the queries).
+  /** The self-trained [[scoreCore]] over a checkpointed gram table, as a
+    * plan: [[score]], [[buckets]] and [[Corpus.filterEnsemble]] each
+    * build their own.
     */
   private[textops] def scoreTable(spark: SparkSession, sfDir: String): DataFrame =
-    SessionMemo(spark, s"lm-score:$sfDir")(
-      scoreCore(spark, sfDir, gramTable(spark, sfDir)))
+    scoreCore(spark, sfDir, gramTable(spark, sfDir))
 
   /** Driver query `text_lm_score`. */
   def score(spark: SparkSession, sfDir: String): DataFrame =
@@ -192,19 +190,18 @@ object LmScore {
     * as a semi-join on doc_id and the count aggregates keep their
     * map-side-combined keyed shape.
     */
+  def scoreCross(spark: SparkSession, sfDir: String): DataFrame =
+    scoreCore(spark, sfDir, gramTable(spark, sfDir), Some(col("lang") === TrainLang))
+      .orderBy("doc_id")
+
   /** Offline planner surface for the streaming score tail: the
-    * [[TrainLang]] cross-model (counts + vocab) over the memoized gram
-    * table — what [[graft.streaming.ScoreStream.planModel]] collects.
+    * [[TrainLang]] cross-model (counts + vocab) over a checkpointed gram
+    * table (the two count tables are collected by separate jobs) — what
+    * [[graft.streaming.ScoreStream.planModel]] collects.
     */
   def crossModel(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) =
     trainCounts(spark, sfDir, gramTable(spark, sfDir),
       Some(col("lang") === TrainLang))
-
-  def scoreCross(spark: SparkSession, sfDir: String): DataFrame =
-    SessionMemo(spark, s"lm-score-cross:$sfDir")(
-      scoreCore(spark, sfDir, gramTable(spark, sfDir),
-        Some(col("lang") === TrainLang)))
-      .orderBy("doc_id")
 
   /** Driver query `corpus_ppl_buckets`: CCNet head/middle/tail per
     * language. Cutoffs are the smallest histogram bins whose cumulative
@@ -213,10 +210,11 @@ object LmScore {
     * keep = head ∪ middle, CCNet's usual training cut.
     */
   def buckets(spark: SparkSession, sfDir: String): DataFrame =
-    bucketsFrom(scoreTable(spark, sfDir))
+    bucketsFrom(scoreTable(spark, sfDir).localCheckpoint(eager = false))
 
-  /** [[buckets]] over an explicit score table (plan-shape pins feed the
-    * un-memoized [[scoreCore]] here).
+  /** [[buckets]] over an explicit score table, which the histogram branch
+    * and the join-back both read ([[buckets]] checkpoints it; plan-shape
+    * pins feed the plain [[scoreCore]] plan here).
     */
   private[graft] def bucketsFrom(scoreDf: DataFrame): DataFrame = {
     val sc = scoreDf

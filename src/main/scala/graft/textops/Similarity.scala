@@ -151,12 +151,6 @@ object Similarity {
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot(col("e"), col("e"))))
 
-  /** Persisted vector/signature tables go through the shared
-    * [[SessionMemo]] (rationale there).
-    */
-  private def memoized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    SessionMemo(spark, key)(build)
-
   /** Corpus plus planted near-duplicates (deterministic augmentation —
     * see object scaladoc). Column `e` is double-cast.
     */
@@ -196,10 +190,11 @@ object Similarity {
     * prunes to T*(B+1) buckets of it.
     */
   def lshTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val vecs = memoized(spark, s"$sfDir#topk-vecs") {
-      withNorm(loadEmb(spark, sfDir)
-        .select(col("vec_id"), col("label"), dbl(col("embedding")).as("e")))
-    }
+    // checkpointed: the bucket explode (query probes and candidates), the
+    // query row and the candidate join-back all read it
+    val vecs = withNorm(loadEmb(spark, sfDir)
+      .select(col("vec_id"), col("label"), dbl(col("embedding")).as("e")))
+      .localCheckpoint(eager = false)
     val buckets = vecs.select(col("vec_id"),
       posexplode(rhSignatures(col("e"), TopKTables, TopKBits))
         .as(Seq("tbl", "bucket")))
@@ -223,12 +218,11 @@ object Similarity {
   /** Embedding-cosine near-dup over the planted corpus: the 4x16-bit
     * signatures become `(tbl, bucket)` keys for [[Dedup.nearPairs]], then
     * one exact cosine per candidate pair with the norms precomputed in
-    * the memoized vector table.
+    * the vector table, which is checkpointed: both blocking sides and
+    * both payload join-backs read it.
     */
   def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    val vecs = memoized(spark, s"$sfDir#neardup-vecs") {
-      withNorm(plantedCorpus(spark, sfDir))
-    }
+    val vecs = withNorm(plantedCorpus(spark, sfDir)).localCheckpoint(eager = false)
     val keyed = vecs.select(col("vec_id").as("id"),
       transform(rhSignatures(col("e"), NearDupTables, NearDupBits),
         (sig, t) => struct(t.as("tbl"), sig.as("bucket"))).as("keys"),

@@ -1005,23 +1005,21 @@ object TextAnalysis {
     *     stripped everywhere except its min-doc_id keeper.
     *
     * Scale shape: stages 1-2 are one shuffle-free projection chain off
-    * the scan (one text pass); the kept-line table is the persisted
-    * stage boundary (memoized here, written out in deployment — it has
-    * two consumers in the dedup core); stage 3 shuffles fixed-width
-    * (doc_id, pos, hash) rows only. Trailing sort is oracle determinism.
+    * the scan (one text pass); the kept-line table is the stage
+    * boundary (checkpointed here, written out in deployment — the dedup
+    * core reads it from more than one branch); stage 3 shuffles
+    * fixed-width (doc_id, pos, hash) rows only. Trailing sort is oracle
+    * determinism.
     */
   def cleanPipeline(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.dedupParaCore(cleanPages(spark, sfDir)).orderBy("doc_id")
+    Dedup.dedupParaCore(cleanPages(spark, sfDir).localCheckpoint(eager = false)).orderBy("doc_id")
 
   /** The capstone's surviving-page kept-line table (stages 1-2 of
-    * [[cleanPipeline]]), memoized: the dedup core reads it twice, and
-    * the streaming planner ([[cleanPlanDupLines]]) derives from exactly
-    * this definition.
+    * [[cleanPipeline]]) as a plan; the streaming planner
+    * ([[cleanPlanDupLines]]) derives from exactly this definition.
     */
-  private[graft] def cleanPages(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = loadDocs(spark, sfDir)
-    SessionMemo(spark, s"$sfDir#clean-pages")(keptPages(d))
-  }
+  private[graft] def cleanPages(spark: SparkSession, sfDir: String): DataFrame =
+    keptPages(loadDocs(spark, sfDir))
 
   /** Stages 1-2 per row over `(doc_id, text)` docs, the one definition
     * the batch capstone and the streaming clean tail share: unicode

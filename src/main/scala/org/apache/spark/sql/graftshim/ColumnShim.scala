@@ -12,17 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Re-root a DataFrame as a LogicalRDD leaf WITHOUT the external-Row
-    * round trip: `df.rdd` + `createDataFrame` would deserialize every
-    * InternalRow to a GenericRow and convert it back — two full-data
-    * conversion passes of pure overhead for an iterative algorithm that
-    * truncates lineage every round. `queryExecution.toRdd` keeps rows in
-    * the internal format (copied once: the scan reuses row objects).
-    */
-  def truncatePlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd.map(_.copy()), df.schema)
-  }
 }

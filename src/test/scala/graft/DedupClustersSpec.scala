@@ -78,6 +78,18 @@ class DedupClustersSpec extends AnyFunSuite with SparkSpec {
     ml.unpersist()
   }
 
+  test("connected components leaves only the returned round's blocks") {
+    // the edges and every superseded round are unpersisted as the run
+    // goes: of the RDDs it persists, only the returned labeling's stays
+    import spark.implicits._
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val labels = Dedup.connectedComponents(chain)
+    assert(labels.where($"label" === 0L).count() === 64)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.size === 1, s"RDDs left persisted: $left")
+  }
+
   test("a transitive chain merges into one cluster (a-b, b-c => {a,b,c})") {
     // found in the sf0.01 data: 47 labeled docs from 25 pairs means at
     // least one component has >2 members — check one explicitly

@@ -1,6 +1,6 @@
 package graft
 
-import graft.textops.{Ivf, Jaccard, SimHash, Similarity}
+import graft.textops.{Ivf, Jaccard, SimHash, Similarity, TextAnalysis}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -117,6 +117,32 @@ class KernelPropsSpec extends AnyFunSuite {
       val got = Kernels.simhash60(UTF8String.fromString(text))
       assert(got === SimHash.simhash(text))
       assert(got >= 0L && got < (1L << SimHash.Bits))
+    }
+  }
+
+  test("gram_hashes60 and fingerprint60 are total, and the fingerprint is the min gram") {
+    val odd = Gen.oneOf("", " ", "  ", "\t", "\u0000", "a\u0000b", "\ud800", "x \udc00",
+      "\udbff\u00e9", "ﬁ")
+    val word = Gen.frequency(3 -> Gen.alphaStr, 2 -> odd)
+    // runs of spaces come from empty words; every 40th case is a long text
+    val text = Gen.oneOf(
+      Gen.listOf(word).map(_.mkString(" ")),
+      Gen.listOfN(3, word).map(_.mkString("   ")),
+      Gen.const(""), Gen.const("     "))
+    val long = Gen.listOfN(4000, Gen.alphaStr.map(_.take(8))).map(_.mkString(" "))
+    (0 until 300).foreach { i =>
+      val g = if (i % 40 == 39) long else text
+      val t = g.pureApply(Gen.Parameters.default.withSize(1 + i % 40), Seed(i.toLong))
+      val u = UTF8String.fromString(t)
+      val grams = Kernels.gram_hashes60(u).toLongArray()
+      val fp = Kernels.fingerprint60(u)
+      // the kernels read the UTF-8 round trip of `t` (a lone surrogate
+      // becomes '?'; word boundaries are unchanged)
+      val s = u.toString
+      assert(fp === grams.min)
+      assert(grams.length === math.max(1, s.split(" ", -1).length - 4))
+      assert(TextAnalysis.fingerprintScala(t) === TextAnalysis.gramHashesScala(t).min)
+      assert(TextAnalysis.gramHashesScala(t).length === math.max(1, t.split(" ", -1).length - 4))
     }
   }
 }

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (CollapseProject / filter pushdown re-inlining non-cheap expressions):
   * the expensive native kernels must appear EXACTLY ONCE in the optimized
   * plan of their queries. A regression here is invisible to the value
-  * oracle (same results, N× the work) — only the plan shows it.
+  * oracle (same results, N× the work) — only the plan shows it. The
+  * same holds for a query that reuses state from an earlier call, which
+  * the cache-entry and job-count tests pin down.
   */
 class PlanShapeSpec extends AnyFunSuite with SparkSpec {
 
@@ -58,6 +60,48 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
 
+  /** Scans of a local checkpoint, the leaf a query's shared table
+    * becomes; `cols` narrows it to scans whose output holds them all.
+    */
+  private def checkpointScans(plan: String, cols: String*): Int =
+    plan.linesIterator.count(l => l.contains("Scan ExistingRDD") && cols.forall(l.contains))
+
+  /** Physical plans (AQE unwrapped, as [[physical]]) of the
+    * `localCheckpoint` actions `body` runs: the builds of the shared
+    * tables of the query it constructs.
+    */
+  private def checkpointBuilds(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (fn == "localCheckpoint") plans.add((qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }).toString)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  /** The executed plan of the query `build` constructs, followed by the
+    * plans of the checkpoints it builds on the way. A checkpoint scan
+    * prints nothing of how its table was built, so shape pins read this
+    * string: they cover the shared tables' builds as well as the query.
+    */
+  private def withBuilds(build: => org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, String) = {
+    var df: org.apache.spark.sql.DataFrame = null
+    val builds = checkpointBuilds { df = build }
+    (df, (df.queryExecution.executedPlan.toString +: builds).mkString("\n"))
+  }
+
   /** The search pair scans its input twice (stats branch, probe branch):
     * `term_counts` must run once per scan, and filter pushdown must not
     * re-inline it into the conjunction Filter.
@@ -88,9 +132,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("embedding near-dup verify evaluates the dot_fold cosine once per pair") {
-    // the query's own nodes only: the memoized vector table's cached plan
-    // (an InMemoryRelation, a leaf) holds the norms' dot_fold calls; a
-    // copy pushed into a Filter or a join condition would count twice
+    // the query's own nodes only: the norms' dot_fold calls ran when the
+    // vector table was checkpointed (a leaf now); a copy pushed into a
+    // Filter or a join condition would count twice
     val opt = graft.textops.Similarity.embeddingNearDup(spark, sf).queryExecution.optimizedPlan
     val own = opt.flatMap(_.expressions).map(e => count(e.toString, "graft.Kernels.dot_fold("))
     assert(own.sum === 1, s"\n$opt")
@@ -104,6 +148,15 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       assert(phys.find(_.nodeName.contains("Aggregate")).isEmpty, s"\n$phys")
       assert(phys.find(_.nodeName.contains("Join")).nonEmpty, s"\n$phys")
     }
+  }
+
+  test("simhash pairs block on fingerprints built without a sort") {
+    // the fingerprint table the pair query checkpoints has no consumer
+    // that needs doc_id order: no range exchange in its build
+    val builds = checkpointBuilds(graft.textops.Dedup.simhashPairs(spark, sf))
+    val fps = builds.filter(_.contains("graft.Kernels.simhash60("))
+    assert(fps.size === 1, builds.mkString("\n"))
+    assert(!fps.head.contains("rangepartitioning"), s"\n${fps.head}")
   }
 
   test("fingerprint/simhash/nfc kernels appear once in their queries") {
@@ -148,17 +201,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   test("curated build: anti-join decontam, partial-agg dedup, keyed pack exchange") {
     val d = graft.textops.TextAnalysis.loadDocs(spark, sf)
     val contaminated = graft.textops.Decontam.contaminatedIds(spark, sf)
-    // deployment shape: tag table materialized (driver query memoizes, a
-    // deployment writes it out); survivors left identity so the full
-    // downstream tree is visible — it appears once per consumer, so
-    // pins on it use contains, not counts
-    var tags: org.apache.spark.sql.DataFrame = null
-    val df = graft.textops.Corpus.curateCore(d, contaminated,
-      materializeTags = t => { tags = t.cache(); tags })
-    val phys = df.queryExecution.executedPlan.toString
-    tags.unpersist()
+    // the query plan plus the builds of its tag and survivor checkpoints:
+    // every pin below covers all three
+    val (_, phys) = withBuilds(graft.textops.Corpus.curateCore(d, contaminated))
     // the expensive text pass (word split, kernels) lives ONLY inside
-    // the cached tag computation: no Filter re-inlines the classifier
+    // the checkpointed tag table: no Filter re-inlines the classifier
     // features through the word-array projection (the pushdown
     // re-evaluation trap — it costs ~6 split evals per row on the full
     // corpus), and every downstream consumer reads the tag table
@@ -166,7 +213,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       .filter(l => l.contains("Filter") || l.contains("Condition"))
       .mkString("\n")
     assert(!filterLines.contains("split("), s"\n$filterLines")
-    assert(count(phys, "InMemoryTableScan") >= 2, s"\n$phys") // keepers + probe share it
+    // keepers + probe share the tag table
+    assert(checkpointScans(phys, "score_u8") >= 2, s"\n$phys")
+    // the rate aggregate and the sampling probe share the survivors
+    assert(checkpointScans(phys, "mix_h") >= 2, s"\n$phys")
     // decontamination is an anti-join against the contaminated-id set,
     // never a per-row verdict column carried through the pipeline
     assert(phys.contains("LeftAnti"), s"\n$phys")
@@ -196,28 +246,26 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(count(phys, "rangepartitioning") === 1, s"\n$phys")
   }
 
-  test("paragraph dedup: keyed exchanges only, memoized paragraph table shared") {
-    val df = graft.textops.Dedup.dedupParagraphs(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
+  test("paragraph dedup: keyed exchanges only, checkpointed paragraph table shared") {
+    val (_, phys) = withBuilds(graft.textops.Dedup.dedupParagraphs(spark, sf))
     // fixed-width branches exchange on the paragraph hash (frequency +
     // keeper, two-phase distinct agg) and doc_id (drop-set roll-up); the
     // only range sort is the trailing oracle-shape orderBy; paragraph
-    // arrays come from ONE cached relation shared by all consumers
+    // arrays come from ONE checkpoint shared by all consumers
     assert(phys.contains("hashpartitioning(ph"), s"\n$phys")
     assert(phys.contains("hashpartitioning(doc_id"), s"\n$phys")
     assert(!phys.contains("SinglePartition"), s"\n$phys")
     assert(count(phys, "rangepartitioning") === 1, s"\n$phys")
-    assert(count(phys, "InMemoryTableScan") >= 3, s"\n$phys")
+    assert(checkpointScans(phys) >= 3, s"\n$phys")
   }
 
-  test("clean pipeline: keyed exchanges only, memoized kept-line table shared") {
-    val df = graft.textops.TextAnalysis.cleanPipeline(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
+  test("clean pipeline: keyed exchanges only, checkpointed kept-line table shared") {
+    val (_, phys) = withBuilds(graft.textops.TextAnalysis.cleanPipeline(spark, sf))
     assert(phys.contains("hashpartitioning(ph"), s"\n$phys")
     assert(phys.contains("hashpartitioning(doc_id"), s"\n$phys")
     assert(!phys.contains("SinglePartition"), s"\n$phys")
     assert(count(phys, "rangepartitioning") === 1, s"\n$phys")
-    assert(count(phys, "InMemoryTableScan") >= 3, s"\n$phys")
+    assert(checkpointScans(phys) >= 3, s"\n$phys")
   }
 
   test("lm score: hash-keyed exchanges only, one bounded scalar agg, no text in shuffles") {
@@ -243,18 +291,18 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     val phys = df.queryExecution.executedPlan.toString
     // the tertile window runs per-language over the AGGREGATED histogram
     assert(count(phys, "hashpartitioning(lang") >= 1, s"\n$phys")
-    // the bounded 1-row vocab agg is the only SinglePartition source; the
-    // un-memoized fixture embeds the score subplan twice (histogram path +
-    // join-back), so it may appear at most twice — the driver path memoizes
-    // scoreTable, and the lm-score test above pins the single-copy shape.
+    // the bounded 1-row vocab agg is the only SinglePartition source; this
+    // plain-plan fixture embeds the score subplan twice (histogram path +
+    // join-back), so it may appear at most twice — the driver query
+    // checkpoints the score table, and the lm-score test above pins the
+    // single-copy shape.
     // Doc-level data is never globally sorted except by the output orderBy.
     assert(count(phys, "SinglePartition") <= 2, s"\n$phys")
     assert(count(phys, "rangepartitioning") <= 1, s"\n$phys")
   }
 
   test("containment: gram-keyed pair join, id-keyed roll-up, no text in shuffles") {
-    val df = graft.textops.Dedup.containment(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
+    val (df, phys) = withBuilds(graft.textops.Dedup.containment(spark, sf))
     // doc frequency + the pair join are keyed on the 60-bit gram hash;
     // intersection sizes roll up on the id pair
     assert(count(phys, "hashpartitioning(g#") >= 1, s"\n$phys")
@@ -267,12 +315,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("incremental dedup: hash-keyed signature join, no window, no text in shuffles") {
-    val df = graft.textops.Dedup.incremental(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
-    // the tagged (doc_id, text_hash, in_base) projection persists once;
-    // base sigs, delta, and the keeper agg all read the cache — one scan,
-    // one text-hashing pass
-    assert(count(phys, "InMemoryTableScan") >= 3, s"\n$phys")
+    val (df, phys) = withBuilds(graft.textops.Dedup.incremental(spark, sf))
+    // the tagged (doc_id, text_hash, in_base) projection is checkpointed
+    // once; base sigs, delta, and the keeper agg all read the checkpoint
+    // — one scan, one text-hashing pass
+    assert(checkpointScans(phys) >= 3, s"\n$phys")
     assert(count(phys, "hashpartitioning(text_hash") >= 1, s"\n$phys")
     assert(count(phys, "SinglePartition") === 0, s"\n$phys")
     assert(!phys.contains("Window"), s"\n$phys")
@@ -280,14 +327,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assertNoTextInShuffles(df)
   }
 
-  test("semdedup: memoized assign + dropped tables, keyed join, no cartesian") {
-    val df = graft.textops.Ivf.semDedup(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
-    // the verdict join-back reads TWO caches: the assignment table and
-    // the memoized dropped-id set (whose quadratic pair join — an
-    // equi-join on the cluster id, pinned by the dropped-table test
-    // below — runs once per session, shared with embed_diversity)
-    assert(count(phys, "InMemoryTableScan") >= 2, s"\n$phys")
+  test("semdedup: checkpointed assign table shared, keyed join, no cartesian") {
+    val (_, phys) = withBuilds(graft.textops.Ivf.semDedup(spark, sf))
+    // the verdict join-back and the dropped-id set (whose quadratic pair
+    // join — an equi-join on the cluster id, pinned by the dropped-table
+    // test below — runs once per query) read the one checkpointed
+    // assignment table
+    assert(checkpointScans(phys) >= 2, s"\n$phys")
     assert(!phys.contains("CartesianProduct"), s"\n$phys")
     assert(!phys.contains("BroadcastNestedLoopJoin"), s"\n$phys")
     assert(count(phys, "SinglePartition") === 0, s"\n$phys")
@@ -295,11 +341,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("semdedup dropped set: cid-keyed pair join over the shared assign table") {
-    val df = graft.textops.Ivf.droppedIds(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
-    // both pair sides read the cached assignment table; pair generation
-    // is an equi-join on the cluster id — never a product
-    assert(count(phys, "InMemoryTableScan") >= 2, s"\n$phys")
+    val (_, phys) = withBuilds(
+      graft.textops.Ivf.droppedIds(graft.textops.Ivf.assignTable(spark, sf)))
+    // both pair sides read the checkpointed assignment table; pair
+    // generation is an equi-join on the cluster id — never a product
+    assert(checkpointScans(phys) >= 2, s"\n$phys")
     assert(!phys.contains("CartesianProduct"), s"\n$phys")
     assert(!phys.contains("BroadcastNestedLoopJoin"), s"\n$phys")
     assert(count(phys, "SinglePartition") === 0, s"\n$phys")
@@ -355,11 +401,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("embed_diversity: cid-keyed window over the shared assign table") {
-    val df = graft.textops.Ivf.d4Diversity(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
-    // the memoized assignment table feeds the anti-join and the window;
-    // prototype ranking partitions on the cluster id, never globally
-    assert(count(phys, "InMemoryTableScan") >= 2, s"\n$phys")
+    val (_, phys) = withBuilds(graft.textops.Ivf.d4Diversity(spark, sf))
+    // the checkpointed assignment table feeds the anti-join and the
+    // window; prototype ranking partitions on the cluster id, never
+    // globally
+    assert(checkpointScans(phys) >= 2, s"\n$phys")
     assert(count(phys, "hashpartitioning(cid") >= 1, s"\n$phys")
     assert(count(phys, "SinglePartition") === 0, s"\n$phys")
     assert(count(phys, "rangepartitioning") <= 1, s"\n$phys")
@@ -368,11 +414,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ensemble filter: shared tag table, keyed keeper agg, no window") {
-    val df = graft.textops.Corpus.filterEnsemble(spark, sf)
-    val phys = df.queryExecution.executedPlan.toString
-    // the fixed-width tag table persists once; keeper agg + probe side
-    // both read the cache (rule/clf/hash signals = ONE text pass)
-    assert(count(phys, "InMemoryTableScan") >= 2, s"\n$phys")
+    val (_, phys) = withBuilds(graft.textops.Corpus.filterEnsemble(spark, sf))
+    // the fixed-width tag table is checkpointed once; keeper agg + probe
+    // side both read it (rule/clf/hash signals = ONE text pass)
+    assert(checkpointScans(phys, "gopher_keep") >= 2, s"\n$phys")
     assert(count(phys, "hashpartitioning(text_hash") >= 1, s"\n$phys")
     assert(!phys.contains("Window"), s"\n$phys")
     assert(!phys.contains("CartesianProduct"), s"\n$phys")
@@ -401,6 +446,58 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // the 64-row lambda table joins back as a BROADCAST, never a shuffle
     assert(phys.contains("BroadcastHashJoin"), s"\n$phys")
     assert(count(phys, "SinglePartition") <= 1, s"\n$phys")
+  }
+
+  // Every driver query pays its own way: a table it reads from several
+  // branches is checkpointed by that query and never cached across
+  // calls, so no call leaves a cache-manager entry behind and a second
+  // call does the same work as the first. A checkpoint's blocks are not a
+  // cache-manager entry: these tests do not pin when they are freed
+  // (DedupClustersSpec pins it for the connected-components rounds).
+
+  /** Evaluate every output column of every row (the `graft.Bench` force). */
+  private def force(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
+    df.select(max(xxhash64(struct(df.columns.map(c => col(s"`$c`")): _*)))).collect()
+  }
+
+  /** Spark jobs started while `body` runs, counted after the bus drains. */
+  private def jobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  /** The driver queries of `graft.textops` (curation, dedup, similarity,
+    * text scoring).
+    */
+  private val textops = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
+    Seq("dedup_", "sim_", "embed_", "text_", "corpus_").exists(name.startsWith)
+  }
+
+  test("no textops driver query leaves a cache entry behind") {
+    spark.catalog.clearCache()
+    assert(textops.size >= 40)
+    textops.foreach { case (name, q) =>
+      force(q(spark, sf))
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cache entry")
+    }
+  }
+
+  test("a second call runs as many Spark jobs as the first") {
+    Seq("corpus_decontam", "dedup_semantic").foreach { name =>
+      val q = SparkEntry.queries(name)
+      val first = jobs(force(q(spark, sf)))
+      val second = jobs(force(q(spark, sf)))
+      assert(second === first, s"$name: $first jobs cold, $second on the second call")
+    }
   }
 
   test("kernel queries carry no interpreted (CodegenFallback) expression") {

@@ -14,7 +14,8 @@ only = [a for a in sys.argv[3:] if not a.startswith("--")]
 if "--skip-verify" not in flags:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "[verify]" in l or "error" in l.lower()) + "\n")
     if r.returncode != 0:
