@@ -4,7 +4,7 @@ import java.time.Instant
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** The resumable extraction job (north_rule: "resumable from checkpoint
@@ -25,10 +25,17 @@ import scala.jdk.CollectionConverters._
   *                             run leaves 'running' rows the stuck scan
   *                             (Q6) finds
   *   _lineage/                 [[LineageSchema]], one row per extract run
+  *                             (the audit record; no reader depends on it)
+  *   _manifest.json            the store [[Manifest]]: `numBuckets` and the
+  *                             reader schema of each stage table, written
+  *                             by [[commitStage]] before the table's data
   * The metrics surface is [[metrics]] — a view over `_checkpoints`
   * (latest done row per bucket), not a second store to keep consistent.
-  * Every reader of these stores goes through [[readStore]] with the
-  * writer's schema, so no read runs a schema-inference job.
+  * Every reader of `_checkpoints` / `_lineage` goes through [[readStore]]
+  * with the writer's schema, and every reader of a stage table through
+  * [[readTable]] with the manifest's, so no read runs a schema-inference
+  * job. A directory without a manifest is not a store: its stage tables
+  * have no reader.
   *
   * Buckets come from `pmod(xxhash64(doc_id), numBuckets)` — uniform for any
   * id distribution (monotonic int-derived ids included), and the output
@@ -83,7 +90,7 @@ object ExtractPipeline {
       "n_dead_letter BIGINT, started_ts TIMESTAMP, finished_ts TIMESTAMP")
 
   /** `_lineage` row schema: one row per extract run, written by [[run]]. */
-  private[graft] val LineageSchema = StructType.fromDDL(
+  private val LineageSchema = StructType.fromDDL(
     "run_id STRING, input_path STRING, code_version STRING, " +
       "params_json STRING, run_ts TIMESTAMP")
 
@@ -127,7 +134,7 @@ object ExtractPipeline {
     * defines — no schema-inference job, and a missing store reads as an
     * empty table of that schema.
     */
-  private[graft] def readStore(spark: SparkSession, path: String,
+  private def readStore(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
     recoverStore(spark, path)
     if (fileExists(spark, path)) spark.read.schema(schema).parquet(path)
@@ -137,10 +144,107 @@ object ExtractPipeline {
   private def readCkpt(spark: SparkSession, outDir: String): DataFrame =
     readStore(spark, s"$outDir/_checkpoints", CkptSchema)
 
-  /** Crash recovery for [[cleanupCheckpoints]]'s rewrite: if the store is
-    * missing but the renamed-aside copy exists (crash between the two
-    * renames), restore it — otherwise every reader sees an empty store and
-    * resume recomputes the world.
+  /** The store manifest: the bucket count of the layout and, per stage
+    * table written so far (`data`, `llm`), the schema its readers see. The
+    * table schema depends on the input (a long-keyed input stores a long
+    * `doc_id`), so it is recorded at write time rather than inferred from
+    * parquet footers by a Spark job on every read.
+    */
+  private[graft] case class Manifest(numBuckets: Int, schemas: Map[String, StructType])
+
+  private val ManifestFile = "_manifest.json"
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The store's manifest, read on the driver (no Spark job); None when
+    * `outDir` holds none, i.e. is not a store.
+    */
+  private[graft] def readManifest(spark: SparkSession, outDir: String): Option[Manifest] = {
+    val path = s"$outDir/$ManifestFile"
+    recoverStore(spark, path)
+    if (!fileExists(spark, path)) None
+    else {
+      val in = hadoopFs(spark, path).open(new org.apache.hadoop.fs.Path(path))
+      val root = try Json.readTree(in) finally in.close()
+      Some(Manifest(root.get("numBuckets").asInt,
+        root.get("schemas").properties.asScala.map(e =>
+          e.getKey -> DataType.fromJson(e.getValue.toString).asInstanceOf[StructType]).toMap))
+    }
+  }
+
+  /** [[readManifest]] for a reader that needs a store. */
+  private[graft] def manifest(spark: SparkSession, outDir: String): Manifest =
+    readManifest(spark, outDir).getOrElse(throw new IllegalArgumentException(
+      s"$outDir is not a pipeline store: no manifest $outDir/$ManifestFile"))
+
+  /** Writes `m` as `<outDir>/_manifest.json_tmp`, then swaps it in
+    * ([[swapIn]]), so a crash never leaves a half-written manifest.
+    */
+  private def writeManifest(spark: SparkSession, outDir: String, m: Manifest): Unit = {
+    val root = Json.createObjectNode().put("numBuckets", m.numBuckets)
+    val schemas = root.putObject("schemas")
+    m.schemas.toSeq.sortBy(_._1).foreach { case (table, s) =>
+      schemas.set[com.fasterxml.jackson.databind.JsonNode](table, Json.readTree(s.json))
+    }
+    val path = s"$outDir/$ManifestFile"
+    val out = hadoopFs(spark, path).create(new org.apache.hadoop.fs.Path(s"${path}_tmp"), true)
+    try Json.writeValue(out: java.io.OutputStream, root) finally out.close()
+    swapIn(spark, path)
+  }
+
+  /** The schema a reader of a bucket-partitioned table sees for a written
+    * `schema`: the data columns, then the `bucket` partition column, all
+    * nullable (file sources read every column as nullable).
+    */
+  private def readerSchema(schema: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val (bucket, data) = schema.fields.partition(_.name == "bucket")
+    nullable(StructType(data ++ bucket)).asInstanceOf[StructType]
+  }
+
+  /** The manifest after a commit of `table` written with `schema`. An
+    * existing manifest must agree with `cfg.numBuckets` and with the
+    * table's recorded schema — a run with another layout would claim
+    * buckets that mean other documents, and store some documents twice —
+    * so a mismatch fails here, before any claim or write. A changed
+    * manifest is written before the table's data, so no data lands without
+    * one.
+    */
+  private def commitManifest(spark: SparkSession, cfg: Config, table: String,
+      schema: StructType): Manifest = {
+    val prior = readManifest(spark, cfg.outDir)
+    val stored = readerSchema(schema)
+    prior.foreach { m =>
+      require(m.numBuckets == cfg.numBuckets, s"${cfg.outDir} was written with " +
+        s"numBuckets=${m.numBuckets} (from its manifest); this run has " +
+        s"numBuckets=${cfg.numBuckets}")
+      m.schemas.get(table).foreach(s => require(s == stored,
+        s"${cfg.outDir}/$table was written with schema ${s.simpleString}; this " +
+          s"run writes ${stored.simpleString}"))
+    }
+    val m = Manifest(cfg.numBuckets,
+      prior.fold(Map.empty[String, StructType])(_.schemas) + (table -> stored))
+    if (!prior.contains(m)) writeManifest(spark, cfg.outDir, m)
+    m
+  }
+
+  /** THE reader of a stage table (`data`, `llm`), with the schema `m`
+    * records for it: no schema-inference job.
+    */
+  private[graft] def readTable(spark: SparkSession, outDir: String, table: String,
+      m: Manifest): DataFrame =
+    spark.read.schema(m.schemas.getOrElse(table, throw new IllegalArgumentException(
+      s"the manifest of $outDir records no `$table` table"))).parquet(s"$outDir/$table")
+
+  /** Crash recovery for [[swapIn]] (the checkpoint/lineage rewrite and the
+    * manifest write): if the store is missing but the renamed-aside copy
+    * exists (crash between the two renames), restore it — otherwise every
+    * reader sees an empty store and resume recomputes the world.
     */
   private def recoverStore(spark: SparkSession, path: String): Unit =
     synchronized {
@@ -214,10 +318,11 @@ object ExtractPipeline {
     appendCkpt(spark, buckets.map(ckptRow(cfg.runId, stage, _, "running",
       startedTs, None)), cfg.outDir)
 
-  /** THE commit path of a checkpointed stage. Writes `output` into the
-    * stage's bucketed table (dynamic partition overwrite: only the claimed
-    * buckets' directories are replaced, so a re-run after a crash is
-    * idempotent), reads it back with the schema just written, aggregates
+  /** THE commit path of a checkpointed stage. Checks and writes the store
+    * manifest ([[commitManifest]]), claims the buckets, writes `output` into
+    * the stage's bucketed table (dynamic partition overwrite: only the
+    * claimed buckets' directories are replaced, so a re-run after a crash is
+    * idempotent), reads it back with the manifest's schema, aggregates
     * the named `counters` (`n_docs` among them) per claimed bucket ONCE
     * and collects that (at most numBuckets rows) to the driver. From that
     * array it appends every claimed bucket's terminal row as ONE
@@ -233,14 +338,17 @@ object ExtractPipeline {
     * same nothing.
     */
   private def commitStage(spark: SparkSession, cfg: Config, stage: String,
-      claimed: Seq[Int], doneBefore: Int, startedTs: Instant, output: DataFrame,
+      claimed: Seq[Int], doneBefore: Int, output: DataFrame,
       counters: Seq[Column], emptyStatus: String): RunReport = {
-    val path = s"${cfg.outDir}/${StageData(stage)}"
+    val table = StageData(stage)
+    val m = commitManifest(spark, cfg, table, output.schema)
+    val startedTs = Instant.now()
+    claim(spark, cfg, stage, claimed, startedTs)
     output.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path)
-    // explicit schema: an all-empty run writes a fileless directory, and
-    // schema inference over zero files would throw
-    val agg = spark.read.schema(output.schema).parquet(path)
+      .partitionBy("bucket").parquet(s"${cfg.outDir}/$table")
+    // the manifest's schema also reads an all-empty run's fileless
+    // directory, where schema inference over zero files would throw
+    val agg = readTable(spark, cfg.outDir, table, m)
       .where(col("bucket").isin(claimed: _*))
       .groupBy("bucket").agg(counters.head, counters.tail: _*)
     val names = agg.columns.toSeq.tail
@@ -259,13 +367,13 @@ object ExtractPipeline {
     aggregate(spans, lit(0L), (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))
 
   /** Run (or resume) the extraction job. Only buckets without a 'done'
-    * checkpoint are computed and committed through [[commitStage]].
+    * checkpoint are computed and committed through [[commitStage]]; a
+    * resume must keep the store's `numBuckets` and input schema, or it
+    * fails before claiming anything.
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config): RunReport = {
     val done = doneBuckets(spark, cfg.outDir, Stage)
     val claimed = (0 until cfg.numBuckets).filterNot(done)
-    val startedTs = Instant.now()
-    claim(spark, cfg, Stage, claimed, startedTs)
 
     // THE input scan: bucket + per-doc dead-letter count tagged in one
     // projection, persisted so the light/heavy split below re-reads the
@@ -302,8 +410,7 @@ object ExtractPipeline {
 
     val spans = col("spans")
     val kinds = (k: String) => sum(size(filter(spans, s => s.getField("kind") === k)))
-    val report = commitStage(spark, cfg, Stage, claimed, done.size, startedTs,
-      extracted, Seq(
+    val report = try commitStage(spark, cfg, Stage, claimed, done.size, extracted, Seq(
         count(lit(1)).as("n_docs"),
         sum(size(spans)).as("n_spans"),
         sum(spanChars(spans)).as("text_chars"),
@@ -311,7 +418,7 @@ object ExtractPipeline {
         kinds("error").as("n_errors"),
         sum(col("n_dead")).as("n_dead_letter")),
       emptyStatus = "empty")
-    todo.unpersist()
+    finally todo.unpersist()
 
     val params = s"""{"numBuckets":${cfg.numBuckets},"heavyThreshold":""" +
       s"""${SkewSalter.DefaultHeavyThreshold},"chunkTarget":${SkewSalter.DefaultChunkTarget}}"""
@@ -348,13 +455,11 @@ object ExtractPipeline {
     val todo = (done.getOrElse(Stage, Set.empty) -- doneLlm).toSeq.sorted
     if (todo.isEmpty)
       return RunReport(cfg.numBuckets, doneLlm.size, 0, 0L)
-    val startedTs = Instant.now()
-    claim(spark, cfg, LlmStageName, todo, startedTs)
 
     // prompt build (L1) over the STORED extracted text, pruned to the
     // resumable buckets (prompt/format expressions shared with the
     // inline llm_pipeline query — one definition)
-    val data = spark.read.parquet(s"${cfg.outDir}/data")
+    val data = readTable(spark, cfg.outDir, StageData(Stage), manifest(spark, cfg.outDir))
       .where(col("bucket").isin(todo: _*))
     val prompts = data.select(
       col("doc_id"), LlmStage.promptFromSpans(col("spans")).as("full_prompt"))
@@ -368,7 +473,7 @@ object ExtractPipeline {
       .withColumn("formatted_response", LlmStage.formattedCol(col("llm_response")))
       .join(bucketOfDoc, Seq("doc_id"))
 
-    commitStage(spark, cfg, LlmStageName, todo, doneLlm.size, startedTs, replied,
+    commitStage(spark, cfg, LlmStageName, todo, doneLlm.size, replied,
       Seq(count(lit(1)).as("n_docs"),
         sum(when(col("llm_error").isNotNull, 1L).otherwise(0L)).as("n_errors")),
       emptyStatus = "done")
@@ -476,26 +581,40 @@ object ExtractPipeline {
     val n = kept.count()
     kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"${path}_tmp")
     kept.unpersist()
+    swapIn(spark, path)
+    n
+  }
+
+  /** Replaces the store (or manifest file) at `path` with its staged copy
+    * `<path>_tmp`, crash-safely: the old copy is renamed ASIDE to
+    * `<path>_old` (not deleted), the new one is renamed in, then the old
+    * copy is dropped. A crash at any point leaves either the original or
+    * the `_old` copy on disk, which [[recoverStore]] restores — never zero
+    * copies.
+    */
+  private def swapIn(spark: SparkSession, path: String): Unit = {
     val fs = hadoopFs(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val pTmp = new org.apache.hadoop.fs.Path(s"${path}_tmp")
     val pOld = new org.apache.hadoop.fs.Path(s"${path}_old")
     if (fs.exists(pOld)) fs.delete(pOld, true) // leftover from a past crash
-    // cleanup is a SINGLE-WRITER maintenance job (the reference runs it as
-    // one hourly beat, workers.py:385-390); readers self-heal via
-    // recoverStore, but two concurrent cleanups are not supported. Rename
-    // results are checked so an interleaving fails LOUDLY instead of
-    // silently leaving expired rows or nesting directories — including the
-    // quiet one: if a concurrent reader's recoverStore restores the store
-    // between the two renames, `rename(pTmp, p)` with an existing
-    // DIRECTORY destination moves _tmp INSIDE it and still returns true.
-    require(fs.rename(p, pOld), s"cleanup: rename $p aside failed")
-    require(!fs.exists(p),
-      s"cleanup: $p reappeared between renames (concurrent recoverStore?) — aborting")
-    require(fs.rename(pTmp, p), s"cleanup: rename $pTmp into place failed")
+    // a store has a SINGLE writer (cleanup is one hourly beat in the
+    // reference, workers.py:385-390; a pipeline run owns its outDir);
+    // readers self-heal via recoverStore, but two concurrent writers are
+    // not supported. Rename results are checked so an interleaving fails
+    // LOUDLY instead of silently leaving stale rows or nesting directories —
+    // including the quiet one: if a concurrent reader's recoverStore
+    // restores the store between the two renames, `rename(pTmp, p)` with an
+    // existing DIRECTORY destination moves _tmp INSIDE it and still returns
+    // true.
+    if (fs.exists(p)) {
+      require(fs.rename(p, pOld), s"replace $path: rename $p aside failed")
+      require(!fs.exists(p),
+        s"replace $path: $p reappeared between renames (concurrent recoverStore?) — aborting")
+    }
+    require(fs.rename(pTmp, p), s"replace $path: rename $pTmp into place failed")
     require(!fs.exists(new org.apache.hadoop.fs.Path(p, pTmp.getName)),
-      s"cleanup: rename nested $pTmp inside $p instead of replacing it")
+      s"replace $path: rename nested $pTmp inside $p instead of replacing it")
     fs.delete(pOld, true)
-    n
   }
 }

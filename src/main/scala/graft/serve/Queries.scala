@@ -85,50 +85,41 @@ object Queries {
   /** Q1 over the STORED table: queue scan + sort reading the pipeline's
     * `data/` output instead of re-extracting — the serving path of a
     * deployment, where the extraction ran once and queries hit the
-    * bucketed parquet layout.
+    * bucketed parquet layout. The table's schema comes from the store
+    * manifest, so building the query runs no Spark job.
     */
   def queueFrom(spark: SparkSession, outDir: String): DataFrame =
-    withQueueStatus(statusProjection(spark.read.parquet(s"$outDir/data")))
+    withQueueStatus(statusProjection(ExtractPipeline.readTable(spark, outDir, "data",
+      ExtractPipeline.manifest(spark, outDir))))
 
-  /** The store's bucket count, read from the pipeline's own `_lineage`
-    * record (latest run's params_json). The serving layer derives the
-    * layout from the store instead of trusting a caller — a wrong bucket
-    * count would make every lookup silently return zero rows.
+  /** The store's bucket count, read on the driver from the store manifest
+    * the pipeline writes with its tables (no Spark job); None when `outDir`
+    * holds no manifest. The serving layer derives the layout from the
+    * store instead of trusting a caller — a wrong bucket count would make
+    * every lookup silently return zero rows.
     */
   def storedNumBuckets(spark: SparkSession, outDir: String): Option[Int] =
-    // the pipeline's store reader: it self-heals a cleanup/compaction crash
-    // between its two renames (only _lineage_old left), which the serving
-    // layer must not read as "no store", and reads with the writer's schema
-    ExtractPipeline.readStore(spark, s"$outDir/_lineage", ExtractPipeline.LineageSchema)
-      .orderBy(desc("run_ts")).select("params_json").limit(1).collect().headOption
-      .flatMap(r => """"numBuckets":(\d+)""".r
-        .findFirstMatchIn(r.getString(0)).map(_.group(1).toInt))
+    ExtractPipeline.readManifest(spark, outDir).map(_.numBuckets)
 
   /** Q2 over the STORED table: point lookup with an explicit bucket
     * predicate, so partition pruning reduces the scan to ONE bucket
     * directory (then row-group pruning on the pushed doc_id filter) —
     * at 100 TB the difference between listing every file and touching
-    * one partition. The bucket count comes from the store's lineage
-    * record; passing one explicitly is validated against it (a mismatch
+    * one partition. The bucket count and the table schema come from the
+    * store manifest, so the lookup runs one Spark job, the scan; a
+    * directory without a manifest is not a store and fails. A bucket count
+    * passed explicitly is validated against the manifest's (a mismatch
     * would prune to the WRONG partition and return empty, a wrong
     * answer — so it fails loudly instead).
     */
   def lookupFrom(spark: SparkSession, outDir: String, docId: String,
       numBuckets: Int = -1): DataFrame = {
-    val stored = storedNumBuckets(spark, outDir)
-    val n = (stored, numBuckets) match {
-      case (Some(s), -1) => s
-      case (Some(s), c) =>
-        require(c == s, s"lookupFrom: caller numBuckets=$c but the store " +
-          s"was written with numBuckets=$s (from _lineage)")
-        s
-      case (None, c) =>
-        require(c > 0, s"lookupFrom: no _lineage record under $outDir and " +
-          "no explicit numBuckets given")
-        c
-    }
-    lookupProjection(spark.read.parquet(s"$outDir/data")
-      .where(col("bucket") === bucketOf(spark, docId, n) &&
+    val m = ExtractPipeline.manifest(spark, outDir)
+    require(numBuckets == -1 || numBuckets == m.numBuckets, s"lookupFrom: caller " +
+      s"numBuckets=$numBuckets but the store was written with " +
+      s"numBuckets=${m.numBuckets} (from its manifest)")
+    lookupProjection(ExtractPipeline.readTable(spark, outDir, "data", m)
+      .where(col("bucket") === bucketOf(spark, docId, m.numBuckets) &&
         col("doc_id") === docId))
   }
 

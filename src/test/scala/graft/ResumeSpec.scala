@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.ExtractPipeline
+import graft.serve.Queries
 import graft.synth.SpanSynth
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +20,20 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
 
   private def input = SpanSynth.docsInput(spark, "/root/testdata/sf0.001")
     .where(substring(col("doc_id"), 5, 8).cast("long") < 200)
+
+  /** The same documents keyed by a long `doc_id`. */
+  private def longKeyed = input.withColumn("doc_id", substring(col("doc_id"), 5, 8).cast("long"))
+
+  /** `body`'s result and the number of Spark jobs it ran, read from its
+    * job group once the listener bus has delivered every event.
+    */
+  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val r = try body finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 
   test("partial run + resume covers all buckets exactly once") {
     val out = freshDir()
@@ -203,34 +218,42 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("serve queries over the STORED table: lookup prunes to one bucket partition") {
-    import graft.serve.Queries
     val out = freshDir()
     val B = 8
     ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r1", numBuckets = B))
 
-    // queue over data/ covers every stored doc with derived status
-    val q = Queries.queueFrom(spark, out)
+    // queue over data/ covers every stored doc with derived status; the
+    // table schema comes from the store manifest, so building the query
+    // (like the llm stage's read of data/) runs no schema-inference job
+    val (q, queueJobs) = jobsOf("queue-build")(Queries.queueFrom(spark, out))
+    assert(queueJobs === 0)
     assert(q.count() === input.count())
     assert(q.columns.contains("status"))
+    assert(jobsOf("llm-data-read")(ExtractPipeline.readTable(spark, out, "data",
+      ExtractPipeline.manifest(spark, out)))._2 === 0)
 
     // driver-side bucket matches the stored partition of every doc, and
     // evaluating it runs no Spark job
     val stored = spark.read.parquet(s"$out/data").select("doc_id", "bucket").collect()
-    val sc = spark.sparkContext
-    sc.setJobGroup("bucket-of", "driver-side bucket")
-    stored.foreach(r => assert(Queries.bucketOf(spark, r.getString(0), B) === r.getInt(1)))
-    sc.clearJobGroup()
-    assert(sc.statusTracker.getJobIdsForGroup("bucket-of").isEmpty)
+    assert(jobsOf("bucket-of")(stored.foreach(r =>
+      assert(Queries.bucketOf(spark, r.getString(0), B) === r.getInt(1))))._2 === 0)
     val docId = stored(0).getString(0)
 
-    // bucket count derives from the store's _lineage record; an explicit
-    // mismatching count fails loudly instead of pruning to the wrong
-    // partition and returning empty
-    assert(Queries.storedNumBuckets(spark, out) === Some(B))
-    assert(Queries.lookupFrom(spark, out, docId).count() === 1)
+    // bucket count comes from the store manifest, read on the driver; the
+    // lookup runs one job, its scan; an explicit mismatching count fails
+    // loudly instead of pruning to the wrong partition and returning empty
+    assert(jobsOf("stored-buckets")(Queries.storedNumBuckets(spark, out)) === ((Some(B), 0)))
+    val (found, lookupJobs) = jobsOf("lookup")(Queries.lookupFrom(spark, out, docId).collect())
+    assert(found.length === 1)
+    assert(lookupJobs === 1)
     intercept[IllegalArgumentException] {
       Queries.lookupFrom(spark, out, docId, B + 1)
     }
+    // a directory without a manifest is not a store
+    val notAStore = freshDir()
+    assert(Queries.storedNumBuckets(spark, notAStore) === None)
+    assert(intercept[IllegalArgumentException](Queries.lookupFrom(spark, notAStore, docId))
+      .getMessage.contains("_manifest.json"))
 
     val lk = Queries.lookupFrom(spark, out, docId, B)
     val rows = lk.collect()
@@ -247,6 +270,52 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       s"no bucket partition filter in: ${scan.partitionFilters}")
     assert(scan.metadata("PushedFilters").contains("EqualTo(doc_id,"),
       s"doc_id not pushed: ${scan.metadata("PushedFilters")}")
+  }
+
+  test("store manifest records the schemas spark.read.parquet infers (string and long doc_id)") {
+    val docIdTypes = Seq(input, longKeyed).map { in =>
+      val out = freshDir()
+      val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 4)
+      ExtractPipeline.run(spark, in, cfg)
+      ExtractPipeline.runLlmStage(spark, cfg,
+        transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L)
+      val m = ExtractPipeline.manifest(spark, out)
+      assert(m.numBuckets === 4)
+      assert(m.schemas.keySet === Set("data", "llm"))
+      m.schemas.foreach { case (table, schema) =>
+        assert(schema === spark.read.parquet(s"$out/$table").schema, table)
+      }
+      m.schemas("data")("doc_id").dataType
+    }
+    assert(docIdTypes === Seq(org.apache.spark.sql.types.StringType,
+      org.apache.spark.sql.types.LongType))
+  }
+
+  test("resume with another numBuckets or doc_id type fails before claiming anything") {
+    val out = freshDir()
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r8", numBuckets = 8))
+    // every row of every store, so "untouched" covers claims, lineage and data
+    def snapshot = Seq("_checkpoints", "_lineage", "data").map(t =>
+      spark.read.parquet(s"$out/$t").collect().map(_.toString).sorted.toSeq)
+    val before = snapshot
+    // a 16-bucket resume would claim buckets 8-15 and store documents a
+    // second time under the other layout
+    val e = intercept[IllegalArgumentException] {
+      ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r16", numBuckets = 16))
+    }
+    assert(e.getMessage.contains("numBuckets=8"))
+    intercept[IllegalArgumentException] {
+      ExtractPipeline.run(spark, longKeyed, ExtractPipeline.Config(out, "rl", numBuckets = 8))
+    }
+    intercept[IllegalArgumentException] {
+      ExtractPipeline.runLlmStage(spark, ExtractPipeline.Config(out, "l16", numBuckets = 16),
+        transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L)
+    }
+    assert(snapshot === before)
+    assert(spark.read.parquet(s"$out/data").select("doc_id").distinct().count() ===
+      input.count())
+    assert(Queries.storedNumBuckets(spark, out) === Some(8))
+    assert(ExtractPipeline.verifyCheckpoints(spark, out).count() === 0)
   }
 
   test("LLM stage (P2/P3) runs checkpointed over extract-done buckets and resumes") {
