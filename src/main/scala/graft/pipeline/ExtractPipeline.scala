@@ -4,7 +4,8 @@ import java.time.Instant
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType,
+  ShortType, StringType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** The resumable extraction job (north_rule: "resumable from checkpoint
@@ -17,7 +18,9 @@ import scala.jdk.CollectionConverters._
   * Layout under `outDir` (bucketed Parquet with Iceberg-compatible layout
   * semantics — no Iceberg jar in-sandbox, see SURVEY.md §7.1):
   *   data/bucket=N/            extracted docs (+ per-doc n_dead counter),
-  *                             parquet partitioned by bucket
+  *                             parquet partitioned by bucket: one file per
+  *                             bucket per stage run, written by one task
+  *   llm/bucket=N/             the llm stage's replies, laid out the same
   *   _checkpoints/             [[CkptSchema]]; a stage run appends one file
   *                             of status='running' rows for the buckets it
   *                             claims, then ONE file of terminal rows when
@@ -49,7 +52,9 @@ import scala.jdk.CollectionConverters._
   * remote 100 TB source three times, which is what the naive
   * dead-agg + light + heavy layout did. Dead-letter counts ride through
   * extraction as a carried column and are aggregated from the WRITTEN
-  * output, so no separate input-side aggregate exists at all.
+  * output, so no separate input-side aggregate exists at all. Extraction
+  * itself is map-only; the stage output shuffles once, at commit, so that
+  * each bucket is written by exactly one task ([[commitStage]]).
   */
 object ExtractPipeline {
 
@@ -238,8 +243,26 @@ object ExtractPipeline {
     */
   private[graft] def readTable(spark: SparkSession, outDir: String, table: String,
       m: Manifest): DataFrame =
-    spark.read.schema(m.schemas.getOrElse(table, throw new IllegalArgumentException(
-      s"the manifest of $outDir records no `$table` table"))).parquet(s"$outDir/$table")
+    spark.read.schema(tableSchema(outDir, table, m)).parquet(s"$outDir/$table")
+
+  /** [[readTable]] restricted to `bucket`: only that bucket's directory is
+    * listed (`basePath` keeps `bucket` a partition column), and the bucket
+    * predicate stays in the plan as a partition filter. A bucket with no
+    * directory (no document of the store hashes to it) reads as no rows.
+    */
+  private[graft] def readBucket(spark: SparkSession, outDir: String, table: String,
+      m: Manifest, bucket: Int): DataFrame = {
+    val schema = tableSchema(outDir, table, m)
+    val dir = s"$outDir/$table/bucket=$bucket"
+    (if (fileExists(spark, dir))
+       spark.read.schema(schema).option("basePath", s"$outDir/$table").parquet(dir)
+     else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+      .where(col("bucket") === bucket)
+  }
+
+  private def tableSchema(outDir: String, table: String, m: Manifest): StructType =
+    m.schemas.getOrElse(table, throw new IllegalArgumentException(
+      s"the manifest of $outDir records no `$table` table"))
 
   /** Crash recovery for [[swapIn]] (the checkpoint/lineage rewrite and the
     * manifest write): if the store is missing but the renamed-aside copy
@@ -326,9 +349,19 @@ object ExtractPipeline {
     * the named `counters` (`n_docs` among them) per claimed bucket ONCE
     * and collects that (at most numBuckets rows) to the driver. From that
     * array it appends every claimed bucket's terminal row as ONE
-    * `_checkpoints` file and builds the [[RunReport]]. Counting the WRITTEN output verifies the write like
-    * the reference's paranoid re-read (reference workers.py:91-109), as one
-    * scan instead of per-row round-trips.
+    * `_checkpoints` file and builds the [[RunReport]]. Counting the WRITTEN
+    * output verifies the write like the reference's paranoid re-read
+    * (reference workers.py:91-109), as one scan instead of per-row
+    * round-trips.
+    *
+    * The write is clustered by bucket: `output` is hash-repartitioned on
+    * `bucket` into `min(numBuckets, defaultParallelism)` partitions, so each
+    * bucket is written by exactly one task, as one file, and every task
+    * slot writes. A task writes one file per bucket it holds rows for, and
+    * each file has a fixed creation cost, so an unclustered write pays it
+    * up to `numBuckets` times per task. The count is explicit because
+    * adaptive execution would coalesce a small shuffle into one serial
+    * write task.
     *
     * `emptyStatus` closes a claimed bucket with no output rows, so the
     * stuck scan does not flag it forever. The stages differ on purpose:
@@ -344,7 +377,9 @@ object ExtractPipeline {
     val m = commitManifest(spark, cfg, table, output.schema)
     val startedTs = Instant.now()
     claim(spark, cfg, stage, claimed, startedTs)
-    output.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+    output.repartition(math.min(cfg.numBuckets, spark.sparkContext.defaultParallelism),
+        col("bucket"))
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(s"${cfg.outDir}/$table")
     // the manifest's schema also reads an all-empty run's fileless
     // directory, where schema inference over zero files would throw
@@ -437,6 +472,13 @@ object ExtractPipeline {
     * llm_response, llm_error, llm_attempts, formatted_response)`; dead-lettered transport failures
     * are ROWS here (`llm_error` set), counted per bucket in `n_errors`.
     *
+    * The stage scans `data/` once and joins nothing: a reply's `bucket` is
+    * recomputed from its `doc_id`, which `generate` stringifies, cast back
+    * to the `doc_id` type the manifest records for `data`. The cast-back is
+    * exact for string and integral ids (`xxhash64` of the restored value is
+    * the write path's), so a `data` table keyed by any other type fails
+    * here with `IllegalArgumentException`, before anything is claimed.
+    *
     * The transport is the pluggable [[graft.llm.LlmStage.LlmTransport]]
     * (liveness-probed at submit; EchoTransport in-sandbox — the network
     * call stays out of the extraction invariant, SURVEY.md §0).
@@ -456,22 +498,23 @@ object ExtractPipeline {
     if (todo.isEmpty)
       return RunReport(cfg.numBuckets, doneLlm.size, 0, 0L)
 
+    val m = manifest(spark, cfg.outDir)
+    val idType = tableSchema(cfg.outDir, StageData(Stage), m)("doc_id").dataType
+    require(idType match {
+      case _: StringType | ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }, s"${cfg.outDir}/${StageData(Stage)} is keyed by doc_id ${idType.simpleString}; " +
+      "the llm stage takes string or integral ids")
+
     // prompt build (L1) over the STORED extracted text, pruned to the
     // resumable buckets (prompt/format expressions shared with the
     // inline llm_pipeline query — one definition)
-    val data = readTable(spark, cfg.outDir, StageData(Stage), manifest(spark, cfg.outDir))
+    val prompts = readTable(spark, cfg.outDir, StageData(Stage), m)
       .where(col("bucket").isin(todo: _*))
-    val prompts = data.select(
-      col("doc_id"), LlmStage.promptFromSpans(col("spans")).as("full_prompt"))
-    // the output CARRIES the stored bucket (joined back on the stringified
-    // id) rather than re-hashing: generate stringifies doc_id, and
-    // xxhash64(string) differs from xxhash64(long) — re-hashing would
-    // scatter a long-keyed input's rows across the WRONG partitions
-    val bucketOfDoc = data.select(
-      col("doc_id").cast("string").as("doc_id"), col("bucket"))
+      .select(col("doc_id"), LlmStage.promptFromSpans(col("spans")).as("full_prompt"))
     val replied = LlmStage.generate(prompts, model, transport, maxRetries, backoffMs)
       .withColumn("formatted_response", LlmStage.formattedCol(col("llm_response")))
-      .join(bucketOfDoc, Seq("doc_id"))
+      .withColumn("bucket", bucketColOf(col("doc_id").cast(idType), cfg.numBuckets))
 
     commitStage(spark, cfg, LlmStageName, todo, doneLlm.size, replied,
       Seq(count(lit(1)).as("n_docs"),

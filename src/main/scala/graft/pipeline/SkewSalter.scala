@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *    collect order is NOT otherwise guaranteed).
   *
   * The heavy side is a tiny fraction of rows at web scale, so its shuffle
-  * is cheap; the light side dominates and stays shuffle-free. Equivalence
-  * of the two paths is property-tested (extraction result is invariant to
-  * `heavyThreshold`).
+  * is cheap; the light side dominates and extracts shuffle-free (the
+  * pipeline's one shuffle of its output is the bucket clustering at
+  * commit, after extraction). Equivalence of the two paths is
+  * property-tested (extraction result is invariant to `heavyThreshold`).
   */
 object SkewSalter {
 

@@ -101,16 +101,16 @@ object Queries {
   def storedNumBuckets(spark: SparkSession, outDir: String): Option[Int] =
     ExtractPipeline.readManifest(spark, outDir).map(_.numBuckets)
 
-  /** Q2 over the STORED table: point lookup with an explicit bucket
-    * predicate, so partition pruning reduces the scan to ONE bucket
-    * directory (then row-group pruning on the pushed doc_id filter) —
-    * at 100 TB the difference between listing every file and touching
-    * one partition. The bucket count and the table schema come from the
-    * store manifest, so the lookup runs one Spark job, the scan; a
-    * directory without a manifest is not a store and fails. A bucket count
-    * passed explicitly is validated against the manifest's (a mismatch
-    * would prune to the WRONG partition and return empty, a wrong
-    * answer — so it fails loudly instead).
+  /** Q2 over the STORED table: point lookup that lists ONE bucket
+    * directory and keeps the bucket predicate as a partition filter (then
+    * row-group pruning on the pushed doc_id filter) — at 100 TB the
+    * difference between listing every file and touching one partition; an
+    * id whose bucket has no directory returns no row. The bucket count and
+    * the table schema come from the store manifest, so the lookup runs one
+    * Spark job, the scan; a directory without a manifest is not a store
+    * and fails. A bucket count passed explicitly is validated against the
+    * manifest's (a mismatch would prune to the WRONG partition and return
+    * empty, a wrong answer — so it fails loudly instead).
     */
   def lookupFrom(spark: SparkSession, outDir: String, docId: String,
       numBuckets: Int = -1): DataFrame = {
@@ -118,9 +118,8 @@ object Queries {
     require(numBuckets == -1 || numBuckets == m.numBuckets, s"lookupFrom: caller " +
       s"numBuckets=$numBuckets but the store was written with " +
       s"numBuckets=${m.numBuckets} (from its manifest)")
-    lookupProjection(ExtractPipeline.readTable(spark, outDir, "data", m)
-      .where(col("bucket") === bucketOf(spark, docId, m.numBuckets) &&
-        col("doc_id") === docId))
+    lookupProjection(ExtractPipeline.readBucket(spark, outDir, "data", m,
+      bucketOf(spark, docId, m.numBuckets)).where(col("doc_id") === docId))
   }
 
   /** Per-class aggregate metrics over the extracted output — the VERBOSE

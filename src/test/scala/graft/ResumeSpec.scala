@@ -35,6 +35,56 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     (r, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
+  /** Every row of every store, so "untouched" covers claims, lineage and data. */
+  private def snapshot(out: String) = Seq("_checkpoints", "_lineage", "data").map(t =>
+    spark.read.parquet(s"$out/$t").collect().map(_.toString).sorted.toSeq)
+
+  /** Rewrites `_checkpoints` without the rows matching `lost`, as a crash
+    * that never wrote them would have left it.
+    */
+  private def loseCkptRows(out: String, lost: org.apache.spark.sql.Column): Unit = {
+    val kept = spark.read.parquet(s"$out/_checkpoints").where(!lost).cache()
+    kept.count()
+    kept.coalesce(1).write.mode("overwrite").parquet(s"$out/_ckpt_tmp")
+    kept.unpersist()
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$out/_checkpoints"), true)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$out/_ckpt_tmp"),
+      new org.apache.hadoop.fs.Path(s"$out/_checkpoints"))
+  }
+
+  /** The physical plans of the parquet writes into a directory named
+    * `table` that `body` runs, read from a `QueryExecutionListener` once
+    * the listener bus has delivered every event.
+    */
+  private def writePlans(table: String)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val l = new QueryExecutionListener {
+      // adaptive execution wraps the write command itself
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        Aqe.collect(qe.executedPlan) {
+          case w @ DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _)
+              if i.outputPath.getName == table => w
+        }.foreach(plans.add)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  /** Walks adaptive plans and query stages as well. */
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   test("partial run + resume covers all buckets exactly once") {
     val out = freshDir()
     val B = 8
@@ -118,14 +168,7 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     val B = 4
     ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r1", numBuckets = B))
     // wipe one bucket's checkpoint rows to force recompute of bucket 2
-    val ckpt = spark.read.parquet(s"$out/_checkpoints").where(col("bucket") =!= 2).cache()
-    ckpt.count()
-    ckpt.coalesce(1).write.mode("overwrite").parquet(s"$out/_ckpt_tmp")
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/_checkpoints"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$out/_ckpt_tmp"),
-      new org.apache.hadoop.fs.Path(s"$out/_checkpoints"))
+    loseCkptRows(out, col("bucket") === 2)
 
     val r = ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r2", numBuckets = B))
     assert(r.bucketsRun === 1)
@@ -150,15 +193,7 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
 
     // simulate a genuine crash: strip bucket 2's terminal row, leaving its
     // 'running' claim dangling
-    val ckpt = spark.read.parquet(s"$out/_checkpoints")
-      .where(!(col("bucket") === 2 && col("status") =!= "running")).cache()
-    ckpt.count()
-    ckpt.coalesce(1).write.mode("overwrite").parquet(s"$out/_ckpt_tmp")
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/_checkpoints"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$out/_ckpt_tmp"),
-      new org.apache.hadoop.fs.Path(s"$out/_checkpoints"))
+    loseCkptRows(out, col("bucket") === 2 && col("status") =!= "running")
 
     val stale = ExtractPipeline.staleCheckpoints(spark, out, 0.0).collect()
     assert(stale.map(_.getAs[Int]("bucket")).toSeq === Seq(2))
@@ -272,6 +307,19 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       s"doc_id not pushed: ${scan.metadata("PushedFilters")}")
   }
 
+  test("a lookup whose bucket has no directory returns no row") {
+    val out = freshDir()
+    val B = 8
+    val partial = input.where(ExtractPipeline.bucketCol(B) < 3)
+    ExtractPipeline.run(spark, partial, ExtractPipeline.Config(out, "r1", numBuckets = B))
+    val absent = input.where(ExtractPipeline.bucketCol(B) === 5).head().getString(0)
+    assert(!new java.io.File(s"$out/data/bucket=5").exists())
+    assert(Queries.lookupFrom(spark, out, absent).collect().isEmpty)
+    val present = partial.head().getString(0)
+    assert(Queries.lookupFrom(spark, out, present).collect().map(_.getString(0)).toSeq ===
+      Seq(present))
+  }
+
   test("store manifest records the schemas spark.read.parquet infers (string and long doc_id)") {
     val docIdTypes = Seq(input, longKeyed).map { in =>
       val out = freshDir()
@@ -294,10 +342,7 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
   test("resume with another numBuckets or doc_id type fails before claiming anything") {
     val out = freshDir()
     ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r8", numBuckets = 8))
-    // every row of every store, so "untouched" covers claims, lineage and data
-    def snapshot = Seq("_checkpoints", "_lineage", "data").map(t =>
-      spark.read.parquet(s"$out/$t").collect().map(_.toString).sorted.toSeq)
-    val before = snapshot
+    val before = snapshot(out)
     // a 16-bucket resume would claim buckets 8-15 and store documents a
     // second time under the other layout
     val e = intercept[IllegalArgumentException] {
@@ -311,11 +356,88 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       ExtractPipeline.runLlmStage(spark, ExtractPipeline.Config(out, "l16", numBuckets = 16),
         transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L)
     }
-    assert(snapshot === before)
+    assert(snapshot(out) === before)
     assert(spark.read.parquet(s"$out/data").select("doc_id").distinct().count() ===
       input.count())
     assert(Queries.storedNumBuckets(spark, out) === Some(8))
     assert(ExtractPipeline.verifyCheckpoints(spark, out).count() === 0)
+  }
+
+  test("each stage writes one parquet file per bucket, through a resume") {
+    val out = freshDir()
+    val B = 8
+    // a document past the salter's threshold, so the heavy path's shuffle
+    // output is clustered too, in an input of 4 partitions that each hold
+    // rows of every bucket
+    val n = graft.pipeline.SkewSalter.DefaultHeavyThreshold + 100
+    val heavy = input.limit(1).select(concat(col("doc_id"), lit("-heavy")).as("doc_id"),
+      transform(sequence(lit(0), lit(n - 1)), i => struct(lit("text").as("kind"),
+        concat(lit("w"), i.cast("string")).as("text"),
+        lit(null).cast("string").as("media_ref"), i.as("offset"))).as("spans"))
+    val in = input.unionByName(heavy).repartition(4)
+    assert(in.rdd.getNumPartitions === 4)
+    val cfg = ExtractPipeline.Config(out, "r1", numBuckets = B)
+    ExtractPipeline.run(spark, in, cfg)
+    ExtractPipeline.runLlmStage(spark, cfg,
+      transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L)
+    // a crash lost bucket 2's terminal rows in both stages: the resume
+    // recomputes and rewrites that bucket only
+    loseCkptRows(out, col("bucket") === 2 && col("status") =!= "running")
+    val cfg2 = ExtractPipeline.Config(out, "r2", numBuckets = B)
+    assert(ExtractPipeline.run(spark, in, cfg2).bucketsRun === 1)
+    assert(ExtractPipeline.runLlmStage(spark, cfg2,
+      transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L).bucketsRun === 1)
+
+    Seq("data", "llm").foreach { t =>
+      val files = new java.io.File(s"$out/$t").listFiles().filter(_.getName.startsWith("bucket="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+      assert(files.size === B, t)
+      assert(files.values.forall(_ == 1), s"$t: $files")
+      assert(spark.read.parquet(s"$out/$t").count() === input.count() + 1, t)
+    }
+    assert(spark.read.parquet(s"$out/data").where(col("doc_id").endsWith("-heavy")).count() === 1)
+    assert(ExtractPipeline.verifyCheckpoints(spark, out).count() === 0)
+    assert(ExtractPipeline.verifyCheckpoints(spark, out, "llm").count() === 0)
+  }
+
+  test("llm rows land in their data row's bucket, from one scan of data/ and no join") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    Seq(input, longKeyed).foreach { in =>
+      val out = freshDir()
+      val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 8)
+      ExtractPipeline.run(spark, in, cfg)
+      val plans = writePlans("llm")(ExtractPipeline.runLlmStage(spark, cfg,
+        transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L))
+      assert(plans.size === 1)
+      val scans = Aqe.collect(plans.head) { case s: FileSourceScanExec => s }
+      assert(scans.map(_.relation.location.rootPaths.map(_.getName)) === Seq(Seq("data")),
+        s"\n${plans.head}")
+      assert(Aqe.collect(plans.head) { case j: BaseJoinExec => j }.isEmpty, s"\n${plans.head}")
+
+      val data = spark.read.parquet(s"$out/data")
+        .select(col("doc_id").cast("string").as("doc_id"), col("bucket").as("data_bucket"))
+      val both = spark.read.parquet(s"$out/llm").select("doc_id", "bucket")
+        .join(data, Seq("doc_id"), "full_outer")
+      assert(both.count() === in.count())
+      assert(both.where(!(col("bucket") <=> col("data_bucket"))).count() === 0)
+    }
+  }
+
+  test("the llm stage rejects a doc_id type it cannot bucket back, before claiming") {
+    val out = freshDir()
+    val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 4)
+    ExtractPipeline.run(spark,
+      input.withColumn("doc_id", substring(col("doc_id"), 5, 8).cast("double")), cfg)
+    val before = snapshot(out)
+    val e = intercept[IllegalArgumentException] {
+      ExtractPipeline.runLlmStage(spark, cfg,
+        transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L)
+    }
+    assert(e.getMessage.contains("doc_id double"))
+    assert(snapshot(out) === before)
+    assert(!new java.io.File(s"$out/llm").exists())
+    assert(ExtractPipeline.manifest(spark, out).schemas.keySet === Set("data"))
   }
 
   test("LLM stage (P2/P3) runs checkpointed over extract-done buckets and resumes") {
@@ -342,16 +464,7 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
 
     // simulate a crash: drop one bucket's llm checkpoint rows -> resume
     // recomputes exactly that bucket, idempotently
-    val kept = spark.read.parquet(s"$out/_checkpoints")
-      .where(!(col("stage") === "llm" && col("bucket") === 1)).cache()
-    kept.count()
-    kept.coalesce(1).write.mode("overwrite").parquet(s"$out/_ckpt_tmp")
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    kept.unpersist()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/_checkpoints"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$out/_ckpt_tmp"),
-      new org.apache.hadoop.fs.Path(s"$out/_checkpoints"))
+    loseCkptRows(out, col("stage") === "llm" && col("bucket") === 1)
     // the stage-aware invariant checker flags the missing llm checkpoint
     // (data exists for bucket 1 but no done row) before the resume...
     assert(ExtractPipeline.verifyCheckpoints(spark, out, "llm")
