@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
 object Queries {
 
   /** Per-doc status projection over any extracted-output relation
-    * (inline extraction or the pipeline's stored `data/` table).
-    * Round 6: the four span-array counters come from the single-pass
-    * [[SpanStats]] kernel (the HOF forms ran four interpreted passes
-    * per row; parity pinned in SpanStatsSpec), staged in one projection
+    * (inline extraction or the pipeline's stored `data/` table). The
+    * four span-array counters come from the single-pass [[SpanStats]]
+    * kernel (parity pinned in SpanStatsSpec), staged in one projection
     * so the kernel evaluates once.
     */
   def statusProjection(out: DataFrame): DataFrame =
@@ -34,11 +33,6 @@ object Queries {
   def docStatus(spark: SparkSession, sfDir: String): DataFrame =
     statusProjection(Extractor.extract(SpanSynth.docsInput(spark, sfDir)))
 
-  /** Q1 — queue scan + sort (reference main.py:339-382): every doc with a
-    * derived status, deterministically ordered. At scale this is a
-    * range-partitioned sort on the serving table, pruned by any pushed
-    * predicate.
-    */
   /** Derived status + deterministic order — shared by the inline and
     * stored-table queue scans.
     */
@@ -47,6 +41,11 @@ object Queries {
       when(col("n_errors") > 0, lit("ERROR")).otherwise(lit("COMPLETED")))
       .orderBy(col("doc_id"))
 
+  /** Q1 — queue scan + sort (reference main.py:339-382): every doc with a
+    * derived status, deterministically ordered. At scale this is a
+    * range-partitioned sort on the serving table, pruned by any pushed
+    * predicate.
+    */
   def queue(spark: SparkSession, sfDir: String): DataFrame =
     withQueueStatus(docStatus(spark, sfDir))
 

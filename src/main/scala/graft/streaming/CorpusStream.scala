@@ -1,17 +1,18 @@
 package graft.streaming
 
 import graft.extract.Extractor
-import graft.textops.{Corpus, PortableHash, TextAnalysis}
+import graft.textops.Corpus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The CONTINUOUS corpus tail — the streaming deployment of the batch
   * [[graft.textops.Corpus.buildCorpusCore]] front: span documents arrive
   * in micro-batches, are extracted ([[Extractor.extract]]), tagged
-  * (token count, language guess, Gopher verdict — the same shared column
-  * definitions as the batch build, no logic forks), exact-deduplicated
-  * against ALL history via keyed state on the 60-bit content hash, and
+  * through the batch build's own tag projection ([[Corpus.corpusTags]]:
+  * token count, language guess, Gopher verdict, content hash),
+  * exact-deduplicated against ALL history by
+  * [[StreamingDedup.firstArrival]] on the 60-bit content hash, and
   * stratified-sampled ([[Corpus.sampleKeep]], the same predicate). The
   * output is the stream of corpus-surviving doc rows
   * `(doc_id, n_tokens, lang_guess, text_hash)` — the input a (batch)
@@ -42,49 +43,13 @@ object CorpusStream {
     array_join(transform(filter(spans, s => s.getField("kind") === "text"),
       s => coalesce(s.getField("text"), lit(""))), "\n\n")
 
-  case class TaggedDoc(doc_id: String, text_hash: Long, n_tokens: Long,
-      lang_guess: String, quality_keep: Boolean)
-  case class FlaggedDoc(doc_id: String, text_hash: Long, n_tokens: Long,
-      lang_guess: String, quality_keep: Boolean, is_duplicate: Boolean)
-
-  /** Group handler: flags every doc of the hash group except the
-    * first-ever-seen (earlier batch wins; within this batch, min doc_id)
-    * — keeper selection shared with [[StreamingDedup.keeperFlags]].
-    */
-  def flagGroup(key: Long, rows: Iterator[TaggedDoc],
-      state: GroupState[Boolean]): Iterator[FlaggedDoc] = {
-    val seenBefore = state.getOption.getOrElse(false)
-    val batch = rows.toArray
-    if (!seenBefore && batch.nonEmpty) state.update(true)
-    StreamingDedup.keeperFlags(batch, seenBefore)(_.doc_id).map { case (d, dup) =>
-      FlaggedDoc(d.doc_id, d.text_hash, d.n_tokens, d.lang_guess,
-        d.quality_keep, dup)
-    }
-  }
-
   /** The whole transform (testable on streaming or batch relations):
     * extract → tag → stateful dedup → quality + sample filter.
     */
   def corpusStream(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val withText = Extractor.extract(docs)
       .select(col("doc_id"), docText(col("spans")).as("text"))
-    // the word array splits once; every tag derives from it (the same
-    // single-eval shape as the batch build)
-    val tagged = withText
-      .select(col("doc_id"), col("text"),
-        TextAnalysis.nonEmptyWords(col("text")).as("ws"))
-      .select(
-        col("doc_id"),
-        PortableHash.hexint60(col("text")).as("text_hash"),
-        size(col("ws")).cast("long").as("n_tokens"),
-        TextAnalysis.langGuessFromWords(col("ws")).as("lang_guess"),
-        TextAnalysis.gopherKeepFromWords(col("text"), col("ws")).as("quality_keep"))
-    tagged.as[TaggedDoc]
-      .groupByKey(_.text_hash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(flagGroup)
-      .toDF()
+    StreamingDedup.firstArrival[String](Corpus.corpusTags(withText), "text_hash", "doc_id")
       .where(col("quality_keep") && !col("is_duplicate") &&
         Corpus.sampleKeep(col("doc_id"), col("lang_guess")))
       .select("doc_id", "n_tokens", "lang_guess", "text_hash")

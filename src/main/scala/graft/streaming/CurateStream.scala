@@ -1,16 +1,17 @@
 package graft.streaming
 
-import graft.textops.{Corpus, Decontam, PortableHash, TextAnalysis}
+import graft.textops.{Corpus, Decontam, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The CURATED continuous tail — the streaming deployment of the batch
   * [[graft.textops.Corpus.curateCore]] row-level stages over a growing
-  * table of text documents: tag (token count, language guess, content
-  * hash, classifier verdict, benchmark flag, mix hash — the same shared
-  * column definitions as the batch capstone, no logic forks) → stateful
-  * exact dedup against ALL history on the 60-bit hash → classifier cut +
+  * table of text documents: tag through the batch capstone's own tag
+  * projection ([[Corpus.curateTags]]: token count, language guess,
+  * content hash, classifier score, benchmark flag, mix hash) → stateful
+  * exact dedup against ALL history on the 60-bit hash
+  * ([[StreamingDedup.firstArrival]]) → classifier cut +
   * benchmark exclusion + decontamination + survivor-weighted mix
   * sampling. Output is the stream of curated doc rows
   * `(doc_id, source, n_tokens, lang_guess, text_hash)` — the input a
@@ -65,26 +66,6 @@ object CurateStream {
       n_tokens: Long, lang_guess: String, mix_h: Long, keep_clf: Boolean,
       is_benchmark: Boolean, contaminated: Boolean)
 
-  case class FlaggedDoc(doc_id: Long, source: String, text_hash: Long,
-      n_tokens: Long, lang_guess: String, mix_h: Long, keep_clf: Boolean,
-      is_benchmark: Boolean, contaminated: Boolean, is_duplicate: Boolean)
-
-  /** Group handler: flags every doc of the hash group except the
-    * first-ever-seen (earlier batch wins; within this batch, min NUMERIC
-    * doc_id — keeper selection shared with
-    * [[StreamingDedup.keeperFlags]]).
-    */
-  def flagGroup(key: Long, rows: Iterator[CheckedDoc],
-      state: GroupState[Boolean]): Iterator[FlaggedDoc] = {
-    val seenBefore = state.getOption.getOrElse(false)
-    val batch = rows.toArray
-    if (!seenBefore && batch.nonEmpty) state.update(true)
-    StreamingDedup.keeperFlags(batch, seenBefore)(_.doc_id).map { case (d, dup) =>
-      FlaggedDoc(d.doc_id, d.source, d.text_hash, d.n_tokens, d.lang_guess,
-        d.mix_h, d.keep_clf, d.is_benchmark, d.contaminated, dup)
-    }
-  }
-
   /** The whole transform (testable on streaming or batch relations of
     * text docs): tag → contamination check → stateful dedup → filters →
     * static mix sampling. `benchGrams` must be sorted
@@ -105,18 +86,9 @@ object CurateStream {
     // an explicit source filter is the parity-preserving shape.
     val clean = docs.where(docs("doc_id").isNotNull &&
       docs("source").isNotNull && docs("text").isNotNull)
-    val withW = clean.select(clean("doc_id"), clean("source"), clean("text"),
-      TextAnalysis.nonEmptyWords(clean("text")).as("ws"),
-      TextAnalysis.repetitionFracs(clean("text")).as("fracs"))
-    val tagged = withW.select(
-      col("doc_id"), col("source"),
-      PortableHash.hexint60(col("text")).as("text_hash"),
-      size(col("ws")).cast("long").as("n_tokens"),
-      TextAnalysis.langGuessFromWords(col("ws")).as("lang_guess"),
-      Corpus.mixHash(col("doc_id")).as("mix_h"),
-      TextAnalysis.clfKeep(col("ws"), col("fracs")).as("keep_clf"),
-      Decontam.isBenchmark(col("doc_id")).as("is_benchmark"),
-      TextAnalysis.gramHashes60(col("text")).as("grams"))
+    val tagged = Corpus.curateTags(clean.select(clean("doc_id"), clean("source"),
+        clean("text"), TextAnalysis.gramHashes60(clean("text")).as("grams")), "grams")
+      .withColumn("keep_clf", TextAnalysis.clfVerdict(col("score_u8")))
     val checked = tagged.as[TaggedDoc].mapPartitions { it =>
       val grams = bg.value // sorted; O(log B) membership, zero per-row alloc
       it.map { t =>
@@ -126,10 +98,7 @@ object CurateStream {
           t.mix_h, t.keep_clf, t.is_benchmark, contaminated)
       }
     }
-    checked
-      .groupByKey(_.text_hash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(flagGroup)
-      .toDF()
+    StreamingDedup.firstArrival[Long](checked.toDF(), "text_hash", "doc_id")
       .where(!col("is_duplicate") && col("keep_clf") && !col("is_benchmark") &&
         !col("contaminated"))
       .join(broadcast(rates.select("source", "rate_permille")), Seq("source"))

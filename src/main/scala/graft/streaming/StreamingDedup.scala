@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.textops.PortableHash
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming exact dedup with keyed state — the continuous-ingest twin of
@@ -13,7 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * restart — so dedup survives process death, exactly like the batch
   * pipeline's bucket checkpoints survive a crashed run.
   *
-  * `flatMapGroupsWithState` is the right primitive (not
+  * A stateful group map ([[firstArrival]]) is the right primitive (not
   * `dropDuplicates`): the first-seen doc must still be EMITTED (flagged
   * keeper) and later copies emitted-as-flagged rather than silently
   * dropped — the shape of a quarantine/lineage-preserving dedup at
@@ -36,9 +37,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingDedup {
 
-  case class DocHash(doc_id: String, content_hash: Long)
-  case class DedupRow(doc_id: String, content_hash: Long, is_duplicate: Boolean)
-
   /** 60-bit portable hash of the span texts (text-only, joined on an explicit
     * \\u0001 separator so differing span splits of the same concatenation
     * — ["ab","c"] vs ["a","bc"] — do NOT collide; dedup is about content,
@@ -48,16 +46,12 @@ object StreamingDedup {
     PortableHash.hexint60(array_join(
       transform(spans, s => coalesce(s.getField("text"), lit(""))), "\u0001"))
 
-  /** The ONE definition of first-keeper selection for the stateful dedup
-    * handlers (here, [[CorpusStream.flagGroup]], and
-    * [[CurateStream.flagGroup]] — the three must never drift): pairs
-    * every row with its is_duplicate flag. One O(n) min pass, NO sort —
-    * a degenerate hash (empty content duplicated across a whole batch)
+  /** First-keeper selection of one hash group's batch: pairs every row
+    * with its is_duplicate flag. One O(n) min pass, NO sort — a
+    * degenerate hash (empty content duplicated across a whole batch)
     * lands its group in one task, and an O(n log n) sort there is pure
     * waste when only the minimum is needed. A re-delivered duplicate id
-    * keeps exactly one keeper. Generic in the id's ordering: span docs
-    * key on String ids, the curated tail on numeric ids (where string
-    * min would pick "10" over "9" and diverge from the batch keeper).
+    * keeps exactly one keeper.
     */
   def keeperFlags[T, K](batch: Array[T], seenBefore: Boolean)(
       id: T => K)(implicit ord: Ordering[K]): Iterator[(T, Boolean)] =
@@ -72,32 +66,39 @@ object StreamingDedup {
       }
     }
 
-  /** Group handler: emits every doc of the group, flagging all but the
-    * first-ever-seen (earlier batch wins; within this batch, min doc_id
-    * — [[keeperFlags]]).
+  /** The one stateful operator of the streaming dedup tails (here,
+    * [[CorpusStream]] and [[CurateStream]]): groups `rows` on the 60-bit
+    * content hash in column `hash`, keeps one boolean of state per hash,
+    * and returns every input row with `is_duplicate` appended — false
+    * for the first-ever-seen row only (earlier batch wins; within this
+    * batch, the least `id`: [[keeperFlags]]). `K` is the id column's
+    * type, whose ordering picks the keeper: span docs key on String ids,
+    * the curated tail on numeric ids (where string order would pick "10"
+    * over "9" and diverge from the batch keeper).
     */
-  def dedupGroup(key: Long, rows: Iterator[DocHash],
-      state: GroupState[Boolean]): Iterator[DedupRow] = {
-    val seenBefore = state.getOption.getOrElse(false)
-    val batch = rows.toArray
-    if (!seenBefore && batch.nonEmpty) state.update(true)
-    keeperFlags(batch, seenBefore)(_.doc_id).map { case (d, dup) =>
-      DedupRow(d.doc_id, d.content_hash, dup)
-    }
+  def firstArrival[K: Ordering](rows: DataFrame, hash: String, id: String): DataFrame = {
+    val schema = rows.schema
+    val (h, i) = (schema.fieldIndex(hash), schema.fieldIndex(id))
+    rows.groupByKey(_.getLong(h))(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: Long, group: Iterator[Row], state: GroupState[Boolean]) =>
+          val seenBefore = state.getOption.getOrElse(false)
+          val batch = group.toArray
+          if (!seenBefore && batch.nonEmpty) state.update(true)
+          keeperFlags(batch, seenBefore)(_.getAs[K](i)).map { case (r, dup) =>
+            Row.fromSeq(r.toSeq :+ dup)
+          }
+      }(Encoders.scalaBoolean,
+        Encoders.row(schema.add("is_duplicate", BooleanType, nullable = false)))
   }
 
   /** The streaming transform alone (testable on any streaming or batch
     * relation of span docs).
     */
-  def dedupStream(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), contentHash(col("spans")).as("content_hash"))
-      .as[DocHash]
-      .groupByKey(_.content_hash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(dedupGroup)
-      .toDF()
-  }
+  def dedupStream(docs: DataFrame): DataFrame =
+    firstArrival[String](
+      docs.select(col("doc_id"), contentHash(col("spans")).as("content_hash")),
+      "content_hash", "doc_id")
 
   /** Start the continuous dedup over a growing parquet directory of span
     * docs; parquet sink + state checkpoint give exactly-once flags across

@@ -171,9 +171,10 @@ object Corpus {
     * raw crawl into a training mix, composed from the audited single-op
     * column definitions (no logic forks):
     *
-    *  1. per-row tagging in ONE projection off the scan: language guess
-    *     ([[TextAnalysis.langGuessCol]]), Gopher quality verdict
-    *     ([[TextAnalysis.gopherKeepCol]]), 60-bit content hash;
+    *  1. per-row tagging in ONE projection off the scan ([[corpusTags]]):
+    *     token count, language guess
+    *     ([[TextAnalysis.langGuessFromStats]]), Gopher quality verdict
+    *     ([[TextAnalysis.gopherKeepFromStats]]), 60-bit content hash;
     *  2. exact dedup — the FIRST shuffle, keyed on the 60-bit hash
     *     (never the text), keeper = lowest doc_id per hash;
     *  3. deterministic stratified sampling on the DETECTED language
@@ -198,6 +199,27 @@ object Corpus {
     packSequencesBy(tagDedupSample(d), packShard(col("doc_id")),
       carry = Seq("lang_guess"), tokens = Some(col("n_tokens")))
 
+  /** The corpus build's per-row tags of `(doc_id, text)` rows —
+    * `(doc_id, n_tokens, lang_guess, quality_keep, text_hash)` — in one
+    * projection off the input; the streaming corpus tail
+    * ([[graft.streaming.CorpusStream]]) tags through this same function.
+    *
+    * The word-stats counter array computes once in its own projection
+    * and every tag derives from it (the staged alias keeps
+    * CollapseProject from re-inlining the non-cheap kernel per tag).
+    * n_tokens is computed here, off the scan, so the document text never
+    * enters a shuffle: the dedup exchange and the pack window sort carry
+    * only fixed-width columns.
+    */
+  def corpusTags(d: DataFrame): DataFrame =
+    d.select(d("doc_id"), d("text"), WordStats.stats(d("text")).as("st"))
+      .select(
+        col("doc_id"),
+        TextAnalysis.stNw(col("st")).as("n_tokens"),
+        TextAnalysis.langGuessFromStats(col("st")).as("lang_guess"),
+        TextAnalysis.gopherKeepFromStats(col("text"), col("st")).as("quality_keep"),
+        PortableHash.hexint60(col("text")).as("text_hash"))
+
   /** The tag → exact-dedup → stratified-sample front of the corpus build
     * (everything before packing), exposed separately so the STREAMING
     * corpus tail ([[graft.streaming.CorpusStream]]) can pin batch parity
@@ -205,23 +227,7 @@ object Corpus {
     * `(doc_id, n_tokens, lang_guess, text_hash)`.
     */
   def tagDedupSample(d: DataFrame): DataFrame = {
-    // the word-stats counter array computes ONCE in its own projection
-    // and every tag metric derives from it (round 6: the native
-    // WordStats kernel replaces the interpreted HOF passes; the staged
-    // alias keeps CollapseProject from re-inlining the non-cheap kernel
-    // per metric)
-    val withWords = d.select(d("doc_id"), d("text"),
-      graft.textops.WordStats.stats(d("text")).as("st"))
-    // n_tokens is computed HERE, off the scan, so the document text
-    // itself never enters a shuffle: the dedup exchange and the pack
-    // window sort below carry only fixed-width columns (at 100 TB the
-    // text payload would dominate the first shuffle otherwise)
-    val tagged = withWords.select(
-      col("doc_id"),
-      TextAnalysis.stNw(col("st")).as("n_tokens"),
-      TextAnalysis.langGuessFromStats(col("st")).as("lang_guess"),
-      TextAnalysis.gopherKeepFromStats(col("text"), col("st")).as("quality_keep"),
-      PortableHash.hexint60(col("text")).as("text_hash"))
+    val tagged = corpusTags(d)
     // exact dedup as partial-aggregate + join-back, NOT a
     // `row_number() over (partition by text_hash)` window: the window
     // sorts whole hash groups, so a degenerate hash (empty text
@@ -406,27 +412,37 @@ object Corpus {
     * it out (it is the classic tag/metadata table of a curation run).
     */
   private[graft] def curateSurvivors(d: DataFrame, contaminated: DataFrame): DataFrame = {
-    val withW = d.select(d("doc_id"), d("source"), d("text"),
-      graft.textops.WordStats.stats(d("text")).as("st"),
-      TextAnalysis.repetitionFracs(d("text")).as("fracs"))
+    val tagged = curateTags(d).localCheckpoint(eager = false)
+    val keepers = tagged.select("text_hash", "doc_id")
+      .groupBy("text_hash").agg(min("doc_id").as("keeper_id"))
+    tagged
+      .where(TextAnalysis.clfVerdict(col("score_u8")) && !col("is_benchmark"))
+      .join(keepers, Seq("text_hash"))
+      .where(col("doc_id") === col("keeper_id"))
+      .join(contaminated, Seq("doc_id"), "left_anti")
+      .select("doc_id", "source", "n_tokens", "lang_guess", "mix_h")
+  }
+
+  /** The curated build's per-row tags of `(doc_id, source, text)` rows —
+    * `(doc_id, source, n_tokens, lang_guess, text_hash, score_u8,
+    * is_benchmark, mix_h)`, followed by the `carry` columns of `d` — in
+    * one projection off the input, with the word-stats and repetition
+    * kernels staged once. The streaming curated tail tags through this
+    * same function, carrying its gram array.
+    */
+  private[graft] def curateTags(d: DataFrame, carry: String*): DataFrame = {
+    val withW = d.select(Seq(d("doc_id"), d("source"), d("text"),
+      WordStats.stats(d("text")).as("st"),
+      TextAnalysis.repetitionFracs(d("text")).as("fracs")) ++ carry.map(d(_)): _*)
     val f = TextAnalysis.clfFeaturesFromStats(col("st"), col("fracs"))
-    val tagged = withW.select(
+    withW.select(Seq(
       col("doc_id"), col("source"),
       TextAnalysis.stNw(col("st")).as("n_tokens"),
       TextAnalysis.langGuessFromStats(col("st")).as("lang_guess"),
       PortableHash.hexint60(col("text")).as("text_hash"),
       TextAnalysis.clfScoreU8(f(0), f(1), f(2), f(3), f(4)).as("score_u8"),
       Decontam.isBenchmark(col("doc_id")).as("is_benchmark"),
-      mixHash(col("doc_id")).as("mix_h"))
-      .localCheckpoint(eager = false)
-    val keepers = tagged.select("text_hash", "doc_id")
-      .groupBy("text_hash").agg(min("doc_id").as("keeper_id"))
-    tagged
-      .where(col("score_u8") >= TextAnalysis.ClfCutC * 1000000L && !col("is_benchmark"))
-      .join(keepers, Seq("text_hash"))
-      .where(col("doc_id") === col("keeper_id"))
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .select("doc_id", "source", "n_tokens", "lang_guess", "mix_h")
+      mixHash(col("doc_id")).as("mix_h")) ++ carry.map(col): _*)
   }
 
   /** Sentinel printed for the rolled-up level of a CUBE dimension (keeps
@@ -480,8 +496,8 @@ object Corpus {
     val tagged = withW.select(
       col("doc_id"),
       TextAnalysis.gopherKeepFromStats(col("text"), col("st")).as("gopher_keep"),
-      (TextAnalysis.clfScoreU8(f(0), f(1), f(2), f(3), f(4))
-        >= TextAnalysis.ClfCutC * 1000000L).as("clf_keep"),
+      TextAnalysis.clfVerdict(
+        TextAnalysis.clfScoreU8(f(0), f(1), f(2), f(3), f(4))).as("clf_keep"),
       PortableHash.hexint60(col("text")).as("text_hash"))
       .localCheckpoint(eager = false)
     val keeper = tagged.groupBy("text_hash").agg(min("doc_id").as("keeper_id"))

@@ -25,34 +25,34 @@ object TextAnalysis {
   private def words(c: Column): Column = split(c, " ")
   private[graft] def nonEmptyWords(c: Column): Column = filter(words(c), w => w =!= "")
 
-  // --- word-stats kernel accessors (round 6) ---
-  // The five raw counters of [[WordStats.stats]]; every ratio/threshold
-  // below computes from these EXACT integers through the same Catalyst
-  // float expressions as the round-5 HOF forms, so values (and the
-  // DuckDB oracle) are untouched while the O(words) interpreted lambda
-  // passes collapse into one native pass per row.
+  // --- word-stats kernel accessors ---
+  // The five raw counters of [[WordStats.stats]]; every ratio and
+  // threshold below computes from these exact integers through Catalyst
+  // float expressions, so the values match the DuckDB oracle.
   private[textops] def stNw(st: Column): Column = element_at(st, WordStats.NWords)
   private[textops] def stChars(st: Column): Column = element_at(st, WordStats.Chars)
   private[textops] def stEn(st: Column): Column = element_at(st, WordStats.StopEn)
   private[textops] def stPt(st: Column): Column = element_at(st, WordStats.StopPt)
   private[textops] def stAlpha(st: Column): Column = element_at(st, WordStats.Alpha)
 
-  /** `count / n_words` with the 0-word guard — the counter twin of
-    * [[stopRatio]] (identical arithmetic on identical integers).
-    */
+  /** `count / n_words` with the 0-word guard. */
   private def ratioFromCounts(num: Column, nw: Column): Column =
     when(nw === 0, lit(0.0)).otherwise(num.cast("double") / nw.cast("double"))
 
-  /** [[langGuessFromWords]] over a staged [[WordStats.stats]] array. */
+  /** Argmax language guess over the stopword ratios of a staged
+    * [[WordStats.stats]] array, as one column — [[langId]]'s verdict,
+    * shared by the corpus build and its streaming tail.
+    */
   def langGuessFromStats(st: Column): Column = {
     val en = round(ratioFromCounts(stEn(st), stNw(st)), 6)
     val pt = round(ratioFromCounts(stPt(st), stNw(st)), 6)
     when(en > pt, lit("en")).when(pt > en, lit("pt")).otherwise(lit("und"))
   }
 
-  /** [[gopherKeepFromWords]] over a staged [[WordStats.stats]] array
-    * (the '#'/'...' symbol counts still come from the text itself —
-    * cheap codegen'd builtins).
+  /** The Gopher rule battery verdict over a staged [[WordStats.stats]]
+    * array, as one boolean column — identical thresholds and rounding
+    * to [[gopherRules]] (the '#'/'...' symbol counts come from the text
+    * itself — cheap codegen'd builtins).
     */
   def gopherKeepFromStats(text: Column, st: Column): Column = {
     val nw = stNw(st).cast("double")
@@ -66,55 +66,6 @@ object TextAnalysis {
     awl >= MeanWordLenMin && awl <= MeanWordLenMax &&
       symbolRatio <= SymbolRatioMax && alphaFrac >= AlphaWordFracMin &&
       stEn(st) >= MinStopwords
-  }
-
-  /** Argmax language guess over the stopword ratios, as one column — the
-    * langId query's verdict, reusable by composed pipelines (the composed
-    * corpus build filters on it without materializing the ratios).
-    */
-  def langGuessCol(text: Column): Column = langGuessFromWords(nonEmptyWords(text))
-
-  /** [[langGuessCol]] over a PRE-SPLIT word array — composed pipelines
-    * project the array once and derive every tag column from it, so the
-    * O(len) split does not re-run per metric (CollapseProject re-inlines
-    * an alias referenced only once; a shared `ws` column referenced by
-    * several metrics survives as its own projection).
-    */
-  def langGuessFromWords(ws: Column): Column = {
-    val en = round(stopRatio(ws, EnStop), 6)
-    val pt = round(stopRatio(ws, PtStop), 6)
-    when(en > pt, lit("en")).when(pt > en, lit("pt")).otherwise(lit("und"))
-  }
-
-  /** The Gopher rule battery verdict as one boolean column — identical
-    * thresholds and rounding to [[gopherRules]] (shared so a composed
-    * pipeline cannot drift from the audited query).
-    */
-  def gopherKeepCol(text: Column): Column =
-    gopherKeepFromWords(text, nonEmptyWords(text))
-
-  /** [[gopherKeepCol]] over a pre-split word array (see
-    * [[langGuessFromWords]] for why composed pipelines pass one).
-    */
-  def gopherKeepFromWords(text: Column, ws: Column): Column = {
-    val nw = size(ws).cast("double")
-    val chars = aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double")
-    val awl = round(when(nw === 0, lit(0.0)).otherwise(chars / nw), 6)
-    val nHash = (length(text) - length(replace(text, lit("#"), lit("")))).cast("double")
-    val nEll = (length(text) - length(replace(text, lit("..."), lit("")))).cast("double") / 3.0
-    val symbolRatio = when(nw === 0, lit(0.0)).otherwise(round((nHash + nEll) / nw, 6))
-    val alphaFrac = when(nw === 0, lit(0.0)).otherwise(
-      round(size(filter(ws, w => w.rlike("[A-Za-z]"))).cast("double") / nw, 6))
-    val nStop = size(filter(ws, w => w.isin(EnStop: _*)))
-    awl >= MeanWordLenMin && awl <= MeanWordLenMax &&
-      symbolRatio <= SymbolRatioMax && alphaFrac >= AlphaWordFracMin &&
-      nStop >= MinStopwords
-  }
-
-  private def stopRatio(ws: Column, stop: Seq[String]): Column = {
-    val n = size(ws)
-    when(n === 0, lit(0.0))
-      .otherwise(size(filter(ws, w => w.isin(stop: _*))).cast("double") / n.cast("double"))
   }
 
   /** Language ID by stopword-ratio heuristic (n-gram-class heuristic over
@@ -456,9 +407,9 @@ object TextAnalysis {
     * double score is the 1e-8-unit integer divided by 1e8 (one
     * correctly-rounded op, bit-identical everywhere).
     *
-    * Shuffle-free: one projection chain per row; the word array splits
-    * once (referenced by four features, so CollapseProject keeps it) and
-    * the repetition kernel runs once.
+    * Shuffle-free: one projection chain per row; the word-stats and
+    * repetition kernels are staged in their own projection, so each runs
+    * once per row.
     */
   def qualityClassifier(spark: SparkSession, sfDir: String): DataFrame = {
     val d = loadDocs(spark, sfDir)
@@ -472,32 +423,14 @@ object TextAnalysis {
       .select(col("doc_id"), col("f_len"), col("f_stop"), col("f_awl"),
         col("f_alpha"), col("f_rep"),
         (col("score_u8").cast("double") / 100000000.0).as("score"),
-        (col("score_u8") >= ClfCutC * 1000000L).as("keep"))
+        clfVerdict(col("score_u8")).as("keep"))
       .orderBy("doc_id")
   }
 
-  /** The five classifier features (rounded to 6 decimals), from a
-    * pre-split word array and the repetition-fracs array — the ONE
-    * definition [[qualityClassifier]] and composed pipelines (the
-    * curated corpus build) share, aliased f_len..f_rep.
-    */
-  private[textops] def clfFeatures(ws: Column, fracs: Column): Seq[Column] = {
-    val nw = size(ws).cast("double")
-    val chars = aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double")
-    val awl = when(nw === 0, lit(0.0)).otherwise(chars / nw)
-    val alpha = when(nw === 0, lit(0.0)).otherwise(
-      size(filter(ws, w => w.rlike("[A-Za-z]"))).cast("double") / nw)
-    Seq(
-      round(least(lit(1.0), nw / 100.0), 6).as("f_len"),
-      round(stopRatio(ws, EnStop), 6).as("f_stop"),
-      round(least(lit(1.0), awl / 8.0), 6).as("f_awl"),
-      round(alpha, 6).as("f_alpha"),
-      element_at(fracs, 1).as("f_rep"))
-  }
-
-  /** [[clfFeatures]] over a staged [[WordStats.stats]] array — identical
-    * arithmetic on identical integers (round-6 batch consumers use this;
-    * the word-array form stays for callers that already hold `ws`).
+  /** The five classifier features (rounded to 6 decimals), aliased
+    * f_len..f_rep, from a staged [[WordStats.stats]] array and the
+    * repetition-fracs array — the one definition [[qualityClassifier]]
+    * and the composed pipelines (curated build, ensemble filter) share.
     */
   private[textops] def clfFeaturesFromStats(st: Column, fracs: Column): Seq[Column] = {
     val nw = stNw(st).cast("double")
@@ -527,15 +460,11 @@ object TextAnalysis {
       lit(ClfWStopC) * micro6(fStop) + lit(ClfWAwlC) * micro6(fAwl) +
       lit(ClfWAlphaC) * micro6(fAlpha) - lit(ClfWRepC) * micro6(fRep)
 
-  /** The classifier's keep verdict from the word/fracs arrays — the one
-    * boolean composed pipelines outside this package (the streaming
-    * curated tail) filter on; same features, score, and cut as
-    * [[qualityClassifier]] and the batch curate.
+  /** The classifier's keep verdict: the margin in 1e-8 units at or
+    * above [[ClfCutC]] — the one cut [[qualityClassifier]], the curated
+    * build, the ensemble filter and the streaming curated tail apply.
     */
-  private[graft] def clfKeep(ws: Column, fracs: Column): Column = {
-    val f = clfFeatures(ws, fracs)
-    clfScoreU8(f(0), f(1), f(2), f(3), f(4)) >= ClfCutC * 1000000L
-  }
+  private[graft] def clfVerdict(scoreU8: Column): Column = scoreU8 >= ClfCutC * 1000000L
 
   /** Repetition-ratio thresholds for [[repetition]] (simplified Gopher
     * rules — Rae et al. 2021 flag docs whose duplicate-n-gram fractions

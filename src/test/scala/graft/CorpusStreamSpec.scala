@@ -1,6 +1,7 @@
 package graft
 
 import graft.extract.Extractor
+import graft.model.Span
 import graft.streaming.CorpusStream
 import graft.synth.SpanSynth
 import graft.textops.Corpus
@@ -24,6 +25,24 @@ class CorpusStreamSpec extends AnyFunSuite with SparkSpec {
     SpanSynth.docsInput(spark, "/root/testdata/sf0.01")
       .where(substring(col("doc_id"), 5, 8).cast("long") < n)
 
+  /** Edge documents: empty and whitespace-only text, media spans only
+    * (empty `docText`), '#'/'...'-heavy text, Portuguese stopwords, and
+    * words of non-ASCII letters only.
+    */
+  private def edgeDocs() = {
+    import spark.implicits._
+    val texts = Seq("", "   ", "### the ... of ### and ... the ### ... a ...",
+      "o gato de a casa e que do da em um para a mesa da vila",
+      "a escola para a professora muito obrigada pela aula sobre historia antiga",
+      "café niño ação über straße ñandú çà")
+    val withText = texts.zipWithIndex.map { case (t, i) =>
+      (f"edge-$i%02d", Seq(Span("text", t, null, 0)))
+    }
+    val mediaOnly = Seq(("edge-media", Seq(Span("image", null, "img/a.png", 0),
+      Span("image", null, "img/b.png", 1))))
+    (withText ++ mediaOnly).toDF("doc_id", "spans")
+  }
+
   private def collectRows(df: org.apache.spark.sql.DataFrame) =
     df.select("doc_id", "n_tokens", "lang_guess", "text_hash").collect()
       .map(r => (r.getAs[String]("doc_id"), r.getAs[Long]("n_tokens"),
@@ -37,7 +56,7 @@ class CorpusStreamSpec extends AnyFunSuite with SparkSpec {
     // original, so the original is the keeper in both engines
     val dups = base.where(substring(col("doc_id"), 5, 8).cast("long") < 15)
       .select(concat(col("doc_id"), lit("-dup")).as("doc_id"), col("spans"))
-    base.unionByName(dups).write.mode("append").parquet(in)
+    base.unionByName(dups).unionByName(edgeDocs()).write.mode("append").parquet(in)
 
     val q = CorpusStream.start(spark, in, out, ckpt, availableNow = true)
     q.awaitTermination()

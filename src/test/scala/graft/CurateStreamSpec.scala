@@ -21,6 +21,19 @@ class CurateStreamSpec extends AnyFunSuite with SparkSpec {
     d
   }
 
+  /** Edge documents: empty and whitespace-only text, '#'/'...'-heavy
+    * text, Portuguese stopwords, and words of non-ASCII letters only.
+    */
+  private def edgeDocs() = {
+    import spark.implicits._
+    Seq("", "   ", "### the ... of ### and ... the ### ... a ...",
+      "o gato de a casa e que do da em um para a mesa da vila",
+      "a escola para a professora muito obrigada pela aula sobre historia antiga",
+      "café niño ação über straße ñandú çà")
+      .zipWithIndex.map { case (t, i) => (990000L + i, s"src${i % 3}", t) }
+      .toDF("doc_id", "source", "text")
+  }
+
   private def collectRows(df: org.apache.spark.sql.DataFrame) =
     df.select("doc_id", "source", "n_tokens", "lang_guess").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"),
@@ -37,7 +50,7 @@ class CurateStreamSpec extends AnyFunSuite with SparkSpec {
       .select((col("doc_id") + 1000000L).as("doc_id"), col("source"), col("text"))
     // <= 64 files so availableNow drains everything in ONE micro-batch
     // (keeper parity needs a single trigger)
-    base.select("doc_id", "source", "text").unionByName(dups)
+    base.select("doc_id", "source", "text").unionByName(dups).unionByName(edgeDocs())
       .repartition(4).write.mode("append").parquet(in)
 
     // offline planning over the stream's own input dir — the deployment

@@ -168,6 +168,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(count(fu, "graft.Kernels.nfc_normalize(") === 1, s"\n$fu")
   }
 
+  test("streaming corpus and curate tails tag through one word_stats pass") {
+    import graft.streaming.{CorpusStream, CurateStream}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val spark2 = spark
+    import spark2.implicits._
+    val corpus = CorpusStream.corpusStream(graft.synth.SpanSynth.docsInput(spark, sf))
+    val curate = CurateStream.curatedStream(
+      graft.textops.TextAnalysis.loadDocs(spark, sf).select("doc_id", "source", "text"),
+      graft.textops.Decontam.benchGramSet(spark, sf),
+      Seq(("src0", 1000L)).toDF("source", "rate_permille"))
+    Seq(corpus, curate).foreach { df =>
+      val opt = df.queryExecution.optimizedPlan
+      assert(count(opt.toString, "graft.Kernels.word_stats(") === 1, s"\n$opt")
+      // the tag projection: from the word_stats stage up to lang_guess
+      val tags = opt.collect {
+        case p: Project if p.projectList.exists(_.toString.contains("word_stats(")) ||
+          p.projectList.exists(_.name == "lang_guess") => p
+      }
+      assert(tags.nonEmpty, s"\n$opt")
+      tags.foreach(p => assert(!p.projectList.mkString.contains("lambdafunction"), s"\n$p"))
+    }
+  }
+
   test("sharded packing exchanges on shard, never SinglePartition") {
     import org.apache.spark.sql.functions.col
     val df = graft.textops.Corpus.packSequencesBy(

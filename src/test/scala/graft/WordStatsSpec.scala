@@ -168,9 +168,9 @@ class WordStatsSpec extends AnyFunSuite with SparkSpec {
     val ws = TextAnalysis.nonEmptyWords(col("text"))
     val st = WordStats.stats(col("text"))
     val rows = df.select(
-      TextAnalysis.langGuessFromWords(ws).as("lg_w"),
+      WordArrayForms.langGuessFromWords(ws).as("lg_w"),
       TextAnalysis.langGuessFromStats(st).as("lg_s"),
-      TextAnalysis.gopherKeepFromWords(col("text"), ws).as("gk_w"),
+      WordArrayForms.gopherKeepFromWords(col("text"), ws).as("gk_w"),
       TextAnalysis.gopherKeepFromStats(col("text"), st).as("gk_s")).collect()
     rows.zip(fixtures).foreach { case (r, s) =>
       assert(r.getString(0) === r.getString(1), s"lang guess diverged on '$s'")
