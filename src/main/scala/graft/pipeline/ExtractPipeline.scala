@@ -28,17 +28,20 @@ import scala.jdk.CollectionConverters._
   *                             run leaves 'running' rows the stuck scan
   *                             (Q6) finds
   *   _lineage/                 [[LineageSchema]], one row per extract run
-  *                             (the audit record; no reader depends on it)
+  *                             (the audit record; no reader depends on it).
+  *                             Both are written on the driver, one file per
+  *                             append, by [[StoreFiles]]: no Spark job
   *   _manifest.json            the store [[Manifest]]: `numBuckets` and the
   *                             reader schema of each stage table, written
   *                             by [[commitStage]] before the table's data
   * The metrics surface is [[metrics]] — a view over `_checkpoints`
   * (latest done row per bucket), not a second store to keep consistent.
   * Every reader of `_checkpoints` / `_lineage` goes through [[readStore]]
-  * with the writer's schema, and every reader of a stage table through
-  * [[readTable]] with the manifest's, so no read runs a schema-inference
-  * job. A directory without a manifest is not a store: its stage tables
-  * have no reader.
+  * with the writer's schema, except the done sets, which read three
+  * columns on the driver ([[StoreFiles.read]]); every reader of a stage
+  * table goes through [[readTable]] with the manifest's. So no read runs a
+  * schema-inference job. A directory without a manifest is not a store:
+  * its stage tables have no reader.
   *
   * Buckets come from `pmod(xxhash64(doc_id), numBuckets)` — uniform for any
   * id distribution (monotonic int-derived ids included), and the output
@@ -86,16 +89,20 @@ object ExtractPipeline {
     */
   private val StageData = Map(Stage -> "data", LlmStageName -> "llm")
 
-  /** `_checkpoints` row schema: written only by [[appendCkpt]], read only
-    * through [[readStore]]. The counters a stage does not measure stay null.
+  /** `_checkpoints` row schema: written only by [[appendCkpt]], read
+    * through [[readStore]] (the done sets: [[StoreFiles.read]]). The
+    * counters a stage does not measure stay null.
     */
   private[graft] val CkptSchema = StructType.fromDDL(
     "run_id STRING, stage STRING, bucket INT, status STRING, n_docs BIGINT, " +
       "n_spans BIGINT, text_chars BIGINT, n_images BIGINT, n_errors BIGINT, " +
       "n_dead_letter BIGINT, started_ts TIMESTAMP, finished_ts TIMESTAMP")
 
+  /** The `_checkpoints` columns a done set reads. */
+  private val DoneColumns = StructType(Seq("stage", "bucket", "status").map(CkptSchema(_)))
+
   /** `_lineage` row schema: one row per extract run, written by [[run]]. */
-  private val LineageSchema = StructType.fromDDL(
+  private[graft] val LineageSchema = StructType.fromDDL(
     "run_id STRING, input_path STRING, code_version STRING, " +
       "params_json STRING, run_ts TIMESTAMP")
 
@@ -111,13 +118,13 @@ object ExtractPipeline {
 
   def bucketCol(numBuckets: Int) = bucketColOf(col("doc_id"), numBuckets)
 
-  /** Bucket of one LITERAL doc id: the same expression as [[bucketCol]],
-    * analyzed and evaluated on the driver (it is foldable, so no Spark
-    * job runs): used by the serving layer to turn a point lookup into a
-    * partition-pruning predicate.
+  /** Bucket of one FOLDABLE doc id (a literal, or a literal cast to the
+    * stored `doc_id` type): the same expression as [[bucketCol]], analyzed
+    * and evaluated on the driver, so no Spark job runs. Used by the serving
+    * layer to turn a point lookup into a partition-pruning predicate.
     */
-  def bucketOfId(spark: SparkSession, docId: String, numBuckets: Int): Int =
-    spark.range(1).select(bucketColOf(lit(docId), numBuckets))
+  def bucketOfId(spark: SparkSession, docId: Column, numBuckets: Int): Int =
+    spark.range(1).select(bucketColOf(docId, numBuckets))
       .queryExecution.analyzed.expressions.head.eval().asInstanceOf[Int]
 
   /** Buckets already checkpointed 'done' for this stage (any run). A
@@ -127,12 +134,14 @@ object ExtractPipeline {
   def doneBuckets(spark: SparkSession, outDir: String, stage: String): Set[Int] =
     doneByStage(spark, outDir).getOrElse(stage, Set.empty)
 
-  /** Done buckets of every stage from ONE `_checkpoints` read. */
+  /** Done buckets of every stage from ONE `_checkpoints` read, on the
+    * driver ([[StoreFiles.read]]): three columns of a few hundred rows, so
+    * no Spark job runs.
+    */
   private def doneByStage(spark: SparkSession, outDir: String): Map[String, Set[Int]] =
-    readCkpt(spark, outDir)
-      .where(col("status") === "done")
-      .select("stage", "bucket").distinct().collect()
-      .groupMap(_.getString(0))(_.getInt(1)).map { case (s, bs) => s -> bs.toSet }
+    StoreFiles.read(spark, s"$outDir/_checkpoints", DoneColumns)
+      .collect { case Row(stage: String, bucket: Int, "done") => stage -> bucket }
+      .groupMap(_._1)(_._2).map { case (s, bs) => s -> bs.toSet }
 
   /** THE reader of the pipeline's stores: restore a crashed rewrite's
     * renamed-aside copy, then read with the schema the store's writer
@@ -260,7 +269,7 @@ object ExtractPipeline {
       .where(col("bucket") === bucket)
   }
 
-  private def tableSchema(outDir: String, table: String, m: Manifest): StructType =
+  private[graft] def tableSchema(outDir: String, table: String, m: Manifest): StructType =
     m.schemas.getOrElse(table, throw new IllegalArgumentException(
       s"the manifest of $outDir records no `$table` table"))
 
@@ -323,14 +332,12 @@ object ExtractPipeline {
       case counter => counters.getOrElse(counter, null)
     })
 
-  /** THE writer of `_checkpoints`: one appended file per call, with the one
-    * [[CkptSchema]] — a divergent schema would append parquet files every
-    * reader then unions.
+  /** THE writer of `_checkpoints`: one file per call, written on the driver
+    * ([[StoreFiles.append]]), with the one [[CkptSchema]] — a divergent
+    * schema would append parquet files every reader then unions.
     */
   private def appendCkpt(spark: SparkSession, rows: Seq[Row], outDir: String): Unit =
-    if (rows.nonEmpty)
-      spark.createDataFrame(rows.asJava, CkptSchema).coalesce(1)
-        .write.mode(SaveMode.Append).parquet(s"$outDir/_checkpoints")
+    if (rows.nonEmpty) StoreFiles.append(spark, s"$outDir/_checkpoints", CkptSchema, rows)
 
   /** One checkpoint row per claimed bucket, status='running' — written from
     * a driver-local list (bucket ids are 0..numBuckets-1 minus done; no
@@ -457,9 +464,8 @@ object ExtractPipeline {
 
     val params = s"""{"numBuckets":${cfg.numBuckets},"heavyThreshold":""" +
       s"""${SkewSalter.DefaultHeavyThreshold},"chunkTarget":${SkewSalter.DefaultChunkTarget}}"""
-    spark.createDataFrame(Seq(Row(cfg.runId, cfg.inputPath, BuildInfo.version,
-      params, Instant.now())).asJava, LineageSchema)
-      .write.mode(SaveMode.Append).parquet(s"${cfg.outDir}/_lineage")
+    StoreFiles.append(spark, s"${cfg.outDir}/_lineage", LineageSchema,
+      Seq(Row(cfg.runId, cfg.inputPath, BuildInfo.version, params, Instant.now())))
     report
   }
 
@@ -597,11 +603,11 @@ object ExtractPipeline {
   }
 
   /** Small-file compaction for the checkpoint + lineage stores, with no
-    * retention cut: every run appends one `coalesce(1)` parquet file per
-    * write (a stage run's claim rows, its commit rows, an extract run's
-    * lineage row), so thousands of runs leave thousands of tiny files that
-    * `metrics`/`doneBuckets`
-    * re-list on every call. The crash-safe rewrite in [[rewriteKeeping]]
+    * retention cut: every run appends one driver-written parquet file per
+    * write ([[StoreFiles.append]]: a stage run's claim rows, its commit
+    * rows, an extract run's lineage row), so thousands of runs leave
+    * thousands of tiny files that `metrics`/`doneBuckets` re-list on every
+    * call. The crash-safe rewrite in [[rewriteKeeping]]
     * already lands the whole store in one file — this entry point runs it
     * with `keep = true` so operators can compact WITHOUT expiring rows
     * (the reference's hourly beat couples the two, workers.py:385-390;
@@ -659,5 +665,82 @@ object ExtractPipeline {
     require(!fs.exists(new org.apache.hadoop.fs.Path(p, pTmp.getName)),
       s"replace $path: rename nested $pTmp inside $p instead of replacing it")
     fs.delete(pOld, true)
+  }
+
+  /** Driver-side parquet IO for the store's bookkeeping tables
+    * (`_checkpoints`, `_lineage`), as Iceberg commits its metadata: small
+    * files from the one writer process, no distributed job. Rows of a flat
+    * schema of string, int, bigint and timestamp columns go through
+    * parquet-hadoop's example object model, from Spark's own jars. The
+    * files carry the parquet types Spark writes for that schema
+    * (timestamps as `TIMESTAMP(MICROS)`), so every Spark reader of the
+    * store sees them as it sees the files Spark writes.
+    */
+  private[graft] object StoreFiles {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.api.ReadSupport
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types.TimestampType
+
+    private def parquetType(schema: StructType) = new SparkToParquetSchemaConverter(
+      outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS).convert(schema)
+
+    /** Spark's file index skips these names, and so does [[read]]. */
+    private def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+
+    /** Writes `rows` as one new parquet file in `dir`, under a hidden
+      * name, then renames it to a `*.parquet` name: no reader ever sees
+      * half a file.
+      */
+    def append(spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit = {
+      val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+      val tmp = new Path(dir, s"_$name")
+      val pt = parquetType(schema)
+      val groups = new SimpleGroupFactory(pt)
+      val w = ExampleParquetWriter.builder(tmp).withConf(spark.sparkContext.hadoopConfiguration)
+        .withType(pt).build()
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        schema.fields.indices.filterNot(r.isNullAt).foreach(i => schema(i).dataType match {
+          case StringType => g.add(i, r.getString(i))
+          case IntegerType => g.add(i, r.getInt(i))
+          case LongType => g.add(i, r.getLong(i))
+          case TimestampType => g.add(i, DateTimeUtils.instantToMicros(r.getAs[Instant](i)))
+        })
+        w.write(g)
+      } finally w.close()
+      require(hadoopFs(spark, dir).rename(tmp, new Path(dir, name)),
+        s"append $dir: rename $tmp into place failed")
+    }
+
+    /** The `columns` (string or int) of every row in `dir`'s visible
+      * files, after [[recoverStore]]; a missing `dir` reads as no rows.
+      * Only those columns are decoded.
+      */
+    def read(spark: SparkSession, dir: String, columns: StructType): Seq[Row] = {
+      recoverStore(spark, dir)
+      val fs = hadoopFs(spark, dir)
+      val p = new Path(dir)
+      if (!fs.exists(p)) return Nil
+      val projection = parquetType(columns).toString
+      fs.listStatus(p).toSeq.filter(s => s.isFile && !hidden(s.getPath.getName)).flatMap { s =>
+        val r = ParquetReader.builder(new GroupReadSupport(), s.getPath)
+          .withConf(spark.sparkContext.hadoopConfiguration)
+          .set(ReadSupport.PARQUET_READ_SCHEMA, projection).build()
+        try Iterator.continually(r.read()).takeWhile(_ != null).map(g =>
+          Row.fromSeq(columns.fields.indices.map(i =>
+            if (g.getFieldRepetitionCount(i) == 0) null
+            else columns(i).dataType match {
+              case StringType => g.getString(i, 0)
+              case IntegerType => g.getInteger(i, 0)
+            }))).toVector
+        finally r.close()
+      }
+    }
   }
 }

@@ -79,7 +79,7 @@ object Queries {
     * directory before listing a single file.
     */
   def bucketOf(spark: SparkSession, docId: String, numBuckets: Int): Int =
-    ExtractPipeline.bucketOfId(spark, docId, numBuckets)
+    ExtractPipeline.bucketOfId(spark, lit(docId), numBuckets)
 
   /** Q1 over the STORED table: queue scan + sort reading the pipeline's
     * `data/` output instead of re-extracting — the serving path of a
@@ -109,7 +109,10 @@ object Queries {
     * Spark job, the scan; a directory without a manifest is not a store
     * and fails. A bucket count passed explicitly is validated against the
     * manifest's (a mismatch would prune to the WRONG partition and return
-    * empty, a wrong answer — so it fails loudly instead).
+    * empty, a wrong answer — so it fails loudly instead). The id is hashed
+    * as the type the manifest records for `doc_id`, as the write path
+    * hashed it (a long-keyed store's `17` is the long 17, not the string);
+    * an id that is no value of that type returns no row.
     */
   def lookupFrom(spark: SparkSession, outDir: String, docId: String,
       numBuckets: Int = -1): DataFrame = {
@@ -117,8 +120,10 @@ object Queries {
     require(numBuckets == -1 || numBuckets == m.numBuckets, s"lookupFrom: caller " +
       s"numBuckets=$numBuckets but the store was written with " +
       s"numBuckets=${m.numBuckets} (from its manifest)")
+    val id = lit(docId).try_cast(
+      ExtractPipeline.tableSchema(outDir, "data", m)("doc_id").dataType)
     lookupProjection(ExtractPipeline.readBucket(spark, outDir, "data", m,
-      bucketOf(spark, docId, m.numBuckets)).where(col("doc_id") === docId))
+      ExtractPipeline.bucketOfId(spark, id, m.numBuckets)).where(col("doc_id") === id))
   }
 
   /** Per-class aggregate metrics over the extracted output — the VERBOSE

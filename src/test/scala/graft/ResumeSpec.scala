@@ -54,25 +54,26 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       new org.apache.hadoop.fs.Path(s"$out/_checkpoints"))
   }
 
-  /** The physical plans of the parquet writes into a directory named
-    * `table` that `body` runs, read from a `QueryExecutionListener` once
-    * the listener bus has delivered every event.
+  /** The physical plans of the parquet writes that `body` runs, each with
+    * the name of the directory it writes into, read from a
+    * `QueryExecutionListener` once the listener bus has delivered every
+    * event.
     */
-  private def writePlans(table: String)(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+  private def writePlans(body: => Unit)
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
+      (String, org.apache.spark.sql.execution.SparkPlan)]()
     val l = new QueryExecutionListener {
       // adaptive execution wraps the write command itself
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
         Aqe.collect(qe.executedPlan) {
-          case w @ DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _)
-              if i.outputPath.getName == table => w
+          case w @ DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _) =>
+            i.outputPath.getName -> w
         }.foreach(plans.add)
       def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
     }
@@ -84,6 +85,28 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
 
   /** Walks adaptive plans and query stages as well. */
   private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def llm(cfg: ExtractPipeline.Config) = ExtractPipeline.runLlmStage(spark, cfg,
+    transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L)
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Every row of `out`'s `table`, read with schema inference, without
+    * the `dropped` columns.
+    */
+  private def rowsOf(out: String, table: String, dropped: String*): Seq[String] =
+    sorted(spark.read.parquet(s"$out/$table").drop(dropped: _*))
+
+  /** The terminal `_checkpoints` rows without what differs between runs. */
+  private def terminalRows(out: String): Seq[String] =
+    sorted(spark.read.parquet(s"$out/_checkpoints").where(col("status") =!= "running")
+      .drop("run_id", "started_ts", "finished_ts"))
+
+  private def delete(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 
   test("partial run + resume covers all buckets exactly once") {
     val out = freshDir()
@@ -320,6 +343,168 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       Seq(present))
   }
 
+  test("a lookup on a long-keyed store finds every stored id") {
+    val out = freshDir()
+    ExtractPipeline.run(spark, longKeyed, ExtractPipeline.Config(out, "r1", numBuckets = 8))
+    val ids = spark.read.parquet(s"$out/data").select("doc_id").collect().map(_.getLong(0))
+    assert(ids.length === longKeyed.count())
+    ids.foreach(id => assert(Queries.lookupFrom(spark, out, id.toString).collect()
+      .map(_.getLong(0)).toSeq === Seq(id), s"doc_id $id"))
+    // an id that is no long is absent, not an error
+    assert(Queries.lookupFrom(spark, out, "doc-17").collect().isEmpty)
+  }
+
+  test("a pipeline round writes no bookkeeping through Spark, and a done set runs no job") {
+    val out = freshDir()
+    val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 8)
+    val written = writePlans { ExtractPipeline.run(spark, input, cfg); llm(cfg) }.map(_._1)
+    assert(written.sorted === Seq("data", "llm"))
+    val (done, jobs) = jobsOf("done-buckets")(ExtractPipeline.doneBuckets(spark, out, "extract"))
+    assert(done.nonEmpty)
+    assert(jobs === 0)
+  }
+
+  test("a hidden half-written bookkeeping file is invisible to every reader") {
+    val out = freshDir()
+    val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 4)
+    ExtractPipeline.run(spark, input, cfg)
+    llm(cfg)
+    def seen = (
+      Seq("extract", "llm").map(st => (ExtractPipeline.doneBuckets(spark, out, st),
+        ExtractPipeline.verifyCheckpoints(spark, out, st).count(),
+        ExtractPipeline.staleCheckpoints(spark, out, -1.0, st).count())),
+      sorted(ExtractPipeline.metrics(spark, out)),
+      rowsOf(out, "_checkpoints"), rowsOf(out, "_lineage"))
+    val before = seen
+    // a writer that died mid-file leaves its hidden temp name behind
+    Seq("_checkpoints", "_lineage").foreach { t =>
+      val f = new java.io.File(s"$out/$t").listFiles().filter(_.getName.endsWith(".parquet")).head
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      java.nio.file.Files.write(java.nio.file.Paths.get(
+        s"$out/$t/_part-${java.util.UUID.randomUUID()}.parquet"), bytes.take(bytes.length / 2))
+    }
+    assert(seen === before)
+    assert(ExtractPipeline.compactCheckpoints(spark, out) === before._3.size)
+    assert(seen === before)
+    assert(ExtractPipeline.run(spark, input,
+      ExtractPipeline.Config(out, "r2", numBuckets = 4)).docsProcessed === 0)
+  }
+
+  test("a crash between the claim and the data write is stale, and resumes to a clean run's rows") {
+    val B = 8
+    val clean = freshDir()
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(clean, "r1", numBuckets = B))
+    // what such a crash leaves: the manifest and the claim rows; no data,
+    // no terminal rows, no lineage row
+    val out = freshDir()
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r1", numBuckets = B))
+    Seq("data", "_lineage").foreach(t => delete(s"$out/$t"))
+    loseCkptRows(out, col("status") =!= "running")
+    assert(ExtractPipeline.staleCheckpoints(spark, out, 0.0).collect()
+      .map(_.getAs[Int]("bucket")).sorted.toSeq === (0 until B))
+    assert(ExtractPipeline.doneBuckets(spark, out, "extract").isEmpty)
+
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r2", numBuckets = B))
+    assert(ExtractPipeline.staleCheckpoints(spark, out, 0.0).count() === 0)
+    assert(rowsOf(out, "data") === rowsOf(clean, "data"))
+    assert(terminalRows(out) === terminalRows(clean))
+    assert(rowsOf(out, "_lineage", "run_id", "run_ts") ===
+      rowsOf(clean, "_lineage", "run_id", "run_ts"))
+    assert(ExtractPipeline.verifyCheckpoints(spark, out).count() === 0)
+  }
+
+  test("a crash between the data write and the terminal rows resumes to a clean run's rows") {
+    val B = 8
+    val clean = freshDir()
+    val cleanCfg = ExtractPipeline.Config(clean, "r1", numBuckets = B)
+    ExtractPipeline.run(spark, input, cleanCfg)
+    llm(cleanCfg)
+    // extract wrote its data, then lost its terminal rows and lineage row
+    val out = freshDir()
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r1", numBuckets = B))
+    loseCkptRows(out, col("status") =!= "running")
+    delete(s"$out/_lineage")
+    assert(ExtractPipeline.verifyCheckpoints(spark, out).count() > 0)
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r2", numBuckets = B))
+    // then the llm stage did the same
+    llm(ExtractPipeline.Config(out, "l1", numBuckets = B))
+    loseCkptRows(out, col("stage") === "llm" && col("status") =!= "running")
+    assert(ExtractPipeline.verifyCheckpoints(spark, out, "llm").count() > 0)
+    llm(ExtractPipeline.Config(out, "l2", numBuckets = B))
+
+    Seq("data", "llm").foreach(t => assert(rowsOf(out, t) === rowsOf(clean, t), t))
+    assert(terminalRows(out) === terminalRows(clean))
+    Seq("extract", "llm").foreach { st =>
+      assert(ExtractPipeline.verifyCheckpoints(spark, out, st).count() === 0, st)
+      assert(ExtractPipeline.staleCheckpoints(spark, out, 0.0, st).count() === 0, st)
+    }
+  }
+
+  test("a store with bookkeeping files from a Spark-job writer and the driver writer") {
+    import scala.jdk.CollectionConverters._
+    val B = 8
+    val ref = freshDir()
+    val refCfg = ExtractPipeline.Config(ref, "r1", numBuckets = B)
+    ExtractPipeline.run(spark, input, refCfg)
+    llm(refCfg)
+
+    // run 1 covers buckets 0-3; its files are rewritten as a Spark job
+    // appended them, one file per write (claims, terminal rows, lineage)
+    val out = freshDir()
+    ExtractPipeline.run(spark, input.where(ExtractPipeline.bucketCol(B) < 4),
+      ExtractPipeline.Config(out, "r1", numBuckets = B))
+    val stores = Seq("_checkpoints" -> ExtractPipeline.CkptSchema,
+      "_lineage" -> ExtractPipeline.LineageSchema)
+    val run1 = stores.map { case (t, _) => rowsOf(out, t) }
+    stores.foreach { case (t, schema) =>
+      val rows = spark.read.schema(schema).parquet(s"$out/$t").collect().toSeq
+      delete(s"$out/$t")
+      rows.groupBy(r => schema.fieldNames.contains("status") && r.getAs[String]("status") == "running")
+        .values.foreach(part => spark.createDataFrame(part.asJava, schema).coalesce(1)
+          .write.mode("append").parquet(s"$out/$t"))
+    }
+    assert(stores.map { case (t, _) => rowsOf(out, t) } === run1)
+    // run 2 resumes under the driver writer, and runs the llm stage
+    val cfg = ExtractPipeline.Config(out, "r2", numBuckets = B)
+    assert(ExtractPipeline.run(spark, input, cfg).bucketsDone === 4)
+    llm(cfg)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    def files(t: String) = new java.io.File(s"$out/$t").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    def timestampTypes(t: String, c: String) = files(t).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex(c)).asPrimitiveType.getPrimitiveTypeName.name
+      }
+      finally r.close()
+    }.toSet
+    assert(timestampTypes("_checkpoints", "started_ts") === Set("INT96", "INT64"))
+    assert(timestampTypes("_lineage", "run_ts") === Set("INT96", "INT64"))
+    // schema inference reads every file of either kind with the writer's types
+    stores.foreach { case (t, schema) =>
+      assert(spark.read.parquet(s"$out/$t").schema === schema, t)
+      files(t).foreach(f => assert(spark.read.parquet(f).schema === schema, f))
+    }
+    assert(sorted(spark.read.parquet(s"$out/_checkpoints").where(col("run_id") === "r1")) ===
+      run1.head)
+
+    def readers(dir: String) = (
+      Seq("extract", "llm").map(st => (ExtractPipeline.doneBuckets(spark, dir, st),
+        ExtractPipeline.verifyCheckpoints(spark, dir, st).count(),
+        ExtractPipeline.staleCheckpoints(spark, dir, -1.0, st).count())),
+      sorted(ExtractPipeline.metrics(spark, dir).drop("run_id", "finished_ts")),
+      ExtractPipeline.metrics(spark, dir).schema)
+    assert(readers(out) === readers(ref))
+    assert(jobsOf("mixed-done")(ExtractPipeline.doneBuckets(spark, out, "llm"))._2 === 0)
+    val all = rowsOf(out, "_checkpoints")
+    assert(ExtractPipeline.compactCheckpoints(spark, out) === all.size)
+    assert(rowsOf(out, "_checkpoints") === all)
+    assert(readers(out) === readers(ref))
+  }
+
   test("store manifest records the schemas spark.read.parquet infers (string and long doc_id)") {
     val docIdTypes = Seq(input, longKeyed).map { in =>
       val out = freshDir()
@@ -407,8 +592,9 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       val out = freshDir()
       val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 8)
       ExtractPipeline.run(spark, in, cfg)
-      val plans = writePlans("llm")(ExtractPipeline.runLlmStage(spark, cfg,
+      val plans = writePlans(ExtractPipeline.runLlmStage(spark, cfg,
         transport = graft.llm.LlmStage.EchoTransport(), backoffMs = _ => 0L))
+        .collect { case ("llm", p) => p }
       assert(plans.size === 1)
       val scans = Aqe.collect(plans.head) { case s: FileSourceScanExec => s }
       assert(scans.map(_.relation.location.rootPaths.map(_.getName)) === Seq(Seq("data")),
