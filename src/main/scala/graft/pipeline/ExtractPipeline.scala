@@ -29,19 +29,19 @@ import scala.jdk.CollectionConverters._
   *                             (Q6) finds
   *   _lineage/                 [[LineageSchema]], one row per extract run
   *                             (the audit record; no reader depends on it).
-  *                             Both are written on the driver, one file per
-  *                             append, by [[StoreFiles]]: no Spark job
+  *                             Both are written and read on the driver, by
+  *                             [[StoreFiles]] alone: no Spark job
   *   _manifest.json            the store [[Manifest]]: `numBuckets` and the
   *                             reader schema of each stage table, written
   *                             by [[commitStage]] before the table's data
   * The metrics surface is [[metrics]] — a view over `_checkpoints`
   * (latest done row per bucket), not a second store to keep consistent.
-  * Every reader of `_checkpoints` / `_lineage` goes through [[readStore]]
-  * with the writer's schema, except the done sets, which read three
-  * columns on the driver ([[StoreFiles.read]]); every reader of a stage
-  * table goes through [[readTable]] with the manifest's. So no read runs a
-  * schema-inference job. A directory without a manifest is not a store:
-  * its stage tables have no reader.
+  * Every reader of `_checkpoints` / `_lineage` goes through
+  * [[StoreFiles.read]], on the driver; the DataFrame views ([[metrics]],
+  * [[verifyCheckpoints]], [[staleCheckpoints]]) are built over its rows.
+  * Every reader of a stage table goes through [[readTable]] with the
+  * manifest's schema. So no read runs a schema-inference job. A directory
+  * without a manifest is not a store: its stage tables have no reader.
   *
   * Buckets come from `pmod(xxhash64(doc_id), numBuckets)` — uniform for any
   * id distribution (monotonic int-derived ids included), and the output
@@ -89,9 +89,9 @@ object ExtractPipeline {
     */
   private val StageData = Map(Stage -> "data", LlmStageName -> "llm")
 
-  /** `_checkpoints` row schema: written only by [[appendCkpt]], read
-    * through [[readStore]] (the done sets: [[StoreFiles.read]]). The
-    * counters a stage does not measure stay null.
+  /** `_checkpoints` row schema: appended only by [[appendCkpt]],
+    * rewritten only by [[rewriteKeeping]], read only by [[StoreFiles.read]].
+    * The counters a stage does not measure stay null.
     */
   private[graft] val CkptSchema = StructType.fromDDL(
     "run_id STRING, stage STRING, bucket INT, status STRING, n_docs BIGINT, " +
@@ -105,8 +105,6 @@ object ExtractPipeline {
   private[graft] val LineageSchema = StructType.fromDDL(
     "run_id STRING, input_path STRING, code_version STRING, " +
       "params_json STRING, run_ts TIMESTAMP")
-
-  private val BucketOnly = StructType.fromDDL("bucket INT")
 
   /** THE bucket function of the storage layout — every consumer (the
     * write path, resume, and the serving layer's driver-side pruning)
@@ -143,20 +141,10 @@ object ExtractPipeline {
       .collect { case Row(stage: String, bucket: Int, "done") => stage -> bucket }
       .groupMap(_._1)(_._2).map { case (s, bs) => s -> bs.toSet }
 
-  /** THE reader of the pipeline's stores: restore a crashed rewrite's
-    * renamed-aside copy, then read with the schema the store's writer
-    * defines — no schema-inference job, and a missing store reads as an
-    * empty table of that schema.
-    */
-  private def readStore(spark: SparkSession, path: String,
-      schema: StructType): DataFrame = {
-    recoverStore(spark, path)
-    if (fileExists(spark, path)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-  }
-
+  /** `_checkpoints` as a DataFrame over the driver's rows: it scans no file. */
   private def readCkpt(spark: SparkSession, outDir: String): DataFrame =
-    readStore(spark, s"$outDir/_checkpoints", CkptSchema)
+    spark.createDataFrame(StoreFiles.read(spark, s"$outDir/_checkpoints", CkptSchema).asJava,
+      CkptSchema)
 
   /** The store manifest: the bucket count of the layout and, per stage
     * table written so far (`data`, `llm`), the schema its readers see. The
@@ -306,10 +294,8 @@ object ExtractPipeline {
       }
     }
 
-  private def fileExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def fileExists(spark: SparkSession, path: String): Boolean =
+    hadoopFs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   private def hadoopFs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
@@ -332,21 +318,12 @@ object ExtractPipeline {
       case counter => counters.getOrElse(counter, null)
     })
 
-  /** THE writer of `_checkpoints`: one file per call, written on the driver
-    * ([[StoreFiles.append]]), with the one [[CkptSchema]] — a divergent
-    * schema would append parquet files every reader then unions.
+  /** THE appender of `_checkpoints`: one file per call, written on the
+    * driver ([[StoreFiles.append]]), with the one [[CkptSchema]] — a
+    * divergent schema would append parquet files every reader then unions.
     */
   private def appendCkpt(spark: SparkSession, rows: Seq[Row], outDir: String): Unit =
     if (rows.nonEmpty) StoreFiles.append(spark, s"$outDir/_checkpoints", CkptSchema, rows)
-
-  /** One checkpoint row per claimed bucket, status='running' — written from
-    * a driver-local list (bucket ids are 0..numBuckets-1 minus done; no
-    * input scan). The stuck scan keys off these.
-    */
-  private def claim(spark: SparkSession, cfg: Config, stage: String,
-      buckets: Seq[Int], startedTs: Instant): Unit =
-    appendCkpt(spark, buckets.map(ckptRow(cfg.runId, stage, _, "running",
-      startedTs, None)), cfg.outDir)
 
   /** THE commit path of a checkpointed stage. Checks and writes the store
     * manifest ([[commitManifest]]), claims the buckets, writes `output` into
@@ -383,7 +360,10 @@ object ExtractPipeline {
     val table = StageData(stage)
     val m = commitManifest(spark, cfg, table, output.schema)
     val startedTs = Instant.now()
-    claim(spark, cfg, stage, claimed, startedTs)
+    // the claim: one 'running' row per claimed bucket, from the driver-local
+    // list (no input scan); the stuck scan keys off these
+    appendCkpt(spark, claimed.map(ckptRow(cfg.runId, stage, _, "running", startedTs, None)),
+      cfg.outDir)
     output.repartition(math.min(cfg.numBuckets, spark.sparkContext.defaultParallelism),
         col("bucket"))
       .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
@@ -553,13 +533,17 @@ object ExtractPipeline {
     val ckpt = readCkpt(spark, outDir)
       .where(col("stage") === stage && col("status") === "done")
       .groupBy("bucket").agg(max("n_docs").as("ckpt_docs"))
-    val actual = readStore(spark, s"$outDir/${StageData(stage)}", BucketOnly)
-      .groupBy("bucket").agg(count(lit(1)).as("data_docs"))
+    val table = StageData(stage)
+    val actual = readManifest(spark, outDir)
+      .filter(m => m.schemas.contains(table) && fileExists(spark, s"$outDir/$table"))
+      .map(readTable(spark, outDir, table, _).groupBy("bucket").agg(count(lit(1)).as("data_docs")))
     // a 0-doc 'done' bucket legitimately has NO data partition (the llm
-    // stage closes claims that produced no rows that way) — missing data
-    // counts as 0, and only a genuine count mismatch (or data with no
-    // checkpoint at all) is a violation
-    ckpt.join(actual, Seq("bucket"), "full_outer")
+    // stage closes claims that produced no rows that way), and a table the
+    // manifest does not record, or a crash left without a directory, has
+    // no rows — missing data counts as 0, and only a genuine count
+    // mismatch (or data with no checkpoint at all) is a violation
+    actual.fold(ckpt.withColumn("data_docs", lit(null).cast("long")))(
+        ckpt.join(_, Seq("bucket"), "full_outer"))
       .where(col("ckpt_docs").isNull ||
         coalesce(col("data_docs"), lit(0L)) =!= col("ckpt_docs"))
   }
@@ -585,21 +569,18 @@ object ExtractPipeline {
 
   /** P6 analog — retention cleanup (reference workers.py:347-390,
     * utils.py:476-502): drop checkpoint AND lineage rows older than
-    * `maxAgeHours`. Returns checkpoint rows kept.
-    *
-    * Crash-safe rewrite: new store is written to `<path>_tmp`, the old
-    * store is renamed ASIDE to `<path>_old` (not deleted), the new one is
-    * renamed in, then the old copy is dropped. A crash at any point leaves
-    * either the original or the `_old` copy on disk — never zero copies
-    * (the previous delete-then-rename had a window that lost the whole
-    * store, forcing a full recompute on resume).
+    * `maxAgeHours` — a checkpoint row's age is its `finished_ts`, or its
+    * `started_ts` while it is still 'running'. Returns checkpoint rows
+    * kept. Both stores are rewritten on the driver by [[rewriteKeeping]]
+    * (no Spark job), each as one file, so cleanup compacts as well.
     */
   def cleanupCheckpoints(spark: SparkSession, outDir: String, maxAgeHours: Int): Long = {
-    val cutoff = current_timestamp() - expr(s"INTERVAL $maxAgeHours HOURS")
-    rewriteKeeping(spark, s"$outDir/_lineage", LineageSchema, col("run_ts") >= cutoff)
-    rewriteKeeping(spark, s"$outDir/_checkpoints", CkptSchema, col("finished_ts") >= cutoff ||
-      // keep 'running' rows younger than the cutoff too (no finished_ts)
-      (col("finished_ts").isNull && col("started_ts") >= cutoff))
+    val cutoff = Instant.now().minusSeconds(maxAgeHours * 3600L)
+    def young(r: Row, ts: String*) =
+      ts.map(c => r.getAs[Instant](c)).find(_ != null).exists(!_.isBefore(cutoff))
+    rewriteKeeping(spark, s"$outDir/_lineage", LineageSchema, young(_, "run_ts"))
+    rewriteKeeping(spark, s"$outDir/_checkpoints", CkptSchema,
+      young(_, "finished_ts", "started_ts"))
   }
 
   /** Small-file compaction for the checkpoint + lineage stores, with no
@@ -607,31 +588,33 @@ object ExtractPipeline {
     * write ([[StoreFiles.append]]: a stage run's claim rows, its commit
     * rows, an extract run's lineage row), so thousands of runs leave
     * thousands of tiny files that `metrics`/`doneBuckets` re-list on every
-    * call. The crash-safe rewrite in [[rewriteKeeping]]
-    * already lands the whole store in one file — this entry point runs it
-    * with `keep = true` so operators can compact WITHOUT expiring rows
-    * (the reference's hourly beat couples the two, workers.py:385-390;
-    * [[cleanupCheckpoints]] is that coupled shape and compacts as a side
-    * effect). Returns the CHECKPOINT rows kept (the lineage store is
-    * compacted too, but its count is not part of the return — same
-    * convention as [[cleanupCheckpoints]]). Single-writer, like cleanup.
+    * call. The crash-safe rewrite in [[rewriteKeeping]] lands each store
+    * in one driver-written file (no Spark job); this entry point keeps
+    * every row, so operators can compact WITHOUT expiring rows (the
+    * reference's hourly beat couples the two, workers.py:385-390;
+    * [[cleanupCheckpoints]] is that coupled shape). Returns the CHECKPOINT
+    * rows kept (the lineage store is compacted too, but its count is not
+    * part of the return — same convention as [[cleanupCheckpoints]]).
+    * Single-writer, like cleanup.
     */
   def compactCheckpoints(spark: SparkSession, outDir: String): Long = {
-    rewriteKeeping(spark, s"$outDir/_lineage", LineageSchema, lit(true))
-    rewriteKeeping(spark, s"$outDir/_checkpoints", CkptSchema, lit(true))
+    rewriteKeeping(spark, s"$outDir/_lineage", LineageSchema, _ => true)
+    rewriteKeeping(spark, s"$outDir/_checkpoints", CkptSchema, _ => true)
   }
 
+  /** Rewrites the store at `path` with its rows that satisfy `keep`, as one
+    * file staged in `<path>_tmp`, then [[swapIn]]. Returns the rows kept.
+    */
   private def rewriteKeeping(spark: SparkSession, path: String,
-      schema: StructType, keep: Column): Long = {
-    // readStore restores a crashed prior rewrite that left only <path>_old
-    val store = readStore(spark, path, schema)
+      schema: StructType, keep: Row => Boolean): Long = {
+    // the read restores a crashed prior rewrite that left only <path>_old
+    val kept = StoreFiles.read(spark, path, schema).filter(keep)
     if (!fileExists(spark, path)) return 0L
-    val kept = store.where(keep).cache()
-    val n = kept.count()
-    kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"${path}_tmp")
-    kept.unpersist()
+    val tmp = new org.apache.hadoop.fs.Path(s"${path}_tmp")
+    hadoopFs(spark, path).delete(tmp, true) // leftover from a crashed rewrite
+    StoreFiles.append(spark, tmp.toString, schema, kept)
     swapIn(spark, path)
-    n
+    kept.size
   }
 
   /** Replaces the store (or manifest file) at `path` with its staged copy
@@ -669,38 +652,39 @@ object ExtractPipeline {
 
   /** Driver-side parquet IO for the store's bookkeeping tables
     * (`_checkpoints`, `_lineage`), as Iceberg commits its metadata: small
-    * files from the one writer process, no distributed job. Rows of a flat
-    * schema of string, int, bigint and timestamp columns go through
-    * parquet-hadoop's example object model, from Spark's own jars. The
-    * files carry the parquet types Spark writes for that schema
-    * (timestamps as `TIMESTAMP(MICROS)`), so every Spark reader of the
-    * store sees them as it sees the files Spark writes.
+    * files from the one writer process, no distributed job. It is their
+    * only reader and writer. Rows of a flat schema of string, int, bigint
+    * and timestamp columns go through parquet-hadoop's example object
+    * model, from Spark's own jars. The files carry the parquet types Spark
+    * writes for that schema, with timestamps as `TIMESTAMP(MICROS)`.
     */
   private[graft] object StoreFiles {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.{NanoTime, SimpleGroupFactory}
     import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.api.ReadSupport
+    import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+    import org.apache.parquet.schema.MessageType
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
     import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
     import org.apache.spark.sql.internal.SQLConf
     import org.apache.spark.sql.types.TimestampType
 
-    private def parquetType(schema: StructType) = new SparkToParquetSchemaConverter(
-      outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS).convert(schema)
-
     /** Spark's file index skips these names, and so does [[read]]. */
     private def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
 
-    /** Writes `rows` as one new parquet file in `dir`, under a hidden
-      * name, then renames it to a `*.parquet` name: no reader ever sees
-      * half a file.
+    /** Writes `rows` as one new parquet file in `dir` (an empty file for
+      * no rows, so the schema stays readable), under a hidden name, then
+      * renames it to a `*.parquet` name: no reader ever sees half a file.
       */
     def append(spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit = {
       val name = s"part-${java.util.UUID.randomUUID()}.parquet"
       val tmp = new Path(dir, s"_$name")
-      val pt = parquetType(schema)
+      val pt = new SparkToParquetSchemaConverter(
+        outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS).convert(schema)
       val groups = new SimpleGroupFactory(pt)
       val w = ExampleParquetWriter.builder(tmp).withConf(spark.sparkContext.hadoopConfiguration)
         .withType(pt).build()
@@ -718,27 +702,46 @@ object ExtractPipeline {
         s"append $dir: rename $tmp into place failed")
     }
 
-    /** The `columns` (string or int) of every row in `dir`'s visible
-      * files, after [[recoverStore]]; a missing `dir` reads as no rows.
-      * Only those columns are decoded.
+    /** Reads the named columns of a file, each with its own physical type. */
+    private class Projection(names: Seq[String]) extends GroupReadSupport {
+      override def init(ctx: InitContext): ReadSupport.ReadContext = {
+        val file = ctx.getFileSchema
+        new ReadSupport.ReadContext(
+          new MessageType(file.getName, names.map(n => file.getType(file.getFieldIndex(n))): _*))
+      }
+    }
+
+    /** Column `i` of `g` as a [[Row]] value of `t`. A timestamp is INT64
+      * micros ([[append]]) or INT96 (a Spark job's file), decoded as Spark does.
+      */
+    private def value(g: Group, i: Int, t: DataType): Any =
+      if (g.getFieldRepetitionCount(i) == 0) null
+      else t match {
+        case StringType => g.getString(i, 0)
+        case IntegerType => g.getInteger(i, 0)
+        case LongType => g.getLong(i, 0)
+        case TimestampType => DateTimeUtils.microsToInstant(
+          if (g.getType.getType(i).asPrimitiveType.getPrimitiveTypeName != INT96) g.getLong(i, 0)
+          else {
+            val nt = NanoTime.fromBinary(g.getInt96(i, 0))
+            DateTimeUtils.fromJulianDay(nt.getJulianDay, nt.getTimeOfDayNanos)
+          })
+      }
+
+    /** The `columns` of every row in `dir`'s visible files, as rows with
+      * that schema, after [[recoverStore]]; a missing `dir` reads as no
+      * rows. Only those columns are decoded.
       */
     def read(spark: SparkSession, dir: String, columns: StructType): Seq[Row] = {
       recoverStore(spark, dir)
-      val fs = hadoopFs(spark, dir)
-      val p = new Path(dir)
-      if (!fs.exists(p)) return Nil
-      val projection = parquetType(columns).toString
-      fs.listStatus(p).toSeq.filter(s => s.isFile && !hidden(s.getPath.getName)).flatMap { s =>
-        val r = ParquetReader.builder(new GroupReadSupport(), s.getPath)
-          .withConf(spark.sparkContext.hadoopConfiguration)
-          .set(ReadSupport.PARQUET_READ_SCHEMA, projection).build()
+      if (!fileExists(spark, dir)) return Nil
+      val files = hadoopFs(spark, dir).listStatus(new Path(dir)).toSeq
+      files.filter(s => s.isFile && !hidden(s.getPath.getName)).flatMap { s =>
+        val r = ParquetReader.builder(new Projection(columns.fieldNames.toSeq), s.getPath)
+          .withConf(spark.sparkContext.hadoopConfiguration).build()
         try Iterator.continually(r.read()).takeWhile(_ != null).map(g =>
-          Row.fromSeq(columns.fields.indices.map(i =>
-            if (g.getFieldRepetitionCount(i) == 0) null
-            else columns(i).dataType match {
-              case StringType => g.getString(i, 0)
-              case IntegerType => g.getInteger(i, 0)
-            }))).toVector
+          new GenericRowWithSchema(columns.fields.indices.map(i =>
+            value(g, i, columns(i).dataType)).toArray, columns)).toVector
         finally r.close()
       }
     }

@@ -72,11 +72,13 @@ object Queries {
     lookupProjection(Extractor.extract(SpanSynth.docsInput(spark, sfDir))
       .where(col("doc_id") === docId))
 
-  /** Bucket of a doc id under the pipeline's layout, computed through the
-    * SAME expression as the write path ([[graft.pipeline.ExtractPipeline
-    * .bucketColOf]] — one definition, zero drift risk) so a point lookup
-    * carries a literal partition predicate: the scan prunes to one bucket
-    * directory before listing a single file.
+  /** Bucket of a string doc id under the pipeline's layout, computed
+    * through the SAME expression as the write path ([[graft.pipeline
+    * .ExtractPipeline.bucketColOf]]), on the driver. It hashes `docId` as a
+    * string, so its answer is the stored bucket only on a string-keyed
+    * store: an integral-keyed store hashed the integral `doc_id`, and is
+    * served by [[lookupFrom]], which hashes the id as the manifest's
+    * `doc_id` type.
     */
   def bucketOf(spark: SparkSession, docId: String, numBuckets: Int): Int =
     ExtractPipeline.bucketOfId(spark, lit(docId), numBuckets)
@@ -107,19 +109,13 @@ object Queries {
     * id whose bucket has no directory returns no row. The bucket count and
     * the table schema come from the store manifest, so the lookup runs one
     * Spark job, the scan; a directory without a manifest is not a store
-    * and fails. A bucket count passed explicitly is validated against the
-    * manifest's (a mismatch would prune to the WRONG partition and return
-    * empty, a wrong answer — so it fails loudly instead). The id is hashed
-    * as the type the manifest records for `doc_id`, as the write path
-    * hashed it (a long-keyed store's `17` is the long 17, not the string);
-    * an id that is no value of that type returns no row.
+    * and fails. The id is hashed as the type the manifest records for
+    * `doc_id`, as the write path hashed it (a long-keyed store's `17` is
+    * the long 17, not the string); an id that is no value of that type
+    * returns no row.
     */
-  def lookupFrom(spark: SparkSession, outDir: String, docId: String,
-      numBuckets: Int = -1): DataFrame = {
+  def lookupFrom(spark: SparkSession, outDir: String, docId: String): DataFrame = {
     val m = ExtractPipeline.manifest(spark, outDir)
-    require(numBuckets == -1 || numBuckets == m.numBuckets, s"lookupFrom: caller " +
-      s"numBuckets=$numBuckets but the store was written with " +
-      s"numBuckets=${m.numBuckets} (from its manifest)")
     val id = lit(docId).try_cast(
       ExtractPipeline.tableSchema(outDir, "data", m)("doc_id").dataType)
     lookupProjection(ExtractPipeline.readBucket(spark, outDir, "data", m,

@@ -103,6 +103,26 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     sorted(spark.read.parquet(s"$out/_checkpoints").where(col("status") =!= "running")
       .drop("run_id", "started_ts", "finished_ts"))
 
+  /** The parquet physical types of column `c` over the visible files of
+    * `out`'s `table`.
+    */
+  private def timestampTypes(out: String, table: String, c: String): Set[String] =
+    new java.io.File(s"$out/$table").listFiles().filter(_.getName.endsWith(".parquet"))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          schema.getType(schema.getFieldIndex(c)).asPrimitiveType.getPrimitiveTypeName.name
+        }
+        finally r.close()
+      }.toSet
+
+  /** The bookkeeping stores with their writer's schemas. */
+  private val bookkeeping = Seq("_checkpoints" -> ExtractPipeline.CkptSchema,
+    "_lineage" -> ExtractPipeline.LineageSchema)
+
   private def delete(path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -298,22 +318,18 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     val docId = stored(0).getString(0)
 
     // bucket count comes from the store manifest, read on the driver; the
-    // lookup runs one job, its scan; an explicit mismatching count fails
-    // loudly instead of pruning to the wrong partition and returning empty
+    // lookup runs one job, its scan
     assert(jobsOf("stored-buckets")(Queries.storedNumBuckets(spark, out)) === ((Some(B), 0)))
     val (found, lookupJobs) = jobsOf("lookup")(Queries.lookupFrom(spark, out, docId).collect())
     assert(found.length === 1)
     assert(lookupJobs === 1)
-    intercept[IllegalArgumentException] {
-      Queries.lookupFrom(spark, out, docId, B + 1)
-    }
     // a directory without a manifest is not a store
     val notAStore = freshDir()
     assert(Queries.storedNumBuckets(spark, notAStore) === None)
     assert(intercept[IllegalArgumentException](Queries.lookupFrom(spark, notAStore, docId))
       .getMessage.contains("_manifest.json"))
 
-    val lk = Queries.lookupFrom(spark, out, docId, B)
+    val lk = Queries.lookupFrom(spark, out, docId)
     val rows = lk.collect()
     assert(rows.length === 1)
     assert(rows(0).getAs[String]("doc_id") === docId)
@@ -403,6 +419,8 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     assert(ExtractPipeline.staleCheckpoints(spark, out, 0.0).collect()
       .map(_.getAs[Int]("bucket")).sorted.toSeq === (0 until B))
     assert(ExtractPipeline.doneBuckets(spark, out, "extract").isEmpty)
+    // the manifest records `data`, which has no directory: no rows, no violation
+    assert(ExtractPipeline.verifyCheckpoints(spark, out).count() === 0)
 
     ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r2", numBuckets = B))
     assert(ExtractPipeline.staleCheckpoints(spark, out, 0.0).count() === 0)
@@ -453,38 +471,37 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
     val out = freshDir()
     ExtractPipeline.run(spark, input.where(ExtractPipeline.bucketCol(B) < 4),
       ExtractPipeline.Config(out, "r1", numBuckets = B))
-    val stores = Seq("_checkpoints" -> ExtractPipeline.CkptSchema,
-      "_lineage" -> ExtractPipeline.LineageSchema)
-    val run1 = stores.map { case (t, _) => rowsOf(out, t) }
-    stores.foreach { case (t, schema) =>
+    val run1 = bookkeeping.map { case (t, _) => rowsOf(out, t) }
+    bookkeeping.foreach { case (t, schema) =>
       val rows = spark.read.schema(schema).parquet(s"$out/$t").collect().toSeq
       delete(s"$out/$t")
       rows.groupBy(r => schema.fieldNames.contains("status") && r.getAs[String]("status") == "running")
         .values.foreach(part => spark.createDataFrame(part.asJava, schema).coalesce(1)
           .write.mode("append").parquet(s"$out/$t"))
     }
-    assert(stores.map { case (t, _) => rowsOf(out, t) } === run1)
+    assert(bookkeeping.map { case (t, _) => rowsOf(out, t) } === run1)
     // run 2 resumes under the driver writer, and runs the llm stage
     val cfg = ExtractPipeline.Config(out, "r2", numBuckets = B)
     assert(ExtractPipeline.run(spark, input, cfg).bucketsDone === 4)
     llm(cfg)
 
-    val conf = spark.sparkContext.hadoopConfiguration
     def files(t: String) = new java.io.File(s"$out/$t").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-    def timestampTypes(t: String, c: String) = files(t).map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        schema.getType(schema.getFieldIndex(c)).asPrimitiveType.getPrimitiveTypeName.name
-      }
-      finally r.close()
-    }.toSet
-    assert(timestampTypes("_checkpoints", "started_ts") === Set("INT96", "INT64"))
-    assert(timestampTypes("_lineage", "run_ts") === Set("INT96", "INT64"))
+    def types = (timestampTypes(out, "_checkpoints", "started_ts"),
+      timestampTypes(out, "_lineage", "run_ts"))
+    assert(types === ((Set("INT96", "INT64"), Set("INT96", "INT64"))))
+    // the driver reader decodes both kinds of file to the values Spark reads
+    bookkeeping.foreach { case (t, schema) =>
+      val driver = ExtractPipeline.StoreFiles.read(spark, s"$out/$t", schema).map(_.toString)
+      val viaSpark = spark.read.schema(schema).parquet(s"$out/$t").collect().toSeq.map(r =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.map {
+          case ts: java.sql.Timestamp => ts.toInstant
+          case v => v
+        }).toString)
+      assert(driver.sorted === viaSpark.sorted, t)
+    }
     // schema inference reads every file of either kind with the writer's types
-    stores.foreach { case (t, schema) =>
+    bookkeeping.foreach { case (t, schema) =>
       assert(spark.read.parquet(s"$out/$t").schema === schema, t)
       files(t).foreach(f => assert(spark.read.parquet(f).schema === schema, f))
     }
@@ -499,10 +516,63 @@ class ResumeSpec extends AnyFunSuite with SparkSpec {
       ExtractPipeline.metrics(spark, dir).schema)
     assert(readers(out) === readers(ref))
     assert(jobsOf("mixed-done")(ExtractPipeline.doneBuckets(spark, out, "llm"))._2 === 0)
-    val all = rowsOf(out, "_checkpoints")
-    assert(ExtractPipeline.compactCheckpoints(spark, out) === all.size)
-    assert(rowsOf(out, "_checkpoints") === all)
+    val all = bookkeeping.map { case (t, _) => rowsOf(out, t) }
+    assert(ExtractPipeline.compactCheckpoints(spark, out) === all.head.size)
+    assert(bookkeeping.map { case (t, _) => rowsOf(out, t) } === all)
     assert(readers(out) === readers(ref))
+    // the rewrite is driver-written: one timestamp type per store
+    assert(types === ((Set("INT64"), Set("INT64"))))
+  }
+
+  test("compaction and cleanup run no Spark job, and a crashed rewrite's _tmp adds no row") {
+    val out = freshDir()
+    val cfg = ExtractPipeline.Config(out, "r1", numBuckets = 4)
+    ExtractPipeline.run(spark, input, cfg)
+    llm(cfg)
+    def rows = bookkeeping.map { case (t, _) => rowsOf(out, t) }
+    val before = rows
+    // a rewrite that died after staging leaves <store>_tmp with a file in it
+    def strayTmp(): Unit = bookkeeping.foreach { case (t, _) =>
+      val f = new java.io.File(s"$out/$t").listFiles().filter(_.getName.endsWith(".parquet")).head
+      new java.io.File(s"$out/${t}_tmp").mkdirs()
+      java.nio.file.Files.copy(f.toPath,
+        java.nio.file.Paths.get(s"$out/${t}_tmp/part-stray.parquet"))
+    }
+    strayTmp()
+    val written = writePlans {
+      assert(jobsOf("compact")(ExtractPipeline.compactCheckpoints(spark, out)) ===
+        ((before.head.size, 0)))
+      assert(rows === before)
+      strayTmp()
+      assert(jobsOf("cleanup")(ExtractPipeline.cleanupCheckpoints(spark, out, 24)) ===
+        ((before.head.size, 0)))
+    }
+    assert(written.isEmpty)
+    assert(rows === before)
+    bookkeeping.foreach { case (t, _) =>
+      assert(!new java.io.File(s"$out/${t}_tmp").exists(), t)
+      assert(timestampTypes(out, t, if (t == "_lineage") "run_ts" else "started_ts") ===
+        Set("INT64"), t)
+    }
+  }
+
+  test("the bookkeeping views scan no _checkpoints file; an llm stage that never ran is clean") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val out = freshDir()
+    ExtractPipeline.run(spark, input, ExtractPipeline.Config(out, "r1", numBuckets = 4))
+    val views = Seq(
+      ExtractPipeline.metrics(spark, out),
+      ExtractPipeline.verifyCheckpoints(spark, out),
+      ExtractPipeline.staleCheckpoints(spark, out, -1.0))
+    assert(views.map(_.count()) === Seq(4L, 0L, 0L))
+    views.foreach { v =>
+      v.collect()
+      val scanned = Aqe.collect(v.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+      }.flatten
+      assert(!scanned.contains("_checkpoints"), s"\n${v.queryExecution.executedPlan}")
+    }
+    assert(ExtractPipeline.verifyCheckpoints(spark, out, "llm").collect().isEmpty)
   }
 
   test("store manifest records the schemas spark.read.parquet infers (string and long doc_id)") {
