@@ -1,10 +1,11 @@
 package graft
 
 import graft.model.SpanCodec
-import org.apache.spark.sql.Column
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -239,6 +240,95 @@ object Kernels {
       else Int.box(textops.Ivf.nearestLists(codebook, e.toDoubleArray(), 1).head)
   }
 
+  /** A plan's sorted `bigint` column as a kernel constant. The literal holds
+    * it unboxed and prints without its elements, so no plan string carries it.
+    */
+  def planArray(a: Array[Long]): Column =
+    ColumnShim.column(Literal(UnsafeArrayData.fromPrimitiveArray(a), Longs))
+
+  /** Sorted distinct keys with aligned values: the table a plan lookup binds. */
+  final class PlanTable(val keys: Array[Long], val values: Array[Long]) extends Serializable {
+    require(keys.length == values.length, "plan arrays must align (same length)")
+    require((1 until keys.length).forall(i => keys(i - 1) < keys(i)),
+      "plan keys must be sorted ascending and distinct")
+    def contains(k: Long): Boolean = java.util.Arrays.binarySearch(keys, k) >= 0
+    def getOrElse(k: Long, default: Long): Long =
+      java.util.Arrays.binarySearch(keys, k) match { case i if i >= 0 => values(i); case _ => default }
+  }
+
+  /** Binds a plan table from constant arrays (`values` null: the keys are a
+    * set). It is checked here, because a binary search over an unsorted
+    * array answers wrong silently, then shipped in one broadcast, so task
+    * binaries carry only the handle and each executor fetches it once.
+    */
+  private def plan(kernel: String, keys: Any, values: Any): Broadcast[PlanTable] = {
+    val arrays = Seq(keys, values).filter(_ != null).map(_.asInstanceOf[ArrayData])
+    require(!arrays.exists(hasNull), s"$kernel: plan arrays must not hold nulls")
+    val ks = arrays.head.toLongArray()
+    SparkSession.active.sparkContext.broadcast(
+      new PlanTable(ks, if (values == null) ks else arrays(1).toLongArray()))
+  }
+
+  /** `gram_member(grams, set)`: true when some gram is in `set`, a constant
+    * of sorted distinct keys. A null gram is in no set.
+    */
+  val GramMember = new Kernel("gram_member", Seq(Longs, Longs), BooleanType,
+    constants = 1, bind = c => BoundGramMember(plan("gram_member", c(0), null)))
+  final case class BoundGramMember(set: Broadcast[PlanTable]) extends Bound {
+    def gram_member(grams: ArrayData): Boolean = {
+      val s = set.value
+      (0 until grams.numElements()).exists(i => !grams.isNullAt(i) && s.contains(grams.getLong(i)))
+    }
+  }
+
+  /** `keep_lines(doc_id, lines, ph, keeper)`: the lines a document keeps
+    * under a duplicate-line plan, constants `ph` (sorted distinct line
+    * hashes) and `keeper` (each hash's keeper doc). A line goes when its
+    * hash is planned for another doc; a null line stays.
+    */
+  val KeepLines = new Kernel("keep_lines", Seq(LongType, ArrayType(StringType), Longs, Longs),
+    ArrayType(StringType), constants = 2,
+    bind = c => BoundKeepLines(plan("keep_lines", c(0), c(1))))
+  final case class BoundKeepLines(table: Broadcast[PlanTable]) extends Bound {
+    def keep_lines(docId: Long, lines: ArrayData): ArrayData = {
+      val p = table.value
+      new GenericArrayData(lines.toArray[UTF8String](StringType).filter(l => l == null ||
+        p.getOrElse(textops.PortableHash.hexint60(l.toString), docId) == docId).toArray[Any])
+    }
+  }
+
+  /** `bigram_nll(text, bg_h, bg_c, u_h, u_c, vocab)`: the text's add-one
+    * smoothed bigram NLL under a frozen model, the constants: bigram and
+    * context counts by sorted hash, and the vocabulary size. Words are the
+    * non-empty tokens of a split on " ". Each bigram's term is rounded
+    * HALF_UP to micro-nats, the terms are summed as longs, and the mean is
+    * rounded HALF_UP again: `LmScore.scoreCore`'s two rounding points.
+    * Under two words, the sum and the mean are null.
+    */
+  val BigramNll = new Kernel("bigram_nll", Seq(StringType, Longs, Longs, Longs, Longs, LongType),
+    StructType(Seq(
+      StructField("n_words", LongType, nullable = false),
+      StructField("n_bigrams", LongType, nullable = false),
+      StructField("nll_micro_sum", LongType),
+      StructField("avg_nll_micro", LongType))),
+    constants = 5, bind = c => BoundBigramNll(plan("bigram_nll", c(0), c(1)),
+      plan("bigram_nll", c(2), c(3)), c(4).asInstanceOf[Long]))
+  final case class BoundBigramNll(bigrams: Broadcast[PlanTable], contexts: Broadcast[PlanTable],
+      vocab: Long) extends Bound {
+    private def u6(x: Double): Long =
+      BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    def bigram_nll(text: UTF8String): InternalRow = {
+      val (bg, u, h) = (bigrams.value, contexts.value, textops.PortableHash.hexint60(_: String))
+      val ws = text.toString.split(" ").filter(_.nonEmpty)
+      if (ws.length < 2) return InternalRow(ws.length.toLong, 0L, null, null)
+      val sum = (1 until ws.length).iterator.map { i =>
+        u6(1e6 * math.log((u.getOrElse(h(ws(i - 1)), 0L) + vocab).toDouble /
+          (bg.getOrElse(h(s"${ws(i - 1)} ${ws(i)}"), 0L) + textops.LmScore.Smoothing).toDouble))
+      }.sum
+      InternalRow(ws.length.toLong, ws.length - 1L, sum, u6(sum.toDouble / (ws.length - 1)))
+    }
+  }
+
   /** The L4 JSON cascade; null arguments are passed through, not propagated. */
   val FormatBestEffort = new Kernel("format_best_effort", Seq(StringType, StringType, StringType),
     StringType, propagateNull = false, returnNullable = true)
@@ -256,5 +346,5 @@ object Kernels {
   val all: Seq[Kernel] = Seq(ExtractSpans, SynthSpans, ChunkSpans, HtmlStrip, SpanStats,
     WordStats, WordCount, WordTf, TermCounts, C4Doc, PiiScrub, RepetitionFracs, NfcNormalize,
     Fingerprint60, GramHashes60, SimHash60, Jaccard, DotFold, RhSignatures, IvfAssign,
-    FormatBestEffort)
+    GramMember, KeepLines, BigramNll, FormatBestEffort)
 }

@@ -1,49 +1,35 @@
 package graft.streaming
 
-import graft.textops.{LmScore, PortableHash}
+import graft.Kernels
+import graft.textops.LmScore
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming SCORE tail — the continuous deployment of cross-trained
   * LM scoring ([[graft.textops.LmScore.scoreCross]]): new documents
-  * arrive forever, each scored against the FROZEN reference-slice LM.
-  * This is exactly CCNet's production shape — the model trains offline
-  * on the clean corpus and ships to the workers that score the crawl.
+  * arrive forever, each scored against the FROZEN reference-slice LM —
+  * CCNet's production shape, where the model trains offline on the clean
+  * corpus and ships to the workers that score the crawl.
   *
   * Lambda split (the [[CleanStream]] / [[CurateStream]] contract): the
   * global statistics — bigram counts, context counts, vocabulary size —
-  * are planned OFFLINE by batch ([[LmScore.crossModel]], the same
-  * audited definition the batch query uses) and broadcast as sorted
-  * aligned arrays; scoring is then fully STATELESS, one typed
-  * `mapPartitions` hop with two binary searches per bigram and the SAME
-  * micro-quantized integer arithmetic as the batch plan (HALF_UP at the
-  * same two rounding points), so streamed values equal batch values
-  * bit-for-bit. Memory contract: the arrays are bounded by the
-  * REFERENCE corpus's distinct bigrams — the model artifact (CCNet's
-  * per-language LM is a few GB) — never by the crawl being scored.
-  * Exactly-once is the file-source/sink commit logs alone; a restart
-  * replays nothing and applies the static model unchanged. New
-  * reference data means a new plan cycle — the curate tail's mix-rate
-  * cadence tradeoff.
+  * are planned OFFLINE by batch ([[LmScore.crossModel]], the definition
+  * the batch query uses) as sorted aligned arrays: the constants of the
+  * `bigram_nll` kernel, which holds them in one broadcast per query run.
+  * Scoring is one STATELESS projection over that kernel, with the batch
+  * plan's micro-quantized integer arithmetic (HALF_UP at the same two
+  * rounding points), so streamed values equal batch values bit-for-bit.
+  * The arrays are bounded by the REFERENCE corpus's distinct bigrams (the
+  * model artifact), never by the crawl. Exactly-once is the
+  * file-source/sink commit logs alone; new reference data means a new
+  * plan cycle.
   */
 object ScoreStream {
 
-  /** Input row (executor-local typed stage). */
-  case class TextDoc(doc_id: Long, text: String)
-
-  /** Scored row — the batch score schema minus the training-only lang
-    * column (a stream of new docs carries no trusted lang; the model is
-    * already fixed).
-    */
-  case class Scored(doc_id: Long, n_words: Long, n_bigrams: Long,
-      nll_micro_sum: Option[Long], avg_nll_micro: Option[Long], keep: Boolean)
-
-  /** The frozen model as broadcastable sorted aligned arrays + vocab. */
+  /** The frozen model as sorted aligned arrays + vocab (`bind` checks both). */
   case class Model(bgH: Array[Long], bgC: Array[Long],
-      uH: Array[Long], uC: Array[Long], vocab: Long) {
-    require(bgH.length == bgC.length && uH.length == uC.length,
-      "model arrays must align")
-  }
+      uH: Array[Long], uC: Array[Long], vocab: Long)
 
   /** Collect the planner's count tables into a [[Model]] (offline, once
     * per plan cycle; bounded by the reference corpus — see scaladoc).
@@ -58,49 +44,20 @@ object ScoreStream {
   }
 
   /** Whole transform (testable on streaming or batch relations of text
-    * docs): score each doc under the frozen model. Arithmetic mirrors
-    * [[LmScore.scoreCore]] term-for-term: per-bigram
-    * round6(1e6·ln((c1+V)/(c12+1))) summed as LONGs, then one HALF_UP
-    * average — so parity with the batch query is exact, not approximate.
+    * docs): score each doc under the frozen model with the `bigram_nll`
+    * kernel, whose arithmetic is [[LmScore.scoreCore]]'s term for term —
+    * so parity with the batch query is exact, not approximate. The columns
+    * are the batch score's minus the training-only `lang`. A doc without
+    * text scores nothing and is not emitted.
     */
   def scoredStream(docs: DataFrame, model: Model): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    // null rows are poison pills for the typed encode and score nothing —
-    // drop at the source (the CleanStream rationale)
-    docs.where(docs("doc_id").isNotNull && docs("text").isNotNull)
-      .select(docs("doc_id"), docs("text")).as[TextDoc]
-      .mapPartitions { it =>
-        val m = bc.value
-        def u6(x: Double): Long =
-          BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-        def lookup(hs: Array[Long], cs: Array[Long], h: Long): Long = {
-          val i = java.util.Arrays.binarySearch(hs, h)
-          if (i >= 0) cs(i) else 0L
-        }
-        it.map { d =>
-          val ws = d.text.split(" ").filter(_.nonEmpty)
-          val n = ws.length
-          if (n < 2) Scored(d.doc_id, n.toLong, 0L, None, None, keep = false)
-          else {
-            var sum = 0L
-            var i = 0
-            while (i < n - 1) {
-              val c12 = lookup(m.bgH, m.bgC,
-                PortableHash.hexint60(s"${ws(i)} ${ws(i + 1)}"))
-              val c1 = lookup(m.uH, m.uC, PortableHash.hexint60(ws(i)))
-              sum += u6(1e6 * math.log(
-                (c1 + m.vocab).toDouble / (c12 + LmScore.Smoothing).toDouble))
-              i += 1
-            }
-            val nBg = (n - 1).toLong
-            val avg = u6(sum.toDouble / nBg)
-            Scored(d.doc_id, n.toLong, nBg, Some(sum), Some(avg),
-              keep = avg <= LmScore.LmNllMaxMicro)
-          }
-        }
-      }.toDF()
+    val d = docs.where(docs("text").isNotNull)
+    d.select(d("doc_id"), Kernels.BigramNll(d("text"), Kernels.planArray(model.bgH),
+        Kernels.planArray(model.bgC), Kernels.planArray(model.uH),
+        Kernels.planArray(model.uC), lit(model.vocab)).as("s"))
+      .select(col("doc_id"), col("s.n_words"), col("s.n_bigrams"), col("s.nll_micro_sum"),
+        col("s.avg_nll_micro"),
+        coalesce(col("s.avg_nll_micro") <= LmScore.LmNllMaxMicro, lit(false)).as("keep"))
   }
 
   /** Start the continuous score tail over a growing parquet directory of

@@ -4,12 +4,11 @@ import graft.model.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The ONE definition of the streaming source/sink shape all three
-  * streaming entry points share (ExtractStream, LlmStream,
-  * StreamingDedup): span-doc parquet file source with a bounded
+/** The ONE definition of the streaming source/sink shape every streaming
+  * tail shares: a span-doc or text-doc parquet file source with a bounded
   * per-trigger file count, and an exactly-once parquet sink via the sink
   * commit log. A tuning change (trigger size, sink options) lands here
-  * once instead of drifting across copies.
+  * once instead of drifting across seven tails.
   */
 object StreamIo {
 

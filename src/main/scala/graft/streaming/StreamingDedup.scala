@@ -74,12 +74,14 @@ object StreamingDedup {
     * batch, the least `id`: [[keeperFlags]]). `K` is the id column's
     * type, whose ordering picks the keeper: span docs key on String ids,
     * the curated tail on numeric ids (where string order would pick "10"
-    * over "9" and diverge from the batch keeper).
+    * over "9" and diverge from the batch keeper). Null hashes form one
+    * group, as in the batch window, under the key -1, which no 60-bit hash
+    * takes.
     */
   def firstArrival[K: Ordering](rows: DataFrame, hash: String, id: String): DataFrame = {
     val schema = rows.schema
     val (h, i) = (schema.fieldIndex(hash), schema.fieldIndex(id))
-    rows.groupByKey(_.getLong(h))(Encoders.scalaLong)
+    rows.groupByKey(r => if (r.isNullAt(h)) -1L else r.getLong(h))(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Long, group: Iterator[Row], state: GroupState[Boolean]) =>
           val seenBefore = state.getOption.getOrElse(false)

@@ -85,9 +85,9 @@ object Decontam {
     * [[graft.textops.Corpus.curatePlanRates]]). Bounded by the benchmark
     * suite size, the very bound the batch decontamination's broadcast
     * semi-join already asserts: benchmark suites are thousands of docs →
-    * ~10^6-10^7 distinct gram hashes → megabytes of longs, a broadcast
-    * variable (binary-searched per gram), never a join against the
-    * unbounded stream. One consumer, so no checkpoint: the benchmark
+    * ~10^6-10^7 distinct gram hashes → megabytes of longs, the constant
+    * of the `gram_member` kernel (binary-searched per gram), never a join
+    * against the unbounded stream. One consumer, so no checkpoint: the benchmark
     * filter reaches the scan and the kernel runs on benchmark docs only.
     */
   def benchGramSet(spark: SparkSession, sfDir: String): Array[Long] = {

@@ -356,7 +356,8 @@ object Dedup {
   /** `(ph, keeper_doc)` for paragraphs held by >= 2 docs — the dedup
     * PLAN: [[dedupParaCore]]'s frequency stage, also produced standalone
     * as the offline-planned static input of the streaming clean tail
-    * ([[graft.streaming.CleanStream]]).
+    * ([[graft.streaming.CleanStream]]), whose `keep_lines` kernel applies
+    * it per row.
     */
   private[graft] def dupParaKeepers(paraTable: DataFrame): DataFrame =
     // ">= 2 distinct docs" as min != max (doc ids in a ph group):

@@ -85,8 +85,9 @@ object LmScore {
   /** The LM "model": training-slice bigram counts `bg(bg_h, c12)`,
     * context counts `uc(u_h, c1)`, and the 1-row vocabulary aggregate
     * `v(vv)`. ONE definition feeds [[scoreCore]] (batch, in-plan) and
-    * [[graft.streaming.ScoreStream]]'s offline planner (collected +
-    * broadcast) — the frozen artifact CCNet ships to workers.
+    * [[graft.streaming.ScoreStream]]'s offline planner (collected into the
+    * constants of the `bigram_nll` kernel) — the frozen artifact CCNet
+    * ships to workers.
     */
   private[graft] def trainCounts(spark: SparkSession, sfDir: String,
       g: DataFrame, trainFilter: Option[Column]):
@@ -197,7 +198,8 @@ object LmScore {
   /** Offline planner surface for the streaming score tail: the
     * [[TrainLang]] cross-model (counts + vocab) over a checkpointed gram
     * table (the two count tables are collected by separate jobs) — what
-    * [[graft.streaming.ScoreStream.planModel]] collects.
+    * [[graft.streaming.ScoreStream.planModel]] collects into the sorted
+    * arrays its `bigram_nll` kernel binds.
     */
   def crossModel(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) =
     trainCounts(spark, sfDir, gramTable(spark, sfDir),

@@ -26,11 +26,7 @@ object PortableHash {
   def hexint32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** Keyed hash family member i (independent-ish hashes for MinHash). */
-  def keyed60(i: Int, c: Column): Column =
-    hexint60(concat(lit(s"$i:"), c))
-
-  // --- Scala-side equivalents (for typed/mapPartitions stages) ---
+  // --- Scala-side equivalents (for the native kernels) ---
   // Hot-path form: thread-local digest + byte math. The 60-bit value IS the
   // first 15 hex chars of md5 (drop the low nibble of byte 7), so the
   // fingerprints stay bit-identical with the Column/DuckDB forms while

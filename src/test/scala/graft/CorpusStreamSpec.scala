@@ -56,7 +56,12 @@ class CorpusStreamSpec extends AnyFunSuite with SparkSpec {
     // original, so the original is the keeper in both engines
     val dups = base.where(substring(col("doc_id"), 5, 8).cast("long") < 15)
       .select(concat(col("doc_id"), lit("-dup")).as("doc_id"), col("spans"))
-    base.unionByName(dups).unionByName(edgeDocs()).write.mode("append").parquet(in)
+    // a null-spans doc: a file-source column is nullable, so one can
+    // arrive; its null hash must not kill the stateful dedup
+    val nullSpans = base.limit(1).select(lit("edge-null").as("doc_id"),
+      lit(null).cast(base.schema("spans").dataType).as("spans"))
+    base.unionByName(dups).unionByName(edgeDocs()).unionByName(nullSpans)
+      .write.mode("append").parquet(in)
 
     val q = CorpusStream.start(spark, in, out, ckpt, availableNow = true)
     q.awaitTermination()

@@ -63,6 +63,28 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(r.length === 4) // composed: combining acute folded into the e
   }
 
+  test("plan lookups answer from SQL and refuse an unsorted or misaligned plan") {
+    val a = graft.textops.PortableHash.hexint60("a")
+    val r = spark.sql(
+      "SELECT gram_member(array(5L, 9L), array(1L, 5L)) AS m, " +
+        s"keep_lines(2L, array('a', 'b'), array(${a}L), array(1L)) AS k, " +
+        "bigram_nll('a  b', CAST(array() AS ARRAY<BIGINT>), CAST(array() AS ARRAY<BIGINT>), " +
+        "CAST(array() AS ARRAY<BIGINT>), CAST(array() AS ARRAY<BIGINT>), 4L) AS s").collect()(0)
+    assert(r.getBoolean(0))
+    assert(r.getSeq[String](1) === Seq("b"))
+    // one unseen bigram: ln((0 + 4) / (0 + 1)) in micro-nats
+    val term = math.round(1e6 * math.log(4.0))
+    assert(r.getStruct(2) === org.apache.spark.sql.Row(2L, 1L, term, term))
+    def refused(sql: String, why: String) = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(why)), e)
+    }
+    refused("SELECT gram_member(array(1L), array(5L, 1L))", "sorted")
+    refused("SELECT gram_member(array(1L), array(5L, 5L))", "sorted")
+    refused("SELECT keep_lines(1L, array('a'), array(1L, 2L), array(1L))", "align")
+  }
+
   test("extensions class injects without error") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
   }
@@ -72,7 +94,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.functions.{call_function, lit}
     val entries = Kernels.getClass.getDeclaredFields.toSeq
       .filter(_.getType == classOf[Kernel]).map { f => f.setAccessible(true); f.get(Kernels) }
-    assert(entries.length === 21 && entries.toSet === Kernels.all.toSet)
+    assert(entries.length === 24 && entries.toSet === Kernels.all.toSet)
     assert(Kernels.all.map(_.name).distinct.length === Kernels.all.length)
     for (k <- Kernels.all) {
       def run(a: Seq[org.apache.spark.sql.Column]) = Seq(

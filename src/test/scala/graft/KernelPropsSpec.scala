@@ -1,6 +1,7 @@
 package graft
 
-import graft.textops.{Ivf, Jaccard, SimHash, Similarity, TextAnalysis}
+import graft.textops.{Ivf, Jaccard, LmScore, PortableHash, SimHash, Similarity, TextAnalysis}
+import graft.streaming.ScoreStream
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -11,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ScalaCheck fixed-seed harness as ExtractPropsSpec). These check
   * MATHEMATICAL properties against independent formulations — not the
   * kernel against its own column twin (that parity lives in
-  * PortableHashSpec / SimilaritySpec).
+  * PortableHashSpec / SimilaritySpec). The plan-lookup kernels' receivers
+  * hold their tables in a broadcast, so those properties need a SparkSession.
   */
-class KernelPropsSpec extends AnyFunSuite {
+class KernelPropsSpec extends AnyFunSuite with SparkSpec {
 
   private def cases[A](g: Gen[A], n: Int = 300)(check: A => Unit): Unit =
     (0 until n).foreach { i =>
@@ -143,6 +145,76 @@ class KernelPropsSpec extends AnyFunSuite {
       assert(grams.length === math.max(1, s.split(" ", -1).length - 4))
       assert(TextAnalysis.fingerprintScala(t) === TextAnalysis.gramHashesScala(t).min)
       assert(TextAnalysis.gramHashesScala(t).length === math.max(1, t.split(" ", -1).length - 4))
+    }
+  }
+
+  /** Sorted distinct keys drawn from a small range, so lookups hit and miss. */
+  private val keys: Gen[Array[Long]] = Gen.listOf(Gen.choose(0L, 60L)).map(_.distinct.sorted.toArray)
+
+  private def plan(keys: Array[Long], values: Array[Long]) =
+    spark.sparkContext.broadcast(new Kernels.PlanTable(keys, values))
+
+  test("gram_member is Set.contains over the plan's keys; a null gram is no member") {
+    val grams = Gen.listOf(Gen.frequency(9 -> Gen.choose(-5L, 65L).map(x => x: Any),
+      1 -> Gen.const(null)))
+    cases(Gen.zip(keys, grams)) { case (set, gs) =>
+      val kernel = Kernels.BoundGramMember(plan(set, set))
+      val expect = gs.exists(g => g != null && set.toSet.contains(g.asInstanceOf[Long]))
+      assert(kernel.gram_member(new GenericArrayData(gs.toArray[Any])) === expect)
+    }
+  }
+
+  test("keep_lines is the reference filter over random plans") {
+    val pool = Seq("a b c", "the footer", "", " ", "café ñandú", "x", "menu home about")
+    val lines = Gen.listOf(Gen.frequency(9 -> Gen.oneOf(pool), 1 -> Gen.const(null: String)))
+    // a plan over a subset of the pool's hashes (empty and all-planned
+    // included), keepers among docs 1..3; the doc is often the keeper
+    val planned = Gen.oneOf(Gen.const(Seq.empty[String]), Gen.const(pool),
+      Gen.someOf(pool).map(_.toSeq))
+    val gen = for {
+      ls <- lines; ps <- planned
+      keepers <- Gen.listOfN(ps.length, Gen.choose(1L, 3L)); doc <- Gen.choose(1L, 3L)
+    } yield (ls, ps.zip(keepers).map { case (l, k) => PortableHash.hexint60(l) -> k }.sorted, doc)
+    cases(gen) { case (ls, table, doc) =>
+      val kernel = Kernels.BoundKeepLines(plan(table.map(_._1).toArray, table.map(_._2).toArray))
+      val keeper = table.toMap
+      val expect = ls.filter(l => l == null || keeper.get(PortableHash.hexint60(l)).forall(_ == doc))
+      val got = kernel.keep_lines(doc,
+        new GenericArrayData(ls.map(l => if (l == null) null else UTF8String.fromString(l)).toArray[Any]))
+      assert(got.toArray[UTF8String](org.apache.spark.sql.types.StringType)
+        .map(u => if (u == null) null else u.toString).toSeq === expect)
+    }
+  }
+
+  test("bigram_nll equals LmScore.scoreCross rows bit for bit") {
+    val spark2 = spark
+    import spark2.implicits._
+    // whitespace-only, one-word and non-ASCII texts; the model trains on
+    // the "en" half only, so "pt" docs and random-letter words score
+    // bigrams it never saw
+    val word = Gen.oneOf("the", "a", "of", "cat", "café", "ñandú", "über", "日本", "x", "y")
+    val text = Gen.oneOf(Gen.listOf(word).map(_.mkString(" ")),
+      Gen.listOf(word).map(_.mkString("   ")), Gen.oneOf("", " ", "   ", "solo", "\t"),
+      Gen.listOfN(3, Gen.alphaStr.map(_.take(6))).map(_.mkString(" ")))
+    val docs = (0 until 300).map { i =>
+      val t = text.pureApply(Gen.Parameters.default.withSize(1 + i % 40), Seed(i.toLong))
+      (i.toLong, if (i % 2 == 0) "en" else "pt", t)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-nll").toString
+    docs.toDF("doc_id", "lang", "text").write.parquet(s"$dir/documents.parquet")
+    val (bg, uc, v) = LmScore.crossModel(spark, dir)
+    val m = ScoreStream.planModel(bg, uc, v)
+    val kernel = Kernels.BoundBigramNll(plan(m.bgH, m.bgC), plan(m.uH, m.uC), m.vocab)
+    def opt(r: org.apache.spark.sql.Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val batch = LmScore.scoreCross(spark, dir).collect().map(r => r.getLong(0) ->
+      (r.getAs[Number]("n_words").longValue, r.getAs[Long]("n_bigrams"), opt(r, 4), opt(r, 5))).toMap
+    assert(batch.size === docs.size)
+    assert(batch.values.exists(_._3.isEmpty) && batch.values.exists(_._2 > 0))
+    docs.foreach { case (id, _, t) =>
+      val r = kernel.bigram_nll(UTF8String.fromString(t))
+      val got = (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)), if (r.isNullAt(3)) None else Some(r.getLong(3)))
+      assert(got === batch(id), s"doc $id: '$t'")
     }
   }
 }

@@ -191,6 +191,36 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("streaming clean, curate and score tails are one projection over their kernels") {
+    import graft.streaming.{CleanStream, CurateStream, ScoreStream}
+    import graft.textops.{Decontam, LmScore, TextAnalysis}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val spark2 = spark
+    import spark2.implicits._
+    val docs = TextAnalysis.loadDocs(spark, sf).select("doc_id", "source", "text")
+    val (ph, keeper) = CleanStream.planArrays(TextAnalysis.cleanPlanDupLines(spark, sf))
+    val (bg, uc, v) = LmScore.crossModel(spark, sf)
+    val curate = CurateStream.curatedStream(docs, Decontam.benchGramSet(spark, sf),
+      Seq(("src0", 1000L)).toDF("source", "rate_permille"))
+    for ((df, kernel) <- Seq(
+        CleanStream.cleanedStream(docs, ph, keeper) -> "keep_lines",
+        curate -> "gram_member",
+        ScoreStream.scoredStream(docs, ScoreStream.planModel(bg, uc, v)) -> "bigram_nll")) {
+      val opt = df.queryExecution.optimizedPlan
+      assert(count(opt.toString, s"graft.Kernels.$kernel(") === 1, s"\n$opt")
+      assert(opt.collect { case p: MapPartitions => p; case p: DeserializeToObject => p }.isEmpty,
+        s"\n$opt")
+      // the one object hop left is firstArrival's state operator (curate)
+      opt.foreach {
+        case p: SerializeFromObject =>
+          assert(p.child.isInstanceOf[FlatMapGroupsWithState], s"\n$opt")
+        case _ =>
+      }
+    }
+    // the exchange below firstArrival carries neither text nor gram arrays
+    assertNoTextInShuffles(curate, Set("text", "grams"))
+  }
+
   test("sharded packing exchanges on shard, never SinglePartition") {
     import org.apache.spark.sql.functions.col
     val df = graft.textops.Corpus.packSequencesBy(

@@ -71,7 +71,11 @@ class StreamingDedupSpec extends AnyFunSuite with SparkSpec {
     val root = tmp()
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val (base, dups) = corpus()
-    val all = base.unionByName(dups)
+    // a null-spans doc has a null content hash; the batch window groups
+    // null hashes together, and the stream must not die on one
+    val nullSpans = base.limit(1).select(lit("doc-null-spans").as("doc_id"),
+      lit(null).cast(base.schema("spans").dataType).as("spans"))
+    val all = base.unionByName(dups).unionByName(nullSpans)
     all.write.mode("append").parquet(in)
     val q = StreamingDedup.start(spark, in, out, ckpt, availableNow = true)
     q.awaitTermination()

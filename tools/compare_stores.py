@@ -8,10 +8,14 @@ Runs EXCEPT ALL both ways on each table of the stores A and B:
   _checkpoints    without started_ts / finished_ts
   _lineage        without run_ts (and input_path, with --drop-input-path)
 A table missing from both stores is skipped; one missing from one store is
-a difference. Then prints the physical parquet type of every timestamp
+a difference. A table whose compared columns differ in name or type between
+the stores is a difference too: each differing column is printed with both
+types, and its rows are not compared (DuckDB would cast every row to a
+common type first, which on a string against a bigint `doc_id` takes
+minutes). Then prints the physical parquet type of every timestamp
 column of every bookkeeping file, and the DuckDB types those files read as.
 Files whose names start with `_` or `.` are skipped, as Spark skips them.
-Exits 1 on any differing row, 0 otherwise.
+Exits 1 on any difference, 0 otherwise.
 """
 import os
 import sys
@@ -37,11 +41,15 @@ def visible_files(table_dir):
     return out
 
 
-def relation(con, files, excluded):
-    cols = [r[0] for r in con.execute(
+def column_types(con, files, excluded):
+    """The compared columns of a table's files: name -> DuckDB type, in file order."""
+    return {r[0]: r[1] for r in con.execute(
         "DESCRIBE SELECT * FROM read_parquet(?, hive_partitioning = true, union_by_name = true)",
-        [files]).fetchall()]
-    kept = ", ".join(f'"{c}"' for c in cols if c not in excluded)
+        [files]).fetchall() if r[0] not in excluded}
+
+
+def relation(files, cols):
+    kept = ", ".join(f'"{c}"' for c in cols)
     return (f"SELECT {kept} FROM "
             f"read_parquet({files!r}, hive_partitioning = true, union_by_name = true)")
 
@@ -55,6 +63,7 @@ def main(argv):
         TABLES["_lineage"] = TABLES["_lineage"] + ["input_path"]
     con = duckdb.connect()
     differing = 0
+    mismatched = 0
     for table, excluded in TABLES.items():
         files = [visible_files(os.path.join(s, table)) for s in stores]
         if not any(files):
@@ -64,7 +73,16 @@ def main(argv):
             print(f"{table}: DIFFERENT, present in one store only")
             differing += 1
             continue
-        a, b = (relation(con, f, excluded) for f in files)
+        cols = [column_types(con, f, excluded) for f in files]
+        if cols[0] != cols[1]:
+            for c in list(cols[0]) + [c for c in cols[1] if c not in cols[0]]:
+                ta, tb = (cs.get(c, "absent") for cs in cols)
+                if ta != tb:
+                    print(f"{table}: column {c}: A {ta}, B {tb}")
+            print(f"{table}: DIFFERENT, column names or types differ; rows not compared")
+            mismatched += 1
+            continue
+        a, b = (relation(f, cols[0]) for f in files)
         only_a = con.execute(f"SELECT count(*) FROM ({a} EXCEPT ALL {b})").fetchone()[0]
         only_b = con.execute(f"SELECT count(*) FROM ({b} EXCEPT ALL {a})").fetchone()[0]
         rows = [con.execute(f"SELECT count(*) FROM ({r})").fetchone()[0] for r in (a, b)]
@@ -90,8 +108,8 @@ def main(argv):
             for c, types in duck_types.items():
                 print(f"{label} {table}.{c}: DuckDB types {sorted(types)}")
 
-    print(f"{differing} differing rows")
-    return 1 if differing else 0
+    print(f"{differing} differing rows, {mismatched} tables with differing columns")
+    return 1 if differing or mismatched else 0
 
 
 if __name__ == "__main__":
